@@ -111,7 +111,7 @@ case class BloomAgg(
   * pre-computed by the caller the way [[BloomAgg]] takes positions,
   * so a SQL oracle can replay every counter — bucket collisions
   * included). Emitted as an 8·nCounters-byte BINARY (little-endian
-  * longs), probed with [[CmsEstimateExpr]] (min over the probe's own
+  * longs), probed with [[Kernels.cmsEstimate]] (min over the probe's own
   * seed counters — the classic CM upper bound, never an
   * underestimate).
   *

@@ -311,6 +311,64 @@ class NativeExprSpec extends SparkSpec {
     val ok = spark.sql("SELECT graft_lsh_sign(array(1.0f, -2.0f), CAST(8 AS BIGINT)) AS s")
       .head.getLong(0)
     assert(ok >= 0)
+    // a wrong argument count or type fails analysis, naming the function,
+    // instead of an index or cast error at execution (or an ignored arg)
+    for ((q, fn) <- Seq(
+        "SELECT graft_cosine(array(1.0d, 2.0d))" -> "graft_cosine",
+        "SELECT graft_simhash64('hello world', 'x')" -> "graft_simhash64",
+        "SELECT graft_cosine(array(1.0d, 2.0d), array(1.0d, 2.0d))" -> "graft_cosine",
+        "SELECT graft_simhash64(42)" -> "graft_simhash64")) {
+      val err = intercept[org.apache.spark.sql.AnalysisException](spark.sql(q).collect())
+      assert(err.getMessage.contains(fn), q)
+    }
+  }
+
+  test("every kernel: whole-stage codegen'd, interpreted == codegen, null in -> null out") {
+    import org.apache.spark.sql.GraftColumnBridge
+    import org.apache.spark.sql.types._
+    import graft.expressions.Kernel
+    // a non-constant value of type t from the row id; `i` varies it
+    // between arguments and elements. Every vector has 4 elements, so
+    // embeddings and centroids line up.
+    def sample(t: DataType, i: Int): String = t match {
+      case StringType => s"concat('Doc ', id % ${i + 2}, ' the quick brown fox jumps ', id)"
+      case BinaryType => "cast(repeat(concat('sketch', id), 4) AS BINARY)"
+      case LongType => s"(id * ${i + 3})"
+      case FloatType => s"cast(sin(id + $i) AS FLOAT)"
+      case DoubleType => s"cos(id * ${i + 1})"
+      case ArrayType(e, _) => (0 until 4).map(j => sample(e, i + j)).mkString("array(", ", ", ")")
+      case StructType(fs) => fs.zipWithIndex
+        .map { case (f, j) => s"'${f.name}', ${sample(f.dataType, i + j)}" }
+        .mkString("named_struct(", ", ", ")")
+      case other => fail(s"no sample value for $other")
+    }
+    // argument j is NULL on row j
+    def run(k: Kernel): org.apache.spark.sql.DataFrame = {
+      val args = k.argTypes.zipWithIndex.map { case (t, j) =>
+        GraftColumnBridge.expression(expr(s"CASE WHEN id = $j THEN NULL ELSE ${sample(t, j)} END"))
+      }
+      spark.range(0, 8, 1, 2).select($"id",
+        GraftColumnBridge.column(k.call(args, Seq.fill(k.consts)(3))).as("r"))
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+      df.collect().toSeq.map(r => (r.getLong(0), String.valueOf(r.get(1)))).sortBy(_._1)
+    for (k <- Kernel.all) {
+      val df = run(k)
+      val code = org.apache.spark.sql.execution.debug.codegenString(df.queryExecution.executedPlan)
+      assert(code.contains(s"graft.expressions.Kernels.${k.method}("), s"${k.name} left codegen")
+      val compiled = rows(df)
+      val keys = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+      val interpreted =
+        try {
+          spark.conf.set(keys(0), "false")
+          spark.conf.set(keys(1), "NO_CODEGEN")
+          rows(run(k))
+        } finally keys.foreach(spark.conf.unset)
+      assert(interpreted == compiled, s"${k.name}: interpreted != codegen")
+      compiled.foreach { case (id, r) =>
+        assert((r == "null") == (id < k.argTypes.length), s"${k.name} row $id: $r")
+      }
+    }
   }
 
   test("SQL registration via SparkSessionExtensions") {

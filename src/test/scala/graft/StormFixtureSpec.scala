@@ -5,21 +5,21 @@ import org.apache.spark.sql.functions._
 import graft.sources.StormSources
 import graft.storm.StormPipeline
 
-/** End-to-end enrichment over the reference's REAL mock fixture
-  * (/root/reference/data/mock/storm_reports_240426_combined.json — the
-  * NOAA-shaped records its genmock/validate tooling is built on,
-  * cmd/genmock/main.go:43-102). This closes the loop between
-  * "oracle-consistent" (builder-authored SQL) and "reference-faithful":
-  * every expected number below is derived from the reference's own
-  * transform semantics applied to its own fixture.
+/** End-to-end enrichment over an in-repo fixture in the NOAA storm
+  * report wire shape (src/test/resources/storm_reports_240426.json):
+  * hail, tornado and wind records with legacy hundredths hail sizes,
+  * `UNK` magnitudes, HHMM times, dist/dir and bare-name locations and
+  * trailing NWS office codes. Every expected number below comes from
+  * DuckDB SQL over the same file that applies the reference transform
+  * rules (tools/storm_fixture_counts.py), not from graft's output.
   *
-  * genmock ingests with a fixed base date of 2024-04-26T00:00:00Z
-  * (cmd/genmock/main.go:29) — mirrored here as the wire `ts`.
+  * The reference's mock generator ingests with a fixed base date of
+  * 2024-04-26T00:00:00Z — mirrored here as the wire `ts`.
   */
 class StormFixtureSpec extends SparkSpec {
   import spark.implicits._
 
-  private val fixture = "/root/reference/data/mock/storm_reports_240426_combined.json"
+  private val fixture = getClass.getResource("/storm_reports_240426.json").getPath
 
   /** Fixture rows adapted to the wire-feed column contract. */
   private def feed: DataFrame =
@@ -36,15 +36,15 @@ class StormFixtureSpec extends SparkSpec {
 
   private lazy val enriched = StormPipeline.enrich(feed).cache()
 
-  test("fixture: 271 records, counts per type match the reference CSVs") {
+  test("fixture: 60 records, counts per type") {
     val counts = enriched.groupBy("event_type").count()
       .as[(String, Long)].collect().toMap
-    assert(counts == Map("hail" -> 79L, "tornado" -> 149L, "wind" -> 43L))
+    assert(counts == Map("hail" -> 20L, "tornado" -> 25L, "wind" -> 15L))
   }
 
   test("fixture: magnitude-column shape per type (validate phase-2 rule)") {
     // hail reports all carry legacy hundredths sizes (>=10 raw -> /100);
-    // tornado F_Scale is all UNK on this date -> magnitude 0;
+    // tornado F_Scale is all UNK -> magnitude 0;
     // wind speeds are numeric mph or UNK
     val hail = enriched.where($"event_type" === "hail")
     assert(hail.where($"magnitude" <= 0 || $"magnitude" >= 10).count() == 0)
@@ -61,10 +61,11 @@ class StormFixtureSpec extends SparkSpec {
   test("fixture: severity distribution matches reference transform semantics") {
     val sev = enriched.groupBy(coalesce($"severity", lit("none")).as("s")).count()
       .as[(String, Long)].collect().toMap
-    assert(sev == Map("moderate" -> 55L, "severe" -> 26L, "extreme" -> 5L, "none" -> 185L))
-    // genmock printStats cross-checks: 86 with severity, 29 with mag >= 1.75
-    assert(enriched.where($"severity".isNotNull).count() == 86)
-    assert(enriched.where($"magnitude" >= 1.75).count() == 29)
+    assert(sev == Map("minor" -> 1L, "moderate" -> 16L, "severe" -> 10L, "extreme" -> 5L,
+      "none" -> 28L))
+    // cross-checks: 32 with severity, 20 with mag >= 1.75
+    assert(enriched.where($"severity".isNotNull).count() == 32)
+    assert(enriched.where($"magnitude" >= 1.75).count() == 20)
   }
 
   test("fixture: every comment carries a trailing NWS office code") {
@@ -72,9 +73,9 @@ class StormFixtureSpec extends SparkSpec {
     assert(enriched.where(length($"source_office") < 3 || length($"source_office") > 5).count() == 0)
   }
 
-  test("fixture: location parsing (227 dist/dir forms, 44 bare names)") {
-    assert(enriched.where($"location_distance".isNotNull).count() == 227)
-    assert(enriched.where($"location_distance".isNull && $"location_name" =!= "").count() == 44)
+  test("fixture: location parsing (39 dist/dir forms, 21 bare names)") {
+    assert(enriched.where($"location_distance".isNotNull).count() == 39)
+    assert(enriched.where($"location_distance".isNull && $"location_name" =!= "").count() == 21)
     // spot value from the first fixture row: "8 ESE Chappel"
     val r = enriched.where($"location_raw" === "8 ESE Chappel")
       .select("location_name", "location_distance", "location_direction").head()
@@ -89,9 +90,9 @@ class StormFixtureSpec extends SparkSpec {
     assert(first.getAs[String]("time_bucket_str") == "2024-04-26T15:00:00Z")
   }
 
-  test("fixture: IDs deterministic, type-prefixed, all 271 distinct; replay idempotent") {
+  test("fixture: IDs deterministic, type-prefixed, all 60 distinct; replay idempotent") {
     val ids = enriched.select("id", "event_type").as[(String, String)].collect()
-    assert(ids.length == 271 && ids.map(_._1).distinct.length == 271)
+    assert(ids.length == 60 && ids.map(_._1).distinct.length == 60)
     ids.foreach { case (id, t) => assert(id.startsWith(s"$t-"), s"$id missing $t- prefix") }
     // determinism: an independent second run produces identical IDs
     val again = StormPipeline.enrich(feed).select("id").as[String].collect().toSet
@@ -99,6 +100,6 @@ class StormFixtureSpec extends SparkSpec {
     // idempotency: at-least-once redelivery collapses on the ID
     val replayed = StormPipeline.enrich(feed.unionAll(feed))
       .select("id").distinct().count()
-    assert(replayed == 271)
+    assert(replayed == 60)
   }
 }

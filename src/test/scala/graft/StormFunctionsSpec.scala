@@ -5,7 +5,7 @@ import org.apache.spark.sql.Row
 import graft.storm.StormFunctions._
 
 /** Pins the enrichment semantics to the reference's documented behavior
-  * (/root/reference/internal/domain/transform.go, docs/Enrichment.md).
+  * (the reference's internal/domain/transform.go, docs/Enrichment.md).
   */
 class StormFunctionsSpec extends SparkSpec {
   import spark.implicits._
