@@ -380,10 +380,16 @@ object StormSinks {
     if (segs.isEmpty)
       throw new java.io.FileNotFoundException(
         s"group table '$name' not present in $dir/$verName")
-    // allowMissingColumns: segments written before a schema evolution
-    // surface the new column as null, the same contract the 16e
-    // mergeSchema lake read gives old file generations
-    segs.map(spark.read.parquet(_))
+    // one scan over all segment paths: per-segment reads each pay a
+    // listing, a schema-inference job and a scan, so a stream's state
+    // read grew with its uncompacted segment count. mergeSchema keeps
+    // the missing-column contract (old segments read a new column as
+    // null). Spark's partition discovery admits one base path, so a
+    // partitioned table keeps the per-segment union.
+    if (segs.size == 1) spark.read.parquet(segs.head)
+    else if (partitionLayoutOf(fsFor(spark, dir), new org.apache.hadoop.fs.Path(segs.head)).isEmpty)
+      spark.read.option("mergeSchema", "true").parquet(segs: _*)
+    else segs.map(spark.read.parquet(_))
       .reduce(_.unionByName(_, allowMissingColumns = true))
   }
 

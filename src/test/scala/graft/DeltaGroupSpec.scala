@@ -161,6 +161,20 @@ class DeltaGroupSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("a many-segment table reads as ONE scan, not a union of per-segment scans") {
+    val dir = Files.createTempDirectory("graft-delta-onescan").toString
+    StormSinks.writeVersionedGroup(spark, dir, Seq("fps" -> Seq("fp0").toDF("fp")))
+    (1 to 5).foreach(i =>
+      StormSinks.appendDeltaGroup(spark, dir, appends = Seq("fps" -> Seq(s"fp$i").toDF("fp"))))
+    val fps = StormSinks.readVersionedGroupTable(spark, dir, "fps")
+    val plan = fps.queryExecution.optimizedPlan
+    // per-segment reads would plan 6 relations under a Union: batch
+    // cost would grow with the stream's segment count
+    assert(plan.collect { case r: org.apache.spark.sql.execution.datasources.LogicalRelation => r }
+      .size == 1, plan.treeString)
+    assert(fps.as[String].collect().toSet == (0 to 5).map(i => s"fp$i").toSet)
+  }
+
   test("schema evolution: a delta with a NEW column reads old segments as null") {
     val dir = Files.createTempDirectory("graft-delta-evolve").toString
     StormSinks.writeVersionedGroup(spark, dir, Seq(
