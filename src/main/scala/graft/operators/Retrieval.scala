@@ -119,27 +119,10 @@ object Retrieval {
     import graft.sources.StormSinks
     val committed = StormSinks.readGroupTableAt(spark, dir,
       StormSinks.currentVersionName(spark, dir), "meta").head().getLong(0)
-    val ckptOffsets = new org.apache.hadoop.fs.Path(
-      s"$checkpointDir/bm25/offsets")
-    val ckptFs = ckptOffsets.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ckptFresh = !ckptFs.exists(ckptOffsets) ||
-      !ckptFs.listStatus(ckptOffsets).exists(st => !st.getPath.getName.startsWith("."))
-    if (committed >= 0 && ckptFresh)
-      throw new IllegalStateException(
-        s"graft.Retrieval.startBm25Ingest: the index at $dir has committed " +
-          s"batches up to $committed but the checkpoint at $checkpointDir/bm25 " +
-          "has no committed offsets: batch ids would restart at 0 and the " +
-          "replay gate would silently skip every replayed batch. Restore " +
-          "the original checkpoint, or republish the index to start over.")
-    if (committed < 0 && !ckptFresh)
-      throw new IllegalStateException(
-        s"graft.Retrieval.startBm25Ingest: the checkpoint at " +
-          s"$checkpointDir/bm25 has committed offsets but the index at $dir " +
-          "has no committed batches: the index dir was lost or republished " +
-          "underneath a live checkpoint — already-processed documents would " +
-          "never be replayed and the index would permanently under-serve. " +
-          "Restore the index dir, or start over with a fresh checkpoint.")
-    spark.readStream
+    graft.streaming.StreamOps.requireCheckpointMatchesState(spark, checkpointDir,
+      "bm25", "graft.Retrieval.startBm25Ingest", dir, committed >= 0,
+      "republish the index to start over", lostAs = Some("republished"))
+    val source = spark.readStream
       .schema(org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("doc_id",
           org.apache.spark.sql.types.LongType),
@@ -147,11 +130,10 @@ object Retrieval {
           org.apache.spark.sql.types.StringType))))
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(inDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+    graft.streaming.StreamOps.startForeachBatch(source, checkpointDir, "bm25") {
+      (batch, batchId) =>
         val s2 = batch.sparkSession
         import s2.implicits._
-        import graft.sources.StormSinks
         val lastBatch = StormSinks.readGroupTableAt(s2, dir,
           StormSinks.currentVersionName(s2, dir), "meta").head().getLong(0)
         if (batchId > lastBatch) {
@@ -160,11 +142,7 @@ object Retrieval {
             maxSegments = autoCompactSegments)
           ()
         }
-        ()
-      }
-      .option("checkpointLocation", s"$checkpointDir/bm25")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
+    }
   }
 
   /** The serving table at the current version (all segments, one

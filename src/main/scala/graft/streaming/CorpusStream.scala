@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 import graft.functions.Text
 import graft.operators.Sampling
@@ -25,6 +25,14 @@ import graft.operators.Sampling
   * compaction over the chunk lake (Dedup.clusters), not in-stream.
   * In-stream exact dedup on the content fingerprint is the streaming
   * analogue (see StormStream.startDedupedEnrichment for the pattern).
+  *
+  * A new face is one per-batch body plus one skeleton call:
+  * [[StreamOps.startForeachBatch]] with the face's checkpoint
+  * subdirectory name (a body the composed [[startCorpusIngest]] also
+  * runs is a named private `*BatchBody`), or [[StreamOps
+  * .startParquetSink]] for a stream-native transform. A face whose
+  * state or output is keyed to batch ids first passes
+  * [[StreamOps.requireCheckpointMatchesState]].
   */
 object CorpusStream {
 
@@ -82,16 +90,12 @@ object CorpusStream {
       (n + rowsPerFile - 1) / rowsPerFile)).toInt)
   }
 
-  /** Start the chunk sink (parquet, checkpointed, AvailableNow). */
+  /** Start the chunk sink: [[prepare]] is a narrow map, so it runs as a
+    * plain parquet file sink. */
   def start(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String): StreamingQuery =
-    prepare(readDocuments(spark, inDir))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", s"$checkpointDir/chunks")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamOps.startParquetSink(prepare(readDocuments(spark, inDir)), outDir,
+      checkpointDir, "chunks")
 
   /** [[start]]'s transform as a foreachBatch body for the composed
     * [[startCorpusIngest]] face (same `prepare`, same append-parquet
@@ -116,17 +120,9 @@ object CorpusStream {
   def startClean(spark: SparkSession, inDir: String,
       benchmark: org.apache.spark.sql.DataFrame, outDir: String,
       checkpointDir: String): StreamingQuery =
-    readDocuments(spark, inDir)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.Materialize.scoped {
-          cleanBatchBody(batch.toDF(), benchmark, outDir)
-          ()
-        }
-      }
-      .option("checkpointLocation", s"$checkpointDir/clean")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamOps.startForeachBatch(readDocuments(spark, inDir), checkpointDir, "clean") {
+      (batch, _) => cleanBatchBody(batch, benchmark, outDir)
+    }
 
   /** [[startClean]]'s per-batch body — ONE definition shared with the
     * composed [[startCorpusIngest]] face, so composition is
@@ -157,17 +153,10 @@ object CorpusStream {
   def startWatermarkGate(spark: SparkSession, inDir: String,
       outDir: String, checkpointDir: String,
       maxFilesPerTrigger: Int = 16): StreamingQuery =
-    readDocuments(spark, inDir, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.Materialize.scoped {
-          wmBatchBody(batch.toDF(), batchId, outDir)
-          ()
-        }
-      }
-      .option("checkpointLocation", s"$checkpointDir/watermark")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
+      checkpointDir, "watermark") {
+      (batch, batchId) => wmBatchBody(batch, batchId, outDir)
+    }
 
   /** [[startWatermarkGate]]'s per-batch body — ONE definition shared
     * with the composed [[startCorpusIngest]] face. Returns the
@@ -185,25 +174,36 @@ object CorpusStream {
     * sink: replay duplicates and re-crawled docs collapse to the
     * NEWEST row per doc_id (max batch_seq — the latestCleanLines
     * discipline). Empty on cold start. */
-  def latestWatermark(spark: SparkSession, outDir: String): DataFrame = {
-    val t = try spark.read.parquet(outDir) catch {
+  def latestWatermark(spark: SparkSession, outDir: String): DataFrame =
+    newestPerDoc(spark, outDir, Seq("batch_seq"), StructType(Seq(
+      StructField("doc_id", LongType), StructField("n_scored", LongType),
+      StructField("n_green", LongType), StructField("green_ratio", DoubleType),
+      StructField("z", DoubleType), StructField("watermarked", BooleanType))))
+
+  /** The newest row per doc_id of an append sink: replay duplicates and
+    * re-emitted docs collapse to the row with the greatest `order` key
+    * (a bare dropDuplicates would keep an arbitrary one). `schema`
+    * lists doc_id then the value columns; a cold start (nothing
+    * written yet) returns it empty. Order keys missing from older
+    * files read as 0. */
+  private def newestPerDoc(spark: SparkSession, outDir: String,
+      order: Seq[String], schema: StructType): DataFrame = {
+    // mergeSchema: a plain read takes the schema of an arbitrary first
+    // file, so one legacy file lacking an order key would hide that
+    // key for every row
+    val t = try spark.read.option("mergeSchema", "true").parquet(outDir) catch {
       case _: org.apache.spark.sql.AnalysisException =>
         return spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("doc_id", LongType),
-            StructField("n_scored", LongType),
-            StructField("n_green", LongType),
-            StructField("green_ratio", DoubleType),
-            StructField("z", DoubleType),
-            StructField("watermarked", BooleanType))))
+          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
-    t.groupBy(col("doc_id"))
-      .agg(max(struct(col("batch_seq"), col("n_scored"), col("n_green"),
-        col("green_ratio"), col("z"), col("watermarked"))).as("m"))
-      .select(col("doc_id"), col("m.n_scored").as("n_scored"),
-        col("m.n_green").as("n_green"),
-        col("m.green_ratio").as("green_ratio"), col("m.z").as("z"),
-        col("m.watermarked").as("watermarked"))
+    val keyed = order.foldLeft(t) { (d, k) =>
+      d.withColumn(k,
+        if (d.columns.contains(k)) coalesce(col(k), lit(0L)) else lit(0L))
+    }
+    val vals = schema.fieldNames.toSeq.tail
+    keyed.groupBy(col("doc_id"))
+      .agg(max(struct((order ++ vals).map(col): _*)).as("m"))
+      .select(col("doc_id") +: vals.map(v => col(s"m.$v").as(v)): _*)
   }
 
   /** Incremental-ingest dedup variant: drop documents that exactly or
@@ -225,32 +225,21 @@ object CorpusStream {
     val index = Dedup.minhashIndex(corpus.select(col("doc_id"), col("text")))
     val fps = graft.Materialize.once(
       corpus.select(Text.fingerprint(col("text")).as("fp")).distinct())
-    readDocuments(spark, inDir, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // the scope frees every frame the batch materializes (the
-        // batch-side signature index minhashIndex builds) once the
-        // sink write lands; otherwise every micro-batch leaks one
-        // materialized frame for the stream's lifetime (the
-        // block-residue melt class from HEAPCHECK). The session-
-        // lifetime corpus index + fps were built OUTSIDE the scope.
-        graft.Materialize.scoped {
-          val batchIdx = Dedup.minhashIndex(batch.select(col("doc_id"), col("text")))
-          val near = Dedup
-            .minhashPairsBetweenIndexes(index, batchIdx, threshold = 0.2)
-            .select(col("doc_new").as("doc_id")).distinct()
-          val kept = batch
-            .withColumn("fp", Text.fingerprint(col("text")))
-            .join(fps, Seq("fp"), "left_anti")
-            .join(near, Seq("doc_id"), "left_anti")
-            .drop("fp")
-          prepare(kept).write.mode("append").parquet(outDir)
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$checkpointDir/incdedup")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    // the session-lifetime corpus index + fps are built OUTSIDE the
+    // batch scope; the batch-side signature index is freed per batch
+    StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
+      checkpointDir, "incdedup") { (batch, _) =>
+      val batchIdx = Dedup.minhashIndex(batch.select(col("doc_id"), col("text")))
+      val near = Dedup
+        .minhashPairsBetweenIndexes(index, batchIdx, threshold = 0.2)
+        .select(col("doc_new").as("doc_id")).distinct()
+      val kept = batch
+        .withColumn("fp", Text.fingerprint(col("text")))
+        .join(fps, Seq("fp"), "left_anti")
+        .join(near, Seq("doc_id"), "left_anti")
+        .drop("fp")
+      prepare(kept).write.mode("append").parquet(outDir)
+    }
   }
 
   /** Publish everything [[startIncrementalDedupFromLake]] probes: the
@@ -289,21 +278,11 @@ object CorpusStream {
     * lands (no state grows with the stream). */
   def startIncrementalDedupFromLake(spark: SparkSession, inDir: String,
       lakeDir: String, outDir: String, checkpointDir: String,
-      maxFilesPerTrigger: Int = 16): StreamingQuery = {
-    import graft.operators.Dedup
-    readDocuments(spark, inDir, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.Materialize.scoped {
-          dedupLakeBatchBody(batch.toDF(), lakeDir, outDir)
-          ()
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$checkpointDir/incdedup-lake")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+      maxFilesPerTrigger: Int = 16): StreamingQuery =
+    StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
+      checkpointDir, "incdedup-lake") {
+      (batch, _) => dedupLakeBatchBody(batch, lakeDir, outDir)
+    }
 
   /** [[startIncrementalDedupFromLake]]'s per-batch body — shared with
     * [[startCorpusIngest]] (parity-by-construction). The `_current`
@@ -489,66 +468,59 @@ object CorpusStream {
       k: Int = 3, threshold: Double = 0.5,
       maxFilesPerTrigger: Int = 16,
       autoCompactSegments: Int = 64): StreamingQuery =
-    readDocuments(spark, inDir, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // the scope frees EVERY frame this batch materializes — not
-        // just `updated` but the ones incrementalClusters /
-        // jaccardPairsTouching build internally (batch, sets, the
-        // quotient CC's labels) — once the group commit lands; without
-        // it each micro-batch stranded those in the block manager for
-        // the stream's lifetime (CorpusStreamSpec pins zero growth).
-        graft.Materialize.scoped {
-          val s2 = batch.sparkSession
-          import graft.sources.StormSinks
-          // resolve the pointer ONCE: all tables come from the same
-          // immutable snapshot
-          val verName = StormSinks.currentVersionName(s2, lakeDir)
-          // merging under a different similarity than the published
-          // labels' would corrupt them undetectably — validate first
-          validateClusterMeta(s2, lakeDir, verName, k, threshold,
-            "graft.CorpusStream.startIncrementalClusters")
-          val corpus = StormSinks.readGroupTableAt(s2, lakeDir, verName, "docs")
-          val labels = StormSinks.readGroupTableKeyedAt(
-            s2, lakeDir, verName, "labels", Seq("doc_id"))
-          val b = graft.Materialize.once(
-            batch.select(col("doc_id"), col("text")).dropDuplicates("doc_id"))
-          // genuinely-new docs only: re-ingested ids are found with a
-          // corpus SCAN (broadcast semi) and anti-joined out, so docs
-          // segments stay disjoint with no corpus shuffle. bNew (not
-          // b) also feeds the MERGE: a committed doc_id's text is
-          // authoritative — re-delivering an id with CHANGED text must
-          // not relabel the lake from text the docs table doesn't
-          // hold (content updates go through deletion + re-ingest,
-          // LakeDeletion.deleteFromClusterLake). A replayed committed
-          // batch therefore merges nothing, trivially idempotent.
-          val dupIds = corpus.select(col("doc_id"))
-            .join(broadcast(b.select(col("doc_id"))), Seq("doc_id"), "left_semi")
-          val bNew = graft.Materialize.once(
-            b.join(broadcast(dupIds), Seq("doc_id"), "left_anti"))
-          // a replayed committed batch has bNew empty (and therefore
-          // an empty delta) — skip the commit entirely rather than
-          // growing the version history with empty segments
-          if (!bNew.isEmpty) {
-            val delta = graft.Materialize.once(
-              graft.operators.Dedup.incrementalClustersDelta(
-                corpus, labels, bNew, k, threshold))
-            StormSinks.appendDeltaGroup(s2, lakeDir,
-              appends = Seq("docs" -> bNew, "labels" -> delta))
-            // auto-cadence: bound segment growth (labels MUST compact
-            // keyed — compactClusterLake's invariant); 0 = operator-
-            // scheduled compaction only
-            if (autoCompactSegments > 0)
-              StormSinks.maintainGroupSegments(s2, lakeDir,
-                autoCompactSegments, keyed = Map("labels" -> Seq("doc_id")))
-            ()
-          }
-        }
+    // the scope frees EVERY frame this batch materializes — not
+    // just `updated` but the ones incrementalClusters /
+    // jaccardPairsTouching build internally (batch, sets, the
+    // quotient CC's labels) — once the group commit lands; without
+    // it each micro-batch stranded those in the block manager for
+    // the stream's lifetime (CorpusStreamSpec pins zero growth).
+    StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
+      checkpointDir, "incclusters") { (batch, _) =>
+      val s2 = batch.sparkSession
+      import graft.sources.StormSinks
+      // resolve the pointer ONCE: all tables come from the same
+      // immutable snapshot
+      val verName = StormSinks.currentVersionName(s2, lakeDir)
+      // merging under a different similarity than the published
+      // labels' would corrupt them undetectably — validate first
+      validateClusterMeta(s2, lakeDir, verName, k, threshold,
+        "graft.CorpusStream.startIncrementalClusters")
+      val corpus = StormSinks.readGroupTableAt(s2, lakeDir, verName, "docs")
+      val labels = StormSinks.readGroupTableKeyedAt(
+        s2, lakeDir, verName, "labels", Seq("doc_id"))
+      val b = graft.Materialize.once(
+        batch.select(col("doc_id"), col("text")).dropDuplicates("doc_id"))
+      // genuinely-new docs only: re-ingested ids are found with a
+      // corpus SCAN (broadcast semi) and anti-joined out, so docs
+      // segments stay disjoint with no corpus shuffle. bNew (not
+      // b) also feeds the MERGE: a committed doc_id's text is
+      // authoritative — re-delivering an id with CHANGED text must
+      // not relabel the lake from text the docs table doesn't
+      // hold (content updates go through deletion + re-ingest,
+      // LakeDeletion.deleteFromClusterLake). A replayed committed
+      // batch therefore merges nothing, trivially idempotent.
+      val dupIds = corpus.select(col("doc_id"))
+        .join(broadcast(b.select(col("doc_id"))), Seq("doc_id"), "left_semi")
+      val bNew = graft.Materialize.once(
+        b.join(broadcast(dupIds), Seq("doc_id"), "left_anti"))
+      // a replayed committed batch has bNew empty (and therefore
+      // an empty delta) — skip the commit entirely rather than
+      // growing the version history with empty segments
+      if (!bNew.isEmpty) {
+        val delta = graft.Materialize.once(
+          graft.operators.Dedup.incrementalClustersDelta(
+            corpus, labels, bNew, k, threshold))
+        StormSinks.appendDeltaGroup(s2, lakeDir,
+          appends = Seq("docs" -> bNew, "labels" -> delta))
+        // auto-cadence: bound segment growth (labels MUST compact
+        // keyed — compactClusterLake's invariant); 0 = operator-
+        // scheduled compaction only
+        if (autoCompactSegments > 0)
+          StormSinks.maintainGroupSegments(s2, lakeDir,
+            autoCompactSegments, keyed = Map("labels" -> Seq("doc_id")))
         ()
       }
-      .option("checkpointLocation", s"$checkpointDir/incclusters")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
 
   /** The fully lake-indexed deployment of cluster maintenance — the
     * [[startIncrementalClusters]] shape with the per-ingest
@@ -617,57 +589,50 @@ object CorpusStream {
       k: Int = 3, threshold: Double = 0.5,
       maxFilesPerTrigger: Int = 16,
       autoCompactSegments: Int = 64): StreamingQuery =
-    readDocuments(spark, inDir, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        // same zero-residue contract as startIncrementalClusters: the
-        // scope frees the lake probe's internal freshSets/freshPrefix
-        // and the quotient CC's frames along with `updated`
-        graft.Materialize.scoped {
-          val s2 = batch.sparkSession
-          import graft.sources.StormSinks
-          val sVerName = StormSinks.currentVersionName(s2, stateDir)
-          val iVer = StormSinks.currentVersionDir(s2, indexDir)
-          validateClusterMeta(s2, stateDir, sVerName, k, threshold,
-            "graft.CorpusStream.startIncrementalClustersIndexed")
-          val docs0 = StormSinks.readGroupTableAt(s2, stateDir, sVerName, "docs")
-          val labels0 = StormSinks.readGroupTableKeyedAt(
-            s2, stateDir, sVerName, "labels", Seq("doc_id"))
-          val fresh0 = StormSinks.readGroupTableAt(s2, stateDir, sVerName, "fresh")
-          val b = graft.Materialize.once(
-            batch.select(col("doc_id"), col("text")).dropDuplicates("doc_id"))
-          // genuinely-new docs only (corpus scan + broadcast, no
-          // shuffle); the SAME delta extends `fresh` — a doc already
-          // in docs is either indexed or already in fresh, so the
-          // probe covers it. bNew (not b) also feeds the merge:
-          // committed ids are text-authoritative (see
-          // startIncrementalClusters), so replays merge nothing.
-          val dupIds = docs0.select(col("doc_id"))
-            .join(broadcast(b.select(col("doc_id"))), Seq("doc_id"), "left_semi")
-          val bNew = graft.Materialize.once(
-            b.join(broadcast(dupIds), Seq("doc_id"), "left_anti"))
-          // replayed committed batch -> empty bNew -> skip the commit
-          if (!bNew.isEmpty) {
-            val delta = graft.Materialize.once(
-              graft.operators.Dedup.incrementalClustersLakeAtDelta(
-                iVer, labels0, fresh0, bNew, k, threshold))
-            StormSinks.appendDeltaGroup(s2, stateDir,
-              appends = Seq("docs" -> bNew, "labels" -> delta, "fresh" -> bNew))
-            // auto-cadence on the STATE group only (segments fold,
-            // fresh's content is untouched); the corpus-sized index
-            // rebuild + fresh reset stays operator-scheduled
-            // (republishClusterIndex) — it's a different cost class
-            if (autoCompactSegments > 0)
-              StormSinks.maintainGroupSegments(s2, stateDir,
-                autoCompactSegments, keyed = Map("labels" -> Seq("doc_id")))
-            ()
-          }
-        }
+    // same zero-residue contract as startIncrementalClusters: the
+    // scope frees the lake probe's internal freshSets/freshPrefix
+    // and the quotient CC's frames along with `updated`
+    StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
+      checkpointDir, "incclusters-idx") { (batch, _) =>
+      val s2 = batch.sparkSession
+      import graft.sources.StormSinks
+      val sVerName = StormSinks.currentVersionName(s2, stateDir)
+      val iVer = StormSinks.currentVersionDir(s2, indexDir)
+      validateClusterMeta(s2, stateDir, sVerName, k, threshold,
+        "graft.CorpusStream.startIncrementalClustersIndexed")
+      val docs0 = StormSinks.readGroupTableAt(s2, stateDir, sVerName, "docs")
+      val labels0 = StormSinks.readGroupTableKeyedAt(
+        s2, stateDir, sVerName, "labels", Seq("doc_id"))
+      val fresh0 = StormSinks.readGroupTableAt(s2, stateDir, sVerName, "fresh")
+      val b = graft.Materialize.once(
+        batch.select(col("doc_id"), col("text")).dropDuplicates("doc_id"))
+      // genuinely-new docs only (corpus scan + broadcast, no
+      // shuffle); the SAME delta extends `fresh` — a doc already
+      // in docs is either indexed or already in fresh, so the
+      // probe covers it. bNew (not b) also feeds the merge:
+      // committed ids are text-authoritative (see
+      // startIncrementalClusters), so replays merge nothing.
+      val dupIds = docs0.select(col("doc_id"))
+        .join(broadcast(b.select(col("doc_id"))), Seq("doc_id"), "left_semi")
+      val bNew = graft.Materialize.once(
+        b.join(broadcast(dupIds), Seq("doc_id"), "left_anti"))
+      // replayed committed batch -> empty bNew -> skip the commit
+      if (!bNew.isEmpty) {
+        val delta = graft.Materialize.once(
+          graft.operators.Dedup.incrementalClustersLakeAtDelta(
+            iVer, labels0, fresh0, bNew, k, threshold))
+        StormSinks.appendDeltaGroup(s2, stateDir,
+          appends = Seq("docs" -> bNew, "labels" -> delta, "fresh" -> bNew))
+        // auto-cadence on the STATE group only (segments fold,
+        // fresh's content is untouched); the corpus-sized index
+        // rebuild + fresh reset stays operator-scheduled
+        // (republishClusterIndex) — it's a different cost class
+        if (autoCompactSegments > 0)
+          StormSinks.maintainGroupSegments(s2, stateDir,
+            autoCompactSegments, keyed = Map("labels" -> Seq("doc_id")))
         ()
       }
-      .option("checkpointLocation", s"$checkpointDir/incclusters-idx")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
 
   /** Publish the retrieval-serving lake: the full BM25 inverted index
     * (the corpus-sized tf aggregate runs HERE, once) and the dense
@@ -743,23 +708,16 @@ object CorpusStream {
   def startRetrievalServing(spark: SparkSession, inDir: String,
       lakeDir: String, outDir: String, checkpointDir: String, k: Int = 3,
       maxFilesPerTrigger: Int = 16): StreamingQuery =
-    readDocuments(spark, inDir, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.Materialize.scoped {
-          val s2 = batch.sparkSession
-          val ver = graft.sources.StormSinks.currentVersionDir(s2, lakeDir)
-          val weights = s2.read.parquet(s"$ver/bm25")
-          val dense = s2.read.parquet(s"$ver/dense")
-          hybridProbe(weights, dense, batch.select(col("doc_id"), col("text")), k)
-            .withColumn("batch_seq", lit(batchId))
-            .write.mode("append").parquet(outDir)
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$checkpointDir/serving")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
+      checkpointDir, "serving") { (batch, batchId) =>
+      val s2 = batch.sparkSession
+      val ver = graft.sources.StormSinks.currentVersionDir(s2, lakeDir)
+      val weights = s2.read.parquet(s"$ver/bm25")
+      val dense = s2.read.parquet(s"$ver/dense")
+      hybridProbe(weights, dense, batch.select(col("doc_id"), col("text")), k)
+        .withColumn("batch_seq", lit(batchId))
+        .write.mode("append").parquet(outDir)
+    }
 
   /** Streaming dense-ANN serving over a published
     * [[graft.operators.Pq.publishIvfPqLake]] index — the vector
@@ -777,26 +735,19 @@ object CorpusStream {
   def startAnnServing(spark: SparkSession, inDir: String,
       lakeDir: String, outDir: String, checkpointDir: String, k: Int = 5,
       maxFilesPerTrigger: Int = 16): StreamingQuery =
-    readDocuments(spark, inDir, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.Materialize.scoped {
-          val s2 = batch.sparkSession
-          import graft.sources.StormSinks
-          val ver = StormSinks.currentVersionName(s2, lakeDir)
-          val queries = StormSinks.readGroupTableAt(s2, lakeDir, ver, "vectors")
-            .join(broadcast(batch.select(col("doc_id").as("vec_id"))
-              .dropDuplicates("vec_id")), Seq("vec_id"))
-            .select(col("vec_id"), col("embedding"))
-          graft.operators.Pq.ivfPqTopKIndexedAt(s2, lakeDir, ver, queries, k)
-            .withColumn("batch_seq", lit(batchId))
-            .write.mode("append").parquet(outDir)
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$checkpointDir/annserving")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
+      checkpointDir, "annserving") { (batch, batchId) =>
+      val s2 = batch.sparkSession
+      import graft.sources.StormSinks
+      val ver = StormSinks.currentVersionName(s2, lakeDir)
+      val queries = StormSinks.readGroupTableAt(s2, lakeDir, ver, "vectors")
+        .join(broadcast(batch.select(col("doc_id").as("vec_id"))
+          .dropDuplicates("vec_id")), Seq("vec_id"))
+        .select(col("vec_id"), col("embedding"))
+      graft.operators.Pq.ivfPqTopKIndexedAt(s2, lakeDir, ver, queries, k)
+        .withColumn("batch_seq", lit(batchId))
+        .write.mode("append").parquet(outDir)
+    }
 
   /** Running heavy-hitter token trends over the document stream — the
     * streaming face of the native Misra–Gries aggregate
@@ -845,21 +796,12 @@ object CorpusStream {
     // from the SAME checkpoint lineage the snapshots were written
     // under. A lost/recreated checkpointDir restarts batchIds at 0, and
     // the first lastSeq+1 batches of genuinely NEW data would be
-    // silently skipped (batchId > lastSeq false). Detect the mismatch
-    // and fail fast: a snapshot with no checkpoint offsets at all means
-    // the lineage is gone (a crash during the very first batch still
-    // leaves offsets/0, so this can't fire spuriously). The operator
-    // restores the checkpoint or moves the snapshot dir aside.
-    val ckptOffsets = new org.apache.hadoop.fs.Path(s"$checkpointDir/trends/offsets")
-    val ckptFresh = !fs.exists(ckptOffsets) ||
-      !fs.listStatus(ckptOffsets).exists(st => !st.getPath.getName.startsWith("."))
-    if (hasSnapshot && ckptFresh)
-      throw new IllegalStateException(
-        s"graft.CorpusStream.startTokenTrends: snapshot data exists at $outDir " +
-          s"but the streaming checkpoint at $checkpointDir/trends is fresh - " +
-          "batchIds would restart at 0 and new batches would be silently " +
-          "skipped as replays. Restore the original checkpoint, or move the " +
-          "snapshot directory aside to start a new stream.")
+    // silently skipped (batchId > lastSeq false). A crash during the
+    // very first batch still leaves offsets/0, so the guard can't fire
+    // spuriously.
+    StreamOps.requireCheckpointMatchesState(spark, checkpointDir, "trends",
+      "graft.CorpusStream.startTokenTrends", outDir, hasSnapshot,
+      "move the snapshot directory aside to start a new stream")
     if (hasSnapshot) {
       val prev = spark.read.parquet(outDir)
       val maxRow = prev.agg(max(col("batch_seq"))).head()
@@ -870,32 +812,27 @@ object CorpusStream {
         lastSeq = maxB
       }
     }
-    readDocuments(spark, inDir, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        if (batchId > lastSeq) {
-          val m = batch.select(explode(Text.tokens(col("text"))).as("token"))
-            .where(col("token") =!= "")
-            .agg(graft.expressions.native.heavyHitters(col("token"), capacity).as("mg"))
-            .head().getMap[String, Long](0)
-          // the SAME merge rule as the aggregate's partial states —
-          // one implementation, shared (the prefix guarantee depends
-          // on both paths merging identically)
-          graft.expressions.SpaceSavingAgg.mergeCapped(running, m, capacity)
-          lastSeq = batchId
-          val s2 = batch.sparkSession
-          import s2.implicits._
-          running.toSeq.sortBy(_._1).toDF("token", "est")
-            .withColumn("batch_seq", lit(batchId))
-            // k-slot summary: ≤ capacity rows regardless of trigger
-            // size, so one output file is the right shape
-            .coalesce(1).write.mode("append").parquet(outDir)
-        }
-        ()
+    StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
+      checkpointDir, "trends") { (batch, batchId) =>
+      if (batchId > lastSeq) {
+        val m = batch.select(explode(Text.tokens(col("text"))).as("token"))
+          .where(col("token") =!= "")
+          .agg(graft.expressions.native.heavyHitters(col("token"), capacity).as("mg"))
+          .head().getMap[String, Long](0)
+        // the SAME merge rule as the aggregate's partial states —
+        // one implementation, shared (the prefix guarantee depends
+        // on both paths merging identically)
+        graft.expressions.SpaceSavingAgg.mergeCapped(running, m, capacity)
+        lastSeq = batchId
+        val s2 = batch.sparkSession
+        import s2.implicits._
+        running.toSeq.sortBy(_._1).toDF("token", "est")
+          .withColumn("batch_seq", lit(batchId))
+          // k-slot summary: ≤ capacity rows regardless of trigger
+          // size, so one output file is the right shape
+          .coalesce(1).write.mode("append").parquet(outDir)
       }
-      .option("checkpointLocation", s"$checkpointDir/trends")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
   }
 
   // ---------------------------------------------- streaming dataset card
@@ -926,47 +863,17 @@ object CorpusStream {
   def startCorpusCard(spark: SparkSession, inDir: String,
       stateDir: String, checkpointDir: String,
       maxFilesPerTrigger: Int = 16): StreamingQuery = {
-    // the standard lineage guard: a used state group with a fresh
-    // checkpoint restarts batch ids at 0 — depending on file grouping
-    // that either SKIPS never-counted files (batch <= last_batch) or
-    // double-counts already-counted ones. Fail fast like every other
-    // state-committing stream.
+    // restarted batch ids either SKIP never-counted files
+    // (batch <= last_batch) or double-count already-counted ones,
+    // depending on file grouping
     val (_, committed) = readCardState(spark, stateDir)
-    requireCheckpointMatchesState(spark, s"$checkpointDir/card", committed,
-      "graft.CorpusStream.startCorpusCard", stateDir)
-    readDocuments(spark, inDir, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.Materialize.scoped {
-          cardBatchBody(batch.toDF(), batchId, stateDir)
-          ()
-        }
-      }
-      .option("checkpointLocation", s"$checkpointDir/card")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** The used-state-with-fresh-checkpoint lineage guard shared by the
-    * state-committing streams: a state group with committed batches up
-    * to `committed` paired with a checkpoint that has no committed
-    * offsets means batch ids restart at 0 — depending on file grouping
-    * that either silently SKIPS never-processed files (replay gate
-    * `batchId <= last_batch`) or double-counts processed ones. */
-  private def requireCheckpointMatchesState(spark: SparkSession,
-      ckptSubdir: String, committed: Long, face: String,
-      stateDir: String): Unit = {
-    val ckptOffsets = new org.apache.hadoop.fs.Path(s"$ckptSubdir/offsets")
-    val ckptFs = ckptOffsets.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ckptFresh = !ckptFs.exists(ckptOffsets) ||
-      !ckptFs.listStatus(ckptOffsets).exists(st => !st.getPath.getName.startsWith("."))
-    if (committed >= 0 && ckptFresh)
-      throw new IllegalStateException(
-        s"$face: the state at $stateDir has committed batches up to " +
-          s"$committed but the checkpoint at $ckptSubdir has no committed " +
-          "offsets: restarted batch ids would silently skip or " +
-          "double-count files. Restore the original checkpoint, or " +
-          "republish empty state to start over.")
+    StreamOps.requireCheckpointMatchesState(spark, checkpointDir, "card",
+      "graft.CorpusStream.startCorpusCard", stateDir, committed >= 0,
+      "republish empty state to start over")
+    StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
+      checkpointDir, "card") { (batch, batchId) =>
+      cardBatchBody(batch, batchId, stateDir)
+    }
   }
 
   /** [[startCorpusCard]]'s per-batch body — shared with
@@ -1112,63 +1019,38 @@ object CorpusStream {
   def startDomainMixer(spark: SparkSession, inDir: String,
       stateDir: String, checkpointDir: String,
       maxFilesPerTrigger: Int = 16): StreamingQuery = {
-    val (_, committed) = readMixerState(spark, stateDir)
-    val ckptOffsets = new org.apache.hadoop.fs.Path(
-      s"$checkpointDir/mixer/offsets")
-    val ckptFs = ckptOffsets.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ckptFresh = !ckptFs.exists(ckptOffsets) ||
-      !ckptFs.listStatus(ckptOffsets).exists(st => !st.getPath.getName.startsWith("."))
-    if (committed >= 0 && ckptFresh)
-      throw new IllegalStateException(
-        s"graft.CorpusStream.startDomainMixer: the mixer state at $stateDir " +
-          s"has committed batches up to $committed but the checkpoint at " +
-          s"$checkpointDir/mixer has no committed offsets: restarted batch " +
-          "ids would silently skip or double-count files. Restore the " +
-          "original checkpoint, or republish empty state to start over.")
     // the INVERSE corruption — state dir lost/wiped but checkpoint
-    // kept — must also be rejected: the file source would never
-    // replay already-committed files, so the counters would stay
-    // empty while readDomainWeights served them downstream as the
-    // FULL mixture (a permanent silent undercount, worse than the
-    // skip/double-count case because nothing ever looks wrong)
-    if (committed < 0 && !ckptFresh)
-      throw new IllegalStateException(
-        s"graft.CorpusStream.startDomainMixer: the checkpoint at " +
-          s"$checkpointDir/mixer has committed offsets but the mixer state " +
-          s"at $stateDir is empty: the state dir was lost or wiped, and " +
-          "already-processed files would never be replayed — the mixture " +
-          "weights would permanently undercount every domain. Restore the " +
-          "state dir, or start over with a fresh checkpoint.")
-    readDocuments(spark, inDir, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.Materialize.scoped {
-          val s2 = batch.sparkSession
-          import graft.sources.StormSinks
-          val (prev, lastBatch) = readMixerState(s2, stateDir)
-          if (batchId > lastBatch) {
-            val b = batch
-              .select(col("source"),
-                floor(Text.qualityScore(col("text")) * lit(1000000.0) + lit(0.5))
-                  .cast("long").as("q6"))
-              .groupBy(col("source"))
-              .agg(count(lit(1)).as("n_docs"), sum(col("q6")).as("sum_q6"))
-            val counts = prev.unionByName(b).groupBy(col("source"))
-              .agg(sum(col("n_docs")).as("n_docs"),
-                sum(col("sum_q6")).as("sum_q6"))
-            import s2.implicits._
-            val meta = Seq(batchId).toDF("last_batch")
-            StormSinks.writeVersionedGroup(s2, stateDir,
-              Seq("counts" -> counts, "meta" -> meta))
-            StormSinks.vacuumVersions(s2, stateDir, keep = 2)
-            ()
-          }
-          ()
-        }
+    // kept — is rejected too: the counters would stay empty while
+    // readDomainWeights served them downstream as the FULL mixture (a
+    // permanent silent undercount, worse than the skip/double-count
+    // case because nothing ever looks wrong)
+    val (_, committed) = readMixerState(spark, stateDir)
+    StreamOps.requireCheckpointMatchesState(spark, checkpointDir, "mixer",
+      "graft.CorpusStream.startDomainMixer", stateDir, committed >= 0,
+      "republish empty state to start over", lostAs = Some("wiped"))
+    StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
+      checkpointDir, "mixer") { (batch, batchId) =>
+      val s2 = batch.sparkSession
+      import graft.sources.StormSinks
+      val (prev, lastBatch) = readMixerState(s2, stateDir)
+      if (batchId > lastBatch) {
+        val b = batch
+          .select(col("source"),
+            floor(Text.qualityScore(col("text")) * lit(1000000.0) + lit(0.5))
+              .cast("long").as("q6"))
+          .groupBy(col("source"))
+          .agg(count(lit(1)).as("n_docs"), sum(col("q6")).as("sum_q6"))
+        val counts = prev.unionByName(b).groupBy(col("source"))
+          .agg(sum(col("n_docs")).as("n_docs"),
+            sum(col("sum_q6")).as("sum_q6"))
+        import s2.implicits._
+        val meta = Seq(batchId).toDF("last_batch")
+        StormSinks.writeVersionedGroup(s2, stateDir,
+          Seq("counts" -> counts, "meta" -> meta))
+        StormSinks.vacuumVersions(s2, stateDir, keep = 2)
+        ()
       }
-      .option("checkpointLocation", s"$checkpointDir/mixer")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
   }
 
   private def readMixerState(spark: SparkSession,
@@ -1236,18 +1118,18 @@ object CorpusStream {
     * is one narrow map + one tiny aggregation per batch. */
   def startDriftGate(spark: SparkSession, inDir: String, refDir: String,
       stateDir: String, outDir: String, checkpointDir: String,
-      maxFilesPerTrigger: Int = 16): StreamingQuery =
-    readDocuments(spark, inDir, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.Materialize.scoped {
-          driftBatchBody(batch.toDF(), batchId, refDir, stateDir, outDir)
-        }
-        ()
-      }
-      .option("checkpointLocation", s"$checkpointDir/driftgate")
-      .trigger(Trigger.AvailableNow())
-      .start()
+      maxFilesPerTrigger: Int = 16): StreamingQuery = {
+    // restarted batch ids would make the last_batch gate silently skip
+    // the first last_batch + 1 batches of new input
+    StreamOps.requireCheckpointMatchesState(spark, checkpointDir, "driftgate",
+      "graft.CorpusStream.startDriftGate", stateDir,
+      readDriftState(spark, stateDir)._2 >= 0,
+      "move the state directory aside to start over")
+    StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
+      checkpointDir, "driftgate") { (batch, batchId) =>
+      driftBatchBody(batch, batchId, refDir, stateDir, outDir)
+    }
+  }
 
   /** [[startDriftGate]]'s per-batch body — shared with
     * [[startCorpusIngest]] (parity-by-construction). Folds the batch
@@ -1315,7 +1197,7 @@ object CorpusStream {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       StructType(Seq(StructField("feature", StringType),
         StructField("bucket", StringType), StructField("ref_n", LongType),
-        StructField("cur_n", LongType), StructField("term_i", DoubleType))))
+        StructField("cur_n", LongType), StructField("term_i", LongType))))
     val t = try spark.read.parquet(outDir) catch {
       case _: org.apache.spark.sql.AnalysisException => return empty
     }
@@ -1363,72 +1245,49 @@ object CorpusStream {
   def startClassifyGate(spark: SparkSession, inDir: String,
       modelDir: String, outDir: String, checkpointDir: String,
       maxFilesPerTrigger: Int = 16): StreamingQuery = {
-    // the trends/line-clean freshness guard: scores exist but the
-    // checkpoint has no committed offsets -> batch ids restart at 0,
-    // and (absent a weight republish bumping model_ver) a re-crawled
-    // doc's fresh score would lose the (model_ver, batch_seq) collapse
-    // to its stale higher-batch_seq row forever. Fail fast instead.
+    // scores exist but the checkpoint is fresh -> batch ids restart at
+    // 0, and a re-crawled doc's fresh score would lose the (model_ver,
+    // batch_seq) collapse to its stale higher-batch_seq row forever.
+    // The model_ver-major collapse makes one fresh-checkpoint restart
+    // SAFE: when the currently-published model version exceeds every
+    // existing score's model_ver, each fresh score wins the collapse
+    // regardless of restarted batch ids. That is the designed recovery
+    // — checkpoint lost, user republishes (bumping the lake version),
+    // restarts — so the scores count as in use only without it.
     val outPath = new org.apache.hadoop.fs.Path(outDir)
     val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val hasScores = fs.exists(outPath) &&
       fs.listStatus(outPath).exists(_.getPath.getName.startsWith("part-"))
-    val ckptOffsets = new org.apache.hadoop.fs.Path(
-      s"$checkpointDir/classify/offsets")
-    val ckptFs = ckptOffsets.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ckptFresh = !ckptFs.exists(ckptOffsets) ||
-      !ckptFs.listStatus(ckptOffsets).exists(st => !st.getPath.getName.startsWith("."))
-    if (hasScores && ckptFresh) {
-      // The model_ver-major collapse makes one fresh-checkpoint restart
-      // SAFE: when the currently-published model version exceeds every
-      // existing score's model_ver, each fresh score wins the
-      // (model_ver, batch_seq) max regardless of batch ids restarting
-      // at 0. That is the designed recovery — checkpoint lost, user
-      // republishes (bumping the lake version), restarts. Only when the
-      // published version does NOT exceed the scores' max (no republish
-      // since the old run) is the restart unrecoverable; fail fast then.
-      val curVer: Option[Long] =
-        try {
-          val ver = graft.sources.StormSinks.currentVersionDir(spark, modelDir)
-          Some(ver.substring(ver.lastIndexOf("v-") + 2).toLong)
-        } catch { case scala.util.control.NonFatal(_) => None }
-      val scores = spark.read.parquet(outDir)
-      val maxScoreVer: Long =
-        if (scores.columns.contains("model_ver")) {
-          val r = scores.agg(max(col("model_ver"))).head()
-          if (r.isNullAt(0)) 0L else r.getLong(0)
-        } else 0L
-      if (!curVer.exists(_ > maxScoreVer))
-        throw new IllegalStateException(
-          s"graft.CorpusStream.startClassifyGate: scores exist at $outDir " +
-            s"(max model_ver $maxScoreVer) but the streaming checkpoint at " +
-            s"$checkpointDir/classify is fresh and the published model " +
-            s"version (${curVer.fold("none")(_.toString)}) does not exceed " +
-            "it - batch ids would restart at 0 and re-scored documents " +
-            "would lose the (model_ver, batch_seq) collapse to their stale " +
-            "higher-batch_seq rows forever. Either republish the model " +
-            "(the bumped model_ver then wins the collapse for every fresh " +
-            "score) and restart, restore the original checkpoint, or move " +
-            "the score directory aside.")
+    StreamOps.requireCheckpointMatchesState(spark, checkpointDir, "classify",
+      "graft.CorpusStream.startClassifyGate", outDir,
+      hasScores && {
+        val curVer: Option[Long] =
+          try {
+            val ver = graft.sources.StormSinks.currentVersionDir(spark, modelDir)
+            Some(ver.substring(ver.lastIndexOf("v-") + 2).toLong)
+          } catch { case scala.util.control.NonFatal(_) => None }
+        val scores = spark.read.parquet(outDir)
+        val maxScoreVer: Long =
+          if (scores.columns.contains("model_ver")) {
+            val r = scores.agg(max(col("model_ver"))).head()
+            if (r.isNullAt(0)) 0L else r.getLong(0)
+          } else 0L
+        !curVer.exists(_ > maxScoreVer)
+      },
+      "republish the model (the bumped model_ver then wins the collapse " +
+        "for every fresh score) and restart, or move the score directory aside")
+    StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
+      checkpointDir, "classify") { (batch, batchId) =>
+      val s2 = batch.sparkSession
+      val ver = graft.sources.StormSinks.currentVersionDir(s2, modelDir)
+      val wRow = s2.read.parquet(s"$ver/weights").head()
+      val w = Array.tabulate(5)(wRow.getDouble)
+      val modelVer = ver.substring(ver.lastIndexOf("v-") + 2).toLong
+      sizedBatchOutput(graft.operators.Classify.scoreWith(batch, w)
+        .withColumn("batch_seq", lit(batchId))
+        .withColumn("model_ver", lit(modelVer)))
+        .write.mode("append").parquet(outDir)
     }
-    readDocuments(spark, inDir, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.Materialize.scoped {
-          val s2 = batch.sparkSession
-          val ver = graft.sources.StormSinks.currentVersionDir(s2, modelDir)
-          val wRow = s2.read.parquet(s"$ver/weights").head()
-          val w = Array.tabulate(5)(wRow.getDouble)
-          val modelVer = ver.substring(ver.lastIndexOf("v-") + 2).toLong
-          sizedBatchOutput(graft.operators.Classify.scoreWith(batch, w)
-            .withColumn("batch_seq", lit(batchId))
-            .withColumn("model_ver", lit(modelVer)))
-            .write.mode("append").parquet(outDir)
-          ()
-        }
-      }
-      .option("checkpointLocation", s"$checkpointDir/classify")
-      .trigger(Trigger.AvailableNow())
-      .start()
   }
 
   /** The gate's scores, one row per doc: duplicates collapse to the
@@ -1437,22 +1296,7 @@ object CorpusStream {
     * its newest consistent score; the version-before-score tie-break
     * keeps a replayed-after-republish batch from mixing two weight
     * versions row-by-row. Empty on cold start. */
-  def latestClassifyScores(spark: SparkSession, outDir: String): DataFrame = {
-    // mergeSchema: an outDir holding pre-model_ver files ALONGSIDE
-    // versioned ones must surface the column (plain read takes the
-    // schema of an arbitrary first file — if a legacy file wins, every
-    // row would coerce to version 0 and the collapse would degrade to
-    // batch_seq-major, resurrecting exactly the stale-row shadowing
-    // the freshness guard exists to prevent); legacy ROWS then read
-    // the column as null and coalesce to version 0 individually.
-    val t = try spark.read.option("mergeSchema", "true").parquet(outDir) catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        return spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("doc_id", LongType),
-            StructField("score", DoubleType), StructField("pred", BooleanType),
-            StructField("label", BooleanType))))
-    }
+  def latestClassifyScores(spark: SparkSession, outDir: String): DataFrame =
     // model_ver-major: lake versions are monotonic in publish time, so
     // the newest weights win across a checkpoint reset that restarts
     // batch ids at 0 PROVIDED the reset came with a weight republish
@@ -1463,15 +1307,9 @@ object CorpusStream {
     // freshness guard rejects that lineage-less restart at start, so
     // rows here always come from one checkpoint lineage per model_ver.
     // Outputs written before model_ver existed read as version 0.
-    val tv = if (t.columns.contains("model_ver"))
-      t.withColumn("model_ver", coalesce(col("model_ver"), lit(0L)))
-    else t.withColumn("model_ver", lit(0L))
-    tv.groupBy(col("doc_id"))
-      .agg(max(struct(col("model_ver"), col("batch_seq"), col("score"),
-        col("pred"), col("label"))).as("m"))
-      .select(col("doc_id"), col("m.score").as("score"),
-        col("m.pred").as("pred"), col("m.label").as("label"))
-  }
+    newestPerDoc(spark, outDir, Seq("model_ver", "batch_seq"), StructType(Seq(
+      StructField("doc_id", LongType), StructField("score", DoubleType),
+      StructField("pred", BooleanType), StructField("label", BooleanType))))
 
   // --------------------------------------------- streaming line cleaning
   /** Publish the seen-line registry: sha-256 fingerprints of every
@@ -1559,7 +1397,7 @@ object CorpusStream {
     * that already holds the batch's lines would wrongly drop them all.
     * The registry is keyed to THIS stream's batch ids, so a fresh
     * checkpoint against a used registry is rejected at start (the
-    * trends-stream freshness guard): reprocessing would silently
+    * lineage guard): reprocessing would silently
     * swallow every replayed document otherwise.
     *
     * Scale: per-batch state I/O is O(batch) — the commit APPENDS the
@@ -1583,66 +1421,45 @@ object CorpusStream {
       Seq("min_words" -> minWords.toLong,
         "require_punct" -> requireTerminalPunct),
       "graft.CorpusStream.startLineClean")
-    // the trends-guard discipline, Hadoop-FS resolved (a local
-    // java.io.File check would read EVERY hdfs://-s3a:// checkpoint as
-    // fresh and block legitimate restarts) and keyed on committed
-    // OFFSETS, not directory existence (a pre-created-but-empty
-    // checkpoint dir is just as lineage-less as a missing one)
-    val ckptOffsets = new org.apache.hadoop.fs.Path(
-      s"$checkpointDir/lineclean/offsets")
-    val ckptFs = ckptOffsets.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ckptFresh = !ckptFs.exists(ckptOffsets) ||
-      !ckptFs.listStatus(ckptOffsets).exists(st => !st.getPath.getName.startsWith("."))
-    if (committed >= 0 && ckptFresh)
-      throw new IllegalStateException(
-        s"graft.CorpusStream.startLineClean: the registry at $stateDir has " +
-          s"committed batches up to $committed but the checkpoint at " +
-          s"$checkpointDir/lineclean has no committed offsets: batch ids " +
-          "would restart at 0 and every replayed batch would be skipped by " +
-          "the replay gate (its documents silently never emitted). Restore " +
-          "the original checkpoint, or republish the registry " +
-          "(publishLineIndex) to start a new stream.")
-    readDocuments(spark, inDir, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.Materialize.scoped {
-          val s2 = batch.sparkSession
-          import graft.sources.StormSinks
-          // one resolution = one consistent (fps, meta) snapshot
-          val verName = StormSinks.currentVersionName(s2, stateDir)
-          val lastBatch = StormSinks
-            .readGroupTableAt(s2, stateDir, verName, "meta").head().getLong(0)
-          if (batchId > lastBatch) {
-            val seen = StormSinks.readGroupTableAt(s2, stateDir, verName, "fps")
-            val lines = graft.Materialize.once(graft.operators.Lines
-              .ruleLines(batch, minWords, requireTerminalPunct)
-              .withColumn("fp", sha2(col("lnorm"), 256)))
-            // fresh lines feed the output AND the delta segment —
-            // materialize once so the registry anti-join runs once
-            val fresh = graft.Materialize.once(
-              lines.join(seen, Seq("fp"), "left_anti"))
-            sizedBatchOutput(graft.operators.Lines.assembleKeepFirst(fresh)
-              .withColumn("batch_seq", lit(batchId)))
-              .write.mode("append").parquet(outDir)
-            import s2.implicits._
-            // O(batch) commit: fps gains the batch's FRESH fingerprints
-            // (disjoint from every committed segment by the anti-join),
-            // meta is replaced — the registry is never rewritten
-            StormSinks.appendDeltaGroup(s2, stateDir,
-              appends = Seq("fps" -> fresh.select(col("fp")).distinct()),
-              replaces = Seq("meta" ->
-                Seq((batchId, minWords.toLong, requireTerminalPunct))
-                  .toDF("last_batch", "min_words", "require_punct")))
-            // auto-cadence: bound the registry's segment growth
-            if (autoCompactSegments > 0)
-              StormSinks.maintainGroupSegments(s2, stateDir, autoCompactSegments)
-          }
-          ()
-        }
+    // restarted batch ids: the replay gate would swallow every
+    // replayed batch (its documents silently never emitted)
+    StreamOps.requireCheckpointMatchesState(spark, checkpointDir, "lineclean",
+      "graft.CorpusStream.startLineClean", stateDir, committed >= 0,
+      "republish the registry (publishLineIndex) to start a new stream")
+    StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
+      checkpointDir, "lineclean") { (batch, batchId) =>
+      val s2 = batch.sparkSession
+      import graft.sources.StormSinks
+      // one resolution = one consistent (fps, meta) snapshot
+      val verName = StormSinks.currentVersionName(s2, stateDir)
+      val lastBatch = StormSinks
+        .readGroupTableAt(s2, stateDir, verName, "meta").head().getLong(0)
+      if (batchId > lastBatch) {
+        val seen = StormSinks.readGroupTableAt(s2, stateDir, verName, "fps")
+        val lines = graft.Materialize.once(graft.operators.Lines
+          .ruleLines(batch, minWords, requireTerminalPunct)
+          .withColumn("fp", sha2(col("lnorm"), 256)))
+        // fresh lines feed the output AND the delta segment —
+        // materialize once so the registry anti-join runs once
+        val fresh = graft.Materialize.once(
+          lines.join(seen, Seq("fp"), "left_anti"))
+        sizedBatchOutput(graft.operators.Lines.assembleKeepFirst(fresh)
+          .withColumn("batch_seq", lit(batchId)))
+          .write.mode("append").parquet(outDir)
+        import s2.implicits._
+        // O(batch) commit: fps gains the batch's FRESH fingerprints
+        // (disjoint from every committed segment by the anti-join),
+        // meta is replaced — the registry is never rewritten
+        StormSinks.appendDeltaGroup(s2, stateDir,
+          appends = Seq("fps" -> fresh.select(col("fp")).distinct()),
+          replaces = Seq("meta" ->
+            Seq((batchId, minWords.toLong, requireTerminalPunct))
+              .toDF("last_batch", "min_words", "require_punct")))
+        // auto-cadence: bound the registry's segment growth
+        if (autoCompactSegments > 0)
+          StormSinks.maintainGroupSegments(s2, stateDir, autoCompactSegments)
       }
-      .option("checkpointLocation", s"$checkpointDir/lineclean")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
   }
 
   // ----------------------------------------- streaming paragraph dedup
@@ -1690,57 +1507,39 @@ object CorpusStream {
       autoCompactSegments: Int = 64): StreamingQuery = {
     val committed = graft.sources.StormSinks
       .readVersionedGroupTable(spark, stateDir, "meta").head().getLong(0)
-    val ckptOffsets = new org.apache.hadoop.fs.Path(
-      s"$checkpointDir/pardedup/offsets")
-    val ckptFs = ckptOffsets.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ckptFresh = !ckptFs.exists(ckptOffsets) ||
-      !ckptFs.listStatus(ckptOffsets).exists(st => !st.getPath.getName.startsWith("."))
-    if (committed >= 0 && ckptFresh)
-      throw new IllegalStateException(
-        s"graft.CorpusStream.startParagraphDedup: the registry at $stateDir " +
-          s"has committed batches up to $committed but the checkpoint at " +
-          s"$checkpointDir/pardedup has no committed offsets: batch ids " +
-          "would restart at 0 and every replayed batch would be skipped by " +
-          "the replay gate (its documents silently never emitted). Restore " +
-          "the original checkpoint, or republish the registry " +
-          "(publishParagraphIndex) to start a new stream.")
-    readDocuments(spark, inDir, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.Materialize.scoped {
-          val s2 = batch.sparkSession
-          import graft.sources.StormSinks
-          // one resolution = one consistent (fps, meta) snapshot
-          val verName = StormSinks.currentVersionName(s2, stateDir)
-          val lastBatch = StormSinks
-            .readGroupTableAt(s2, stateDir, verName, "meta").head().getLong(0)
-          if (batchId > lastBatch) {
-            val seen = StormSinks.readGroupTableAt(s2, stateDir, verName, "fps")
-            val pars = graft.Materialize.once(
-              graft.operators.Lines.paragraphs(batch))
-            // fresh paragraphs feed the output AND the delta segment
-            val fresh = graft.Materialize.once(
-              pars.join(seen, Seq("fp"), "left_anti"))
-            sizedBatchOutput(graft.operators.Lines
-              .assembleParagraphsKeepFirst(fresh, pars)
-              .withColumn("batch_seq", lit(batchId)))
-              .write.mode("append").parquet(outDir)
-            import s2.implicits._
-            // O(batch) commit: fps gains only the batch's fresh
-            // fingerprints; the registry is never rewritten
-            StormSinks.appendDeltaGroup(s2, stateDir,
-              appends = Seq("fps" -> fresh.select(col("fp")).distinct()),
-              replaces = Seq("meta" -> Seq(batchId).toDF("last_batch")))
-            // auto-cadence: bound the registry's segment growth
-            if (autoCompactSegments > 0)
-              StormSinks.maintainGroupSegments(s2, stateDir, autoCompactSegments)
-          }
-          ()
-        }
+    StreamOps.requireCheckpointMatchesState(spark, checkpointDir, "pardedup",
+      "graft.CorpusStream.startParagraphDedup", stateDir, committed >= 0,
+      "republish the registry (publishParagraphIndex) to start a new stream")
+    StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
+      checkpointDir, "pardedup") { (batch, batchId) =>
+      val s2 = batch.sparkSession
+      import graft.sources.StormSinks
+      // one resolution = one consistent (fps, meta) snapshot
+      val verName = StormSinks.currentVersionName(s2, stateDir)
+      val lastBatch = StormSinks
+        .readGroupTableAt(s2, stateDir, verName, "meta").head().getLong(0)
+      if (batchId > lastBatch) {
+        val seen = StormSinks.readGroupTableAt(s2, stateDir, verName, "fps")
+        val pars = graft.Materialize.once(
+          graft.operators.Lines.paragraphs(batch))
+        // fresh paragraphs feed the output AND the delta segment
+        val fresh = graft.Materialize.once(
+          pars.join(seen, Seq("fp"), "left_anti"))
+        sizedBatchOutput(graft.operators.Lines
+          .assembleParagraphsKeepFirst(fresh, pars)
+          .withColumn("batch_seq", lit(batchId)))
+          .write.mode("append").parquet(outDir)
+        import s2.implicits._
+        // O(batch) commit: fps gains only the batch's fresh
+        // fingerprints; the registry is never rewritten
+        StormSinks.appendDeltaGroup(s2, stateDir,
+          appends = Seq("fps" -> fresh.select(col("fp")).distinct()),
+          replaces = Seq("meta" -> Seq(batchId).toDF("last_batch")))
+        // auto-cadence: bound the registry's segment growth
+        if (autoCompactSegments > 0)
+          StormSinks.maintainGroupSegments(s2, stateDir, autoCompactSegments)
       }
-      .option("checkpointLocation", s"$checkpointDir/pardedup")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
   }
 
   // ------------------------------------- streaming pretrain-prep gate
@@ -1818,92 +1617,74 @@ object CorpusStream {
     validateRegistryParams(spark, stateDir,
       Seq("min_words" -> minWords.toLong),
       "graft.CorpusStream.startPretrainPrep")
-    val ckptOffsets = new org.apache.hadoop.fs.Path(
-      s"$checkpointDir/pretrain/offsets")
-    val ckptFs = ckptOffsets.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val ckptFresh = !ckptFs.exists(ckptOffsets) ||
-      !ckptFs.listStatus(ckptOffsets).exists(st => !st.getPath.getName.startsWith("."))
-    if (committed >= 0 && ckptFresh)
-      throw new IllegalStateException(
-        s"graft.CorpusStream.startPretrainPrep: the registry group at " +
-          s"$stateDir has committed batches up to $committed but the " +
-          s"checkpoint at $checkpointDir/pretrain has no committed offsets: " +
-          "batch ids would restart at 0 and every replayed batch would be " +
-          "skipped by the replay gate (its documents silently never " +
-          "emitted). Restore the original checkpoint, or republish the " +
-          "registries (publishPretrainIndex) to start a new stream.")
-    readDocuments(spark, inDir, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.Materialize.scoped {
-          val s2 = batch.sparkSession
-          import graft.sources.StormSinks
-          // one resolution = one consistent (line_fps, par_fps, meta)
-          val verName = StormSinks.currentVersionName(s2, stateDir)
-          val lastBatch = StormSinks
-            .readGroupTableAt(s2, stateDir, verName, "meta").head().getLong(0)
-          if (batchId > lastBatch) {
-            val seenL = StormSinks.readGroupTableAt(s2, stateDir, verName, "line_fps")
-            val seenP = StormSinks.readGroupTableAt(s2, stateDir, verName, "par_fps")
-            // with the funnel on, the intermediate stage frames gain a
-            // second consumer (their count) — materialize them so the
-            // counts ride the SAME frames the output flows through
-            // (the batch yieldReport discipline: a funnel that
-            // recomputes its stages can drift from what it audits)
-            def mat(df: org.apache.spark.sql.DataFrame) =
-              if (funnelDir != null) graft.Materialize.once(df) else df
-            val pages = mat(normalizePages(batch))
-            val lines = graft.Materialize.once(graft.operators.Lines
-              .ruleLines(pages, minWords, requireTerminalPunct = false)
-              .withColumn("fp", sha2(col("lnorm"), 256)))
-            val freshL = graft.Materialize.once(
-              lines.join(seenL, Seq("fp"), "left_anti"))
-            val cleaned = mat(graft.operators.Lines.assembleKeepFirst(freshL)
-              .select(col("doc_id"), col("clean_text").as("text")))
-            val pars = graft.Materialize.once(
-              graft.operators.Lines.paragraphs(cleaned))
-            val freshP = graft.Materialize.once(
-              pars.join(seenP, Seq("fp"), "left_anti"))
-            val assembled = mat(graft.operators.Lines
-              .assembleParagraphsKeepFirst(freshP, pars)
-              .withColumn("batch_seq", lit(batchId)))
-            sizedBatchOutput(assembled)
-              .write.mode("append").parquet(outDir)
-            // per-batch stage-yield funnel (the batch yieldReport's
-            // streaming face): (batch_seq, stage, n_docs) rows land
-            // NEXT TO the output with the same at-least-once / replay
-            // contract — a bad blocklist push or registry corruption
-            // shows up in the next trigger's funnel, not in tomorrow's
-            // nightly batch audit. Counts are O(batch) aggregates over
-            // frames the trigger materializes anyway.
-            if (funnelDir != null) {
-              import s2.implicits._
-              Seq(("0_raw", batch.count()),
-                ("1_blocklist", pages.count()),
-                ("2_line_clean", cleaned.count()),
-                ("3_paragraph_dedup", assembled.count()))
-                .toDF("stage", "n_docs")
-                .withColumn("batch_seq", lit(batchId))
-                .coalesce(1).write.mode("append").parquet(funnelDir)
-            }
-            import s2.implicits._
-            // ONE atomic commit for both registries: O(batch) deltas
-            StormSinks.appendDeltaGroup(s2, stateDir,
-              appends = Seq(
-                "line_fps" -> freshL.select(col("fp")).distinct(),
-                "par_fps" -> freshP.select(col("fp")).distinct()),
-              replaces = Seq("meta" -> Seq((batchId, minWords.toLong))
-                .toDF("last_batch", "min_words")))
-            // auto-cadence: bound both registries' segment growth
-            if (autoCompactSegments > 0)
-              StormSinks.maintainGroupSegments(s2, stateDir, autoCompactSegments)
-          }
-          ()
+    StreamOps.requireCheckpointMatchesState(spark, checkpointDir, "pretrain",
+      "graft.CorpusStream.startPretrainPrep", stateDir, committed >= 0,
+      "republish the registries (publishPretrainIndex) to start a new stream")
+    StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
+      checkpointDir, "pretrain") { (batch, batchId) =>
+      val s2 = batch.sparkSession
+      import graft.sources.StormSinks
+      // one resolution = one consistent (line_fps, par_fps, meta)
+      val verName = StormSinks.currentVersionName(s2, stateDir)
+      val lastBatch = StormSinks
+        .readGroupTableAt(s2, stateDir, verName, "meta").head().getLong(0)
+      if (batchId > lastBatch) {
+        val seenL = StormSinks.readGroupTableAt(s2, stateDir, verName, "line_fps")
+        val seenP = StormSinks.readGroupTableAt(s2, stateDir, verName, "par_fps")
+        // with the funnel on, the intermediate stage frames gain a
+        // second consumer (their count) — materialize them so the
+        // counts ride the SAME frames the output flows through
+        // (the batch yieldReport discipline: a funnel that
+        // recomputes its stages can drift from what it audits)
+        def mat(df: org.apache.spark.sql.DataFrame) =
+          if (funnelDir != null) graft.Materialize.once(df) else df
+        val pages = mat(normalizePages(batch))
+        val lines = graft.Materialize.once(graft.operators.Lines
+          .ruleLines(pages, minWords, requireTerminalPunct = false)
+          .withColumn("fp", sha2(col("lnorm"), 256)))
+        val freshL = graft.Materialize.once(
+          lines.join(seenL, Seq("fp"), "left_anti"))
+        val cleaned = mat(graft.operators.Lines.assembleKeepFirst(freshL)
+          .select(col("doc_id"), col("clean_text").as("text")))
+        val pars = graft.Materialize.once(
+          graft.operators.Lines.paragraphs(cleaned))
+        val freshP = graft.Materialize.once(
+          pars.join(seenP, Seq("fp"), "left_anti"))
+        val assembled = mat(graft.operators.Lines
+          .assembleParagraphsKeepFirst(freshP, pars)
+          .withColumn("batch_seq", lit(batchId)))
+        sizedBatchOutput(assembled)
+          .write.mode("append").parquet(outDir)
+        // per-batch stage-yield funnel (the batch yieldReport's
+        // streaming face): (batch_seq, stage, n_docs) rows land
+        // NEXT TO the output with the same at-least-once / replay
+        // contract — a bad blocklist push or registry corruption
+        // shows up in the next trigger's funnel, not in tomorrow's
+        // nightly batch audit. Counts are O(batch) aggregates over
+        // frames the trigger materializes anyway.
+        if (funnelDir != null) {
+          import s2.implicits._
+          Seq(("0_raw", batch.count()),
+            ("1_blocklist", pages.count()),
+            ("2_line_clean", cleaned.count()),
+            ("3_paragraph_dedup", assembled.count()))
+            .toDF("stage", "n_docs")
+            .withColumn("batch_seq", lit(batchId))
+            .coalesce(1).write.mode("append").parquet(funnelDir)
         }
+        import s2.implicits._
+        // ONE atomic commit for both registries: O(batch) deltas
+        StormSinks.appendDeltaGroup(s2, stateDir,
+          appends = Seq(
+            "line_fps" -> freshL.select(col("fp")).distinct(),
+            "par_fps" -> freshP.select(col("fp")).distinct()),
+          replaces = Seq("meta" -> Seq((batchId, minWords.toLong))
+            .toDF("last_batch", "min_words")))
+        // auto-cadence: bound both registries' segment growth
+        if (autoCompactSegments > 0)
+          StormSinks.maintainGroupSegments(s2, stateDir, autoCompactSegments)
       }
-      .option("checkpointLocation", s"$checkpointDir/pretrain")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
   }
 
   /** [[compactRegistry]] for the [[startPretrainPrep]] group. */
@@ -1941,21 +1722,10 @@ object CorpusStream {
     * re-emitted in a later batch resolves to the NEWEST row
     * deterministically (the latestCleanLines collapse). Empty on cold
     * start. */
-  def latestParagraphDedup(spark: SparkSession, outDir: String): DataFrame = {
-    val t = try spark.read.parquet(outDir) catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        return spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("doc_id", LongType),
-            StructField("clean_text", StringType),
-            StructField("n_pars", LongType), StructField("n_removed", LongType))))
-    }
-    t.groupBy(col("doc_id"))
-      .agg(max(struct(col("batch_seq"), col("clean_text"), col("n_pars"),
-        col("n_removed"))).as("m"))
-      .select(col("doc_id"), col("m.clean_text").as("clean_text"),
-        col("m.n_pars").as("n_pars"), col("m.n_removed").as("n_removed"))
-  }
+  def latestParagraphDedup(spark: SparkSession, outDir: String): DataFrame =
+    newestPerDoc(spark, outDir, Seq("batch_seq"), StructType(Seq(
+      StructField("doc_id", LongType), StructField("clean_text", StringType),
+      StructField("n_pars", LongType), StructField("n_removed", LongType))))
 
   /** The line-clean stream's cleaned documents, duplicates collapsed.
     * A crash after the output append but before the state commit
@@ -1965,25 +1735,10 @@ object CorpusStream {
     * split; the batch_seq gate prevents the OTHER interleaving, where
     * a committed registry would wrongly swallow a replayed batch).
     * Empty on cold start. */
-  def latestCleanLines(spark: SparkSession, outDir: String): DataFrame = {
-    val t = try spark.read.parquet(outDir) catch {
-      case _: org.apache.spark.sql.AnalysisException =>
-        return spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          StructType(Seq(StructField("doc_id", LongType),
-            StructField("clean_text", StringType),
-            StructField("n_kept", LongType), StructField("n_lines", LongType))))
-    }
-    // a doc re-emitted in a later batch (re-crawl: its already-seen
-    // lines drop, only fresh lines survive) must resolve to the NEWEST
-    // row deterministically — a bare dropDuplicates would keep an
-    // arbitrary one
-    t.groupBy(col("doc_id"))
-      .agg(max(struct(col("batch_seq"), col("clean_text"), col("n_kept"),
-        col("n_lines"))).as("m"))
-      .select(col("doc_id"), col("m.clean_text").as("clean_text"),
-        col("m.n_kept").as("n_kept"), col("m.n_lines").as("n_lines"))
-  }
+  def latestCleanLines(spark: SparkSession, outDir: String): DataFrame =
+    newestPerDoc(spark, outDir, Seq("batch_seq"), StructType(Seq(
+      StructField("doc_id", LongType), StructField("clean_text", StringType),
+      StructField("n_kept", LongType), StructField("n_lines", LongType))))
 
   // ------------------------------------------ composed one-scan ingest
   /** Face selection for [[startCorpusIngest]]: a face is ON when its
@@ -2060,50 +1815,44 @@ object CorpusStream {
     val committed = math.max(
       faces.cardStateDir.map(d => readCardState(spark, d)._2).getOrElse(-1L),
       faces.driftStateDir.map(d => readDriftState(spark, d)._2).getOrElse(-1L))
-    requireCheckpointMatchesState(spark, s"$checkpointDir/ingest", committed,
+    StreamOps.requireCheckpointMatchesState(spark, checkpointDir, "ingest",
       "graft.CorpusStream.startCorpusIngest",
-      faces.cardStateDir.orElse(faces.driftStateDir).getOrElse("<none>"))
-    readDocuments(spark, inDir, maxFilesPerTrigger)
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        graft.Materialize.scoped {
-          val s2 = batch.sparkSession
-          // THE one-scan point: every face below consumes these
-          // materialized blocks, never the file source
-          val once = graft.Materialize.once(batch.toDF())
-          // with the funnel on, output frames gain a second consumer
-          // (their count) — materialize them so the counts ride the
-          // SAME frames the writes flowed through (the pretrain-prep
-          // funnel discipline)
-          def mat(df: DataFrame): DataFrame =
-            if (faces.funnelDir.isDefined) graft.Materialize.once(df) else df
-          val emitted = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-          def audit(face: String, out: DataFrame): Unit =
-            if (faces.funnelDir.isDefined) emitted += ((face, out.count()))
-          faces.chunksDir.foreach(d => audit("chunks", prepBatchBody(once, d, mat)))
-          faces.cleanOutDir.foreach(d =>
-            audit("clean", cleanBatchBody(once, benchmark, d, mat)))
-          faces.dedupOutDir.foreach(d =>
-            audit("dedup", dedupLakeBatchBody(once, faces.dedupLakeDir.get, d, mat)))
-          faces.driftOutDir.foreach(d =>
-            driftBatchBody(once, batchId, faces.driftRefDir.get,
-              faces.driftStateDir.get, d))
-          faces.cardStateDir.foreach(d => cardBatchBody(once, batchId, d))
-          faces.wmOutDir.foreach(d =>
-            audit("watermark", wmBatchBody(once, batchId, d, mat)))
-          faces.funnelDir.foreach { fd =>
-            import s2.implicits._
-            (("raw", once.count()) +: emitted.toSeq)
-              .toDF("face", "n_rows")
-              .withColumn("batch_seq", lit(batchId))
-              // one row per face: bounded by the face count, one file
-              .coalesce(1).write.mode("append").parquet(fd)
-          }
-          ()
-        }
+      faces.cardStateDir.orElse(faces.driftStateDir).getOrElse("<none>"),
+      committed >= 0, "republish empty state to start over")
+    StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
+      checkpointDir, "ingest") { (batch, batchId) =>
+      val s2 = batch.sparkSession
+      // THE one-scan point: every face below consumes these
+      // materialized blocks, never the file source
+      val once = graft.Materialize.once(batch)
+      // with the funnel on, output frames gain a second consumer
+      // (their count) — materialize them so the counts ride the
+      // SAME frames the writes flowed through (the pretrain-prep
+      // funnel discipline)
+      def mat(df: DataFrame): DataFrame =
+        if (faces.funnelDir.isDefined) graft.Materialize.once(df) else df
+      val emitted = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+      def audit(face: String, out: DataFrame): Unit =
+        if (faces.funnelDir.isDefined) emitted += ((face, out.count()))
+      faces.chunksDir.foreach(d => audit("chunks", prepBatchBody(once, d, mat)))
+      faces.cleanOutDir.foreach(d =>
+        audit("clean", cleanBatchBody(once, benchmark, d, mat)))
+      faces.dedupOutDir.foreach(d =>
+        audit("dedup", dedupLakeBatchBody(once, faces.dedupLakeDir.get, d, mat)))
+      faces.driftOutDir.foreach(d =>
+        driftBatchBody(once, batchId, faces.driftRefDir.get,
+          faces.driftStateDir.get, d))
+      faces.cardStateDir.foreach(d => cardBatchBody(once, batchId, d))
+      faces.wmOutDir.foreach(d =>
+        audit("watermark", wmBatchBody(once, batchId, d, mat)))
+      faces.funnelDir.foreach { fd =>
+        import s2.implicits._
+        (("raw", once.count()) +: emitted.toSeq)
+          .toDF("face", "n_rows")
+          .withColumn("batch_seq", lit(batchId))
+          // one row per face: bounded by the face count, one file
+          .coalesce(1).write.mode("append").parquet(fd)
       }
-      .option("checkpointLocation", s"$checkpointDir/ingest")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    }
   }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 import graft.storm.StormPipeline
 
@@ -65,36 +65,32 @@ object StormStream {
     * watermark above; finalized windows only). */
   def startWindowedCounts(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String): StreamingQuery =
-    windowedSeverityCounts(readWire(spark, inDir))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", s"$checkpointDir/windowed")
-      .outputMode("append")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamOps.startParquetSink(windowedSeverityCounts(readWire(spark, inDir)),
+      outDir, checkpointDir, "windowed")
 
   /** Quarantined poison pills: envelope + raw payload, counted not fatal. */
   def quarantined(wire: DataFrame): DataFrame =
     parsed(wire).where(!col("parse_ok")).select(col("event_id"), col("ts"))
 
-  /** Start the enrichment sink (parquet, checkpointed — at-least-once
-    * from the source's perspective, exactly-once to the file sink).
-    * With `metrics`, the parsed stream carries an observe() node whose
-    * per-batch counters surface in StreamingQueryProgress (rolled up by
+  /** Start the enrichment sink (at-least-once from the source's
+    * perspective, exactly-once to the file sink). With `metrics`, the
+    * parsed stream carries an observe() node whose per-batch counters
+    * surface in StreamingQueryProgress (rolled up by
     * StreamOps.StreamMetrics). */
   def startEnrichment(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String,
-      metrics: Option[graft.observability.Metrics] = None): StreamingQuery = {
-    val p = parsed(readWire(spark, inDir))
+      metrics: Option[graft.observability.Metrics] = None): StreamingQuery =
+    startEnrichmentFrom(readWire(spark, inDir), outDir, checkpointDir, metrics)
+
+  /** The one enrichment body behind the path and config entry points. */
+  private[streaming] def startEnrichmentFrom(wire: DataFrame, outDir: String,
+      checkpointDir: String,
+      metrics: Option[graft.observability.Metrics]): StreamingQuery = {
+    val p = parsed(wire)
     val instrumented = metrics.map(_.instrumentParsed(p)).getOrElse(p)
-    StormPipeline.enrich(instrumented.where(col("parse_ok")))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", s"$checkpointDir/enriched")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamOps.startParquetSink(
+      StormPipeline.enrich(instrumented.where(col("parse_ok"))),
+      outDir, checkpointDir, "enriched")
   }
 
   /** Enrichment with STATEFUL streaming dedup on the deterministic
@@ -105,33 +101,20 @@ object StormStream {
     * StormSinks.mergeById, same as the reference's DB upsert). */
   def startDedupedEnrichment(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String, lateness: String = "1 hour"): StreamingQuery =
-    enriched(readWire(spark, inDir))
+    StreamOps.startParquetSink(enriched(readWire(spark, inDir))
       .withColumn("event_time",
         to_timestamp(col("event_time_str"), "yyyy-MM-dd'T'HH:mm:ss'Z'"))
       .withWatermark("event_time", lateness)
       .dropDuplicatesWithinWatermark("id")
-      .drop("event_time")
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", s"$checkpointDir/deduped")
-      .trigger(Trigger.AvailableNow())
-      .start()
+      .drop("event_time"), outDir, checkpointDir, "deduped")
 
   /** Config-driven enrichment entry point: paths, micro-batch size
     * (`BATCH_SIZE` → maxFilesPerTrigger) and checkpoint root all from
     * [[graft.GraftConfig]] — the reference's env-configured startup
     * (`cmd/etl/main.go:20-33`) for the file-mode deployment. */
-  def startEnrichment(spark: SparkSession, cfg: graft.GraftConfig): StreamingQuery = {
-    val p = parsed(readWire(spark, cfg.sourceDir, maxFilesPerTrigger = cfg.batchSize))
-    StormPipeline.enrich(p.where(col("parse_ok")))
-      .writeStream
-      .format("parquet")
-      .option("path", cfg.sinkDir)
-      .option("checkpointLocation", s"${cfg.checkpointDir}/enriched")
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
+  def startEnrichment(spark: SparkSession, cfg: graft.GraftConfig): StreamingQuery =
+    startEnrichmentFrom(readWire(spark, cfg.sourceDir, cfg.batchSize),
+      cfg.sinkDir, cfg.checkpointDir, metrics = None)
 
   /** Config-driven quarantine sink (same env surface). */
   def startQuarantine(spark: SparkSession, cfg: graft.GraftConfig): StreamingQuery =
@@ -140,11 +123,6 @@ object StormStream {
   /** Start the quarantine sink. */
   def startQuarantine(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String): StreamingQuery =
-    quarantined(readWire(spark, inDir))
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", s"$checkpointDir/quarantine")
-      .trigger(Trigger.AvailableNow())
-      .start()
+    StreamOps.startParquetSink(quarantined(readWire(spark, inDir)), outDir,
+      checkpointDir, "quarantine")
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Stream-stream interval join (SURVEY §2 #67): purchases matched to
@@ -53,18 +53,12 @@ object StreamJoin {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(inDir)
 
-  /** Start the joined sink (parquet, checkpointed, AvailableNow): one
-    * events directory read as two filtered streams. */
+  /** Start the joined sink: one events directory read as two filtered
+    * streams. */
   def start(spark: SparkSession, inDir: String, outDir: String,
       checkpointDir: String, maxLagSec: Int, delay: String): StreamingQuery =
-    joined(
+    StreamOps.startParquetSink(joined(
         readEvents(spark, inDir).where(col("event_type") === "click"),
         readEvents(spark, inDir).where(col("event_type") === "purchase"),
-        maxLagSec, delay)
-      .writeStream
-      .format("parquet")
-      .option("path", outDir)
-      .option("checkpointLocation", s"$checkpointDir/join")
-      .trigger(Trigger.AvailableNow())
-      .start()
+        maxLagSec, delay), outDir, checkpointDir, "join")
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
 import java.util.concurrent.atomic.{AtomicBoolean, AtomicLong, AtomicLongArray}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, StreamingQueryListener}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryException, StreamingQueryListener, Trigger}
 import scala.util.control.NonFatal
 import graft.observability.Metrics
 
@@ -17,9 +17,80 @@ import graft.observability.Metrics
   *    ready-after-first-successful-batch signal);
   *  - restart-with-backoff supervision (pipeline.go:68-71,164-173):
   *    exponential backoff, capped attempts, at-least-once safe because
-  *    sources are checkpointed and the file sink is idempotent.
+  *    sources are checkpointed and the file sink is idempotent;
+  *  - the one way to start a face ([[startForeachBatch]],
+  *    [[startParquetSink]]) and the one checkpoint-lineage guard
+  *    ([[requireCheckpointMatchesState]]).
   */
 object StreamOps {
+
+  /** The micro-batch skeleton every foreachBatch face starts through:
+    * `source` → foreachBatch → `body` inside [[graft.Materialize.scoped]]
+    * → checkpoint `<checkpointDir>/<face>` → AvailableNow. The scope
+    * frees every frame a batch materializes once its writes land (the
+    * body must finish its terminal actions before returning), so block
+    * residue stays flat over a 24/7 stream. */
+  private[graft] def startForeachBatch(source: DataFrame, checkpointDir: String,
+      face: String)(body: (DataFrame, Long) => Unit): StreamingQuery =
+    source.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        graft.Materialize.scoped(body(batch, batchId))
+      }
+      .option("checkpointLocation", s"$checkpointDir/$face")
+      .trigger(Trigger.AvailableNow())
+      .start()
+
+  /** The parquet-sink skeleton for stream-native transforms: `out` →
+    * append-mode parquet file sink at `outDir` → checkpoint
+    * `<checkpointDir>/<face>` → AvailableNow. The file sink commits
+    * each batch once, so source replays never duplicate rows. */
+  private[graft] def startParquetSink(out: DataFrame, outDir: String,
+      checkpointDir: String, face: String): StreamingQuery =
+    out.writeStream
+      .format("parquet")
+      .option("path", outDir)
+      .option("checkpointLocation", s"$checkpointDir/$face")
+      .trigger(Trigger.AvailableNow())
+      .start()
+
+  /** The checkpoint-lineage guard, and the only code that lists a
+    * checkpoint's offsets. A face's state (or output) is keyed to the
+    * batch ids of the checkpoint it was written under; a checkpoint
+    * with no committed offsets restarts them at 0. Hadoop-FS resolved
+    * (a local file check would read every remote checkpoint as fresh)
+    * and keyed on committed offsets, not directory existence (a
+    * pre-created empty checkpoint is just as lineage-less).
+    *
+    * Rejects `stateUsed` (evaluated only against a fresh checkpoint)
+    * beside a fresh checkpoint. With `lostAs` ("wiped", "republished")
+    * it also rejects the inverse: committed offsets beside unused
+    * state, where the file source never replays the processed input
+    * and the state would undercount forever. `remedy` names the
+    * face's way to start over. */
+  private[graft] def requireCheckpointMatchesState(spark: SparkSession,
+      checkpointDir: String, face: String, caller: String, state: String,
+      stateUsed: => Boolean, remedy: String,
+      lostAs: Option[String] = None): Unit = {
+    val ckpt = s"$checkpointDir/$face"
+    val offsets = new org.apache.hadoop.fs.Path(s"$ckpt/offsets")
+    val fs = offsets.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fresh = !fs.exists(offsets) ||
+      !fs.listStatus(offsets).exists(st => !st.getPath.getName.startsWith("."))
+    if (fresh && stateUsed)
+      throw new IllegalStateException(
+        s"$caller: the state at $state is in use but the checkpoint at " +
+          s"$ckpt is fresh (no committed offsets): batch ids would restart " +
+          "at 0, out of line with the batch ids the state was written " +
+          s"under. Restore the original checkpoint, or $remedy.")
+    lostAs.foreach { how =>
+      if (!fresh && !stateUsed)
+        throw new IllegalStateException(
+          s"$caller: the checkpoint at $ckpt has committed offsets but the " +
+            s"state at $state has no committed batches: it was lost or " +
+            s"$how, and already-processed input would never be replayed. " +
+            "Restore the state, or start over with a fresh checkpoint.")
+    }
+  }
 
   /** Histogram bucket upper bounds (ms / rows). */
   val durationBucketsMs: Array[Long] = Array(10, 100, 1000, 10000, Long.MaxValue)
@@ -106,28 +177,28 @@ object StreamOps {
   /** Convenience: supervised enrichment run with metrics + readiness.
     * Returns (listener, restarts) after the AvailableNow query drains. */
   def runEnrichmentSupervised(spark: SparkSession, inDir: String, outDir: String,
-      checkpointDir: String, metrics: Option[Metrics] = None): (StreamMetrics, Int) = {
-    val listener = new StreamMetrics(metrics)
-    spark.streams.addListener(listener)
-    try {
-      val restarts = runSupervised(() =>
-        StormStream.startEnrichment(spark, inDir, outDir, checkpointDir, metrics))
-      (listener, restarts)
-    } finally spark.streams.removeListener(listener)
-  }
+      checkpointDir: String, metrics: Option[Metrics] = None): (StreamMetrics, Int) =
+    withStreamMetrics(spark, metrics)(runSupervised(() =>
+      StormStream.startEnrichmentFrom(StormStream.readWire(spark, inDir),
+        outDir, checkpointDir, metrics)))
 
   /** Config-driven supervised run: paths, restart cap and backoff
     * bounds from [[graft.GraftConfig]] (the reference's env-loaded
     * `config.Load()` + `pipeline.go:68-71` backoff constants). */
   def runEnrichmentSupervised(spark: SparkSession, cfg: graft.GraftConfig,
-      metrics: Option[Metrics]): (StreamMetrics, Int) = {
+      metrics: Option[Metrics]): (StreamMetrics, Int) =
+    withStreamMetrics(spark, metrics)(runSupervised(() =>
+      StormStream.startEnrichmentFrom(
+        StormStream.readWire(spark, cfg.sourceDir, cfg.batchSize),
+        cfg.sinkDir, cfg.checkpointDir, metrics),
+      maxRestarts = cfg.maxRestarts,
+      baseBackoffMs = cfg.backoffBaseMs, maxBackoffMs = cfg.backoffMaxMs))
+
+  private def withStreamMetrics(spark: SparkSession, metrics: Option[Metrics])(
+      run: => Int): (StreamMetrics, Int) = {
     val listener = new StreamMetrics(metrics)
     spark.streams.addListener(listener)
-    try {
-      val restarts = runSupervised(() => StormStream.startEnrichment(spark, cfg),
-        maxRestarts = cfg.maxRestarts,
-        baseBackoffMs = cfg.backoffBaseMs, maxBackoffMs = cfg.backoffMaxMs)
-      (listener, restarts)
-    } finally spark.streams.removeListener(listener)
+    try (listener, run)
+    finally spark.streams.removeListener(listener)
   }
 }

@@ -10,6 +10,16 @@ import graft.streaming.CorpusStream
   * checkpoint replay does not duplicate chunks. */
 class CorpusStreamSpec extends SparkSpec {
 
+  /** A reader's cold-start frame must carry the schema its warm reads
+    * return (column names and types; nullability ignored). */
+  private def assertColdSchema(cold: org.apache.spark.sql.DataFrame,
+      warm: org.apache.spark.sql.DataFrame): Unit = {
+    def shape(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.toSeq.map(f => f.name -> f.dataType)
+    assert(shape(cold) == shape(warm),
+      s"cold-start schema ${cold.schema.simpleString} != warm ${warm.schema.simpleString}")
+  }
+
   test("stream chunks == batch chunks; checkpoint replay is idempotent") {
     val base = Files.createTempDirectory("graft-corpus-stream").toString
     val docs = Tables.documents(spark, sfDir)
@@ -489,6 +499,17 @@ class CorpusStreamSpec extends SparkSpec {
       .awaitTermination()
     assert(spark.read.parquet(s"$base/out").count() == before,
       "replaying committed batches re-emitted terms")
+    // cold start: empty, with the warm reader's schema
+    val cold = CorpusStream.latestDriftTerms(spark, s"$base/never")
+    assert(cold.count() == 0)
+    assertColdSchema(cold, CorpusStream.latestDriftTerms(spark, s"$base/out"))
+    // freshness guard: used state + lineage-less checkpoint rejected
+    // (restarted batch ids would skip the first last_batch + 1 batches)
+    val e = intercept[IllegalStateException] {
+      CorpusStream.startDriftGate(spark, s"$base/in", s"$base/ref",
+        s"$base/state", s"$base/out", s"$base/cp-lost", maxFilesPerTrigger = 1)
+    }
+    assert(e.getMessage.contains("no committed offsets"), e.getMessage)
   }
 
   test("corpus card: cumulative counters == one batch aggregation; replay adds nothing") {
@@ -553,6 +574,8 @@ class CorpusStreamSpec extends SparkSpec {
       "replay changed the card")
     // cold start
     assert(CorpusStream.readCorpusCard(spark, s"$base/never").count() == 0)
+    assertColdSchema(CorpusStream.readCorpusCard(spark, s"$base/never"),
+      CorpusStream.readCorpusCard(spark, s"$base/state"))
     // bounded version history: the inline vacuum keeps the keep+1 = 3
     // newest version dirs PLUS the base whose fps segment the delta
     // manifests still reference (reference-aware retention)
@@ -618,6 +641,8 @@ class CorpusStreamSpec extends SparkSpec {
       "replay changed the mixer state")
     // cold start
     assert(CorpusStream.readDomainWeights(spark, s"$base/never").count() == 0)
+    assertColdSchema(CorpusStream.readDomainWeights(spark, s"$base/never"),
+      CorpusStream.readDomainWeights(spark, s"$base/state"))
     // bounded version history under the inline vacuum
     val vdirs = new java.io.File(s"$base/state").listFiles
       .count(_.getName.startsWith("v-"))
@@ -706,6 +731,10 @@ class CorpusStreamSpec extends SparkSpec {
       .orderBy(col("doc_id")).collect().map(_.toSeq).toSeq
     assert(gotV3 == wantV3,
       "post-recovery scores did not collapse to the republished version")
+    // cold start: empty, with the warm reader's schema
+    val cold = CorpusStream.latestClassifyScores(spark, s"$base/never")
+    assert(cold.count() == 0)
+    assertColdSchema(cold, CorpusStream.latestClassifyScores(spark, s"$base/out"))
   }
 
   test("line-clean stream: batch parity on one batch, cross-batch registry dedup, replay adds nothing") {
@@ -766,6 +795,8 @@ class CorpusStreamSpec extends SparkSpec {
     // the at-least-once reader: one row per doc, empty on cold start
     assert(CorpusStream.latestCleanLines(spark, s"$base/out").count() == 3)
     assert(CorpusStream.latestCleanLines(spark, s"$base/never-written").count() == 0)
+    assertColdSchema(CorpusStream.latestCleanLines(spark, s"$base/never-written"),
+      CorpusStream.latestCleanLines(spark, s"$base/out"))
     // the freshness guard: a used registry with a lineage-less
     // checkpoint must be rejected at start, not silently skip batches
     // (it is load-bearing against data loss — the replay gate would
@@ -850,6 +881,8 @@ class CorpusStreamSpec extends SparkSpec {
     assert(got == want, "single-batch stream diverged from batch dedupParagraphs")
     // cold start + freshness guard
     assert(CorpusStream.latestParagraphDedup(spark, s"$base/nowhere").count() == 0)
+    assertColdSchema(CorpusStream.latestParagraphDedup(spark, s"$base/nowhere"),
+      CorpusStream.latestParagraphDedup(spark, s"$base/out"))
     val e = intercept[IllegalStateException] {
       CorpusStream.startParagraphDedup(spark, s"$base/in", s"$base/state",
         s"$base/out", s"$base/cp-lost", maxFilesPerTrigger = 1)
@@ -1002,6 +1035,8 @@ class CorpusStreamSpec extends SparkSpec {
       "replay re-emitted funnel rows")
     // cold start
     assert(CorpusStream.readPretrainFunnel(spark, s"$base/never").count() == 0)
+    assertColdSchema(CorpusStream.readPretrainFunnel(spark, s"$base/never"),
+      CorpusStream.readPretrainFunnel(spark, s"$base/funnel"))
   }
 
   test("registry commits are O(batch): base segments untouched, deltas batch-sized, compaction folds") {
@@ -1245,6 +1280,9 @@ class CorpusStreamSpec extends SparkSpec {
     assert(wmRead.exceptAll(wmBatch).isEmpty &&
       wmBatch.exceptAll(wmRead).isEmpty,
       "watermark face diverged from the batch operator")
+    val wmCold = CorpusStream.latestWatermark(spark, s"$base/never")
+    assert(wmCold.count() == 0)
+    assertColdSchema(wmCold, wmRead)
     def cardMap(stateDir: String) = CorpusStream.readCorpusCard(spark, stateDir)
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.toSeq.drop(2))
       .toMap

@@ -69,6 +69,18 @@ class StormStreamSpec extends SparkSpec {
     assert(spark.read.parquet(cfg.sinkDir).count() == nTotal - nBad)
     assert(spark.read.parquet(cfg.quarantineDir).count() == nBad)
 
+    // the config-driven supervised run instruments the parse like the
+    // path-driven one: its Metrics count every wire row and poison pill
+    val m = new graft.observability.Metrics(spark)
+    try {
+      val supCfg = cfg.copy(sinkDir = s"$base/out-sup", checkpointDir = s"$base/cp-sup")
+      graft.streaming.StreamOps.runEnrichmentSupervised(spark, supCfg, Some(m))
+      org.apache.spark.graft.TestBus.drain(spark.sparkContext)
+      assert(m.snapshot("rows_in") == nTotal)
+      assert(m.snapshot("poison_pills") == nBad)
+      assert(spark.read.parquet(supCfg.sinkDir).count() == nTotal - nBad)
+    } finally m.unregister()
+
     // the ops surface binds on the configured port (0 = ephemeral)
     val srv = graft.observability.OpsServer.start(cfg, () => true, () => Map("up" -> 1L))
     try {
