@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.functions.Text
+import graft.sources.StormSinks
 
 /** Deduplication operators for 100 TB training-data prep.
   *
@@ -308,18 +309,20 @@ object Dedup {
     * republishes without a restart. */
   def minhashPairsLakeVsIndex(dir: String, batchIndex: DataFrame,
       bands: Int = 8, rowsPerBand: Int = 4, threshold: Double = 0.5): DataFrame =
-    minhashPairsLakeVsIndexAt(
-      graft.sources.StormSinks.currentVersionDir(batchIndex.sparkSession, dir),
+    minhashPairsLakeVsIndexAt(dir,
+      StormSinks.currentVersionName(batchIndex.sparkSession, dir),
       batchIndex, bands, rowsPerBand, threshold)
 
   /** [[minhashPairsLakeVsIndex]] against an already-RESOLVED group
-    * version dir (callers composing several reads of one snapshot). */
-  private[graft] def minhashPairsLakeVsIndexAt(ver: String, batchIndex: DataFrame,
-      bands: Int = 8, rowsPerBand: Int = 4, threshold: Double = 0.5): DataFrame = {
+    * version `verName` of `dir` (callers composing several reads of
+    * one snapshot). */
+  private[graft] def minhashPairsLakeVsIndexAt(dir: String, verName: String,
+      batchIndex: DataFrame, bands: Int = 8, rowsPerBand: Int = 4,
+      threshold: Double = 0.5): DataFrame = {
     val spark = batchIndex.sparkSession
     val parts = spark.sessionState.conf.numShufflePartitions
-    val corpusBands = spark.read.parquet(s"$ver/bands")
-    val setsO = spark.read.parquet(s"$ver/sets")
+    val corpusBands = StormSinks.readGroupTableAt(spark, dir, verName, "bands")
+    val setsO = StormSinks.readGroupTableAt(spark, dir, verName, "sets")
     val sigN = batchIndex
     val a = bandedOf(sigN, bands, rowsPerBand)
       .select(col("band"), col("bucket"), col("doc_id").as("doc_new"))
@@ -959,10 +962,10 @@ object Dedup {
     * `jaccardPairs(corpus)` (DedupSpec pins it). */
   def jaccardPairsLake(spark: org.apache.spark.sql.SparkSession,
       dir: String, threshold: Double = 0.5): DataFrame = {
-    val ver = graft.sources.StormSinks.currentVersionDir(spark, dir)
+    val ver = StormSinks.currentVersionName(spark, dir)
     val parts = spark.sessionState.conf.numShufflePartitions
-    val prefix = spark.read.parquet(s"$ver/prefix")
-    val sets = spark.read.parquet(s"$ver/sets")
+    val prefix = StormSinks.readGroupTableAt(spark, dir, ver, "prefix")
+    val sets = StormSinks.readGroupTableAt(spark, dir, ver, "sets")
     val a = prefix.select(col("s"), col("doc_id").as("doc_a"),
       col("n_sh").as("n_a"), col("rk").as("rk_a"))
     val b = prefix.select(col("s"), col("doc_id").as("doc_b"),
@@ -994,22 +997,21 @@ object Dedup {
   def jaccardPairsTouchingLake(spark: org.apache.spark.sql.SparkSession,
       dir: String, freshDocs: DataFrame, batchIds: DataFrame,
       k: Int = 2, threshold: Double = 0.5): DataFrame =
-    jaccardPairsTouchingLakeAt(
-      graft.sources.StormSinks.currentVersionDir(spark, dir),
+    jaccardPairsTouchingLakeAt(dir, StormSinks.currentVersionName(spark, dir),
       freshDocs, batchIds, k, threshold)
 
   /** [[jaccardPairsTouchingLake]] against an already-RESOLVED version
-    * dir — callers composing several reads of the same index
-    * (incremental clustering) resolve the pointer once for a
+    * `verName` of `dir` — callers composing several reads of the same
+    * index (incremental clustering) resolve the pointer once for a
     * consistent snapshot. */
-  private[graft] def jaccardPairsTouchingLakeAt(ver: String,
+  private[graft] def jaccardPairsTouchingLakeAt(dir: String, verName: String,
       freshDocs: DataFrame, batchIds: DataFrame,
       k: Int, threshold: Double): DataFrame = {
     val spark = freshDocs.sparkSession
     val parts = spark.sessionState.conf.numShufflePartitions
-    val dfsL = spark.read.parquet(s"$ver/dfs")
-    val prefixL = spark.read.parquet(s"$ver/prefix")
-    val setsL = spark.read.parquet(s"$ver/sets")
+    val dfsL = StormSinks.readGroupTableAt(spark, dir, verName, "dfs")
+    val prefixL = StormSinks.readGroupTableAt(spark, dir, verName, "prefix")
+    val setsL = StormSinks.readGroupTableAt(spark, dir, verName, "sets")
     // fresh-set count rides the checkpoint job as an observed metric
     // (the broadcast-vs-shuffle dial below) instead of a second action
     val (freshSets, freshN) = graft.Materialize.onceCounted(
@@ -1126,13 +1128,14 @@ object Dedup {
       indexDir: String, corpusLabels: DataFrame, priorFresh: DataFrame,
       batchDocs: DataFrame, k: Int = 2, threshold: Double = 0.5): DataFrame =
     // one pointer resolution = one consistent index snapshot
-    incrementalClustersLakeAt(
-      graft.sources.StormSinks.currentVersionDir(spark, indexDir),
+    incrementalClustersLakeAt(indexDir,
+      StormSinks.currentVersionName(spark, indexDir),
       corpusLabels, priorFresh, batchDocs, k, threshold)
 
   /** [[incrementalClustersLake]] against an already-RESOLVED index
-    * version dir (streaming callers resolve per micro-batch). */
-  private[graft] def incrementalClustersLakeAt(ver: String,
+    * version `verName` of `dir` (streaming callers resolve per
+    * micro-batch). */
+  private[graft] def incrementalClustersLakeAt(dir: String, verName: String,
       corpusLabels: DataFrame, priorFresh: DataFrame,
       batchDocs: DataFrame, k: Int = 2, threshold: Double = 0.5): DataFrame = {
     val spark = batchDocs.sparkSession
@@ -1142,7 +1145,7 @@ object Dedup {
     val prior = priorFresh.select(col("doc_id"), col("text"))
       .join(broadcast(bIds), Seq("doc_id"), "left_anti")
     val fresh = prior.unionByName(batch)
-    val pairs = jaccardPairsTouchingLakeAt(ver, fresh, bIds, k, threshold)
+    val pairs = jaccardPairsTouchingLakeAt(dir, verName, fresh, bIds, k, threshold)
     // corpus side for labeling = indexed docs + prior fresh, each id
     // once: the batch anti-joins out (a re-delivered batch may sit in
     // a republished index), and prior ids anti-join the INDEX side
@@ -1150,7 +1153,8 @@ object Dedup {
     // before the maintainer's fresh-reset landed, prior ⊆ indexed and
     // a plain union would emit duplicate label rows (fresh shadows
     // the lake in the probe for the same reason)
-    val lakeIds = spark.read.parquet(s"$ver/sets").select(col("doc_id"))
+    val lakeIds = StormSinks.readGroupTableAt(spark, dir, verName, "sets")
+      .select(col("doc_id"))
       .join(broadcast(bIds), Seq("doc_id"), "left_anti")
       .join(prior.select(col("doc_id")), Seq("doc_id"), "left_anti")
     val corpusIds = lakeIds.unionByName(prior.select(col("doc_id")))
@@ -1226,11 +1230,11 @@ object Dedup {
   }
 
   /** [[incrementalClustersDelta]] against a RESOLVED
-    * [[publishJaccardLake]] index version (the
+    * [[publishJaccardLake]] index version `verName` of `dir` (the
     * [[incrementalClustersLakeAt]] probe shape): batch-and-fresh-sized
     * ranking, columnar index scans, changed-labels-only output. Same
     * full-coverage contract on `corpusLabels`. */
-  private[graft] def incrementalClustersLakeAtDelta(ver: String,
+  private[graft] def incrementalClustersLakeAtDelta(dir: String, verName: String,
       corpusLabels: DataFrame, priorFresh: DataFrame,
       batchDocs: DataFrame, k: Int = 2, threshold: Double = 0.5): DataFrame = {
     val batch = graft.Materialize.once(
@@ -1239,7 +1243,7 @@ object Dedup {
     val prior = priorFresh.select(col("doc_id"), col("text"))
       .join(broadcast(bIds), Seq("doc_id"), "left_anti")
     val fresh = prior.unionByName(batch)
-    val pairs = jaccardPairsTouchingLakeAt(ver, fresh, bIds, k, threshold)
+    val pairs = jaccardPairsTouchingLakeAt(dir, verName, fresh, bIds, k, threshold)
     quotientMergeDelta(pairs, corpusLabels, bIds)
   }
 

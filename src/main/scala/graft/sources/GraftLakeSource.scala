@@ -83,9 +83,7 @@ class GraftLakeSource extends TableProvider with DataSourceRegister {
         // _segments manifest at the version dir — a bare-path read
         // would die in parquet schema inference with an opaque error,
         // so diagnose it here and name the fix
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-        if (fs.exists(new org.apache.hadoop.fs.Path(s"$dir/$verName/_segments")))
+        if (StormSinks.isSegmented(spark, dir, verName))
           throw new IllegalArgumentException(
             s"graftlake: $dir/$verName is a segmented GROUP version (it " +
               "carries a _segments manifest, not parquet data); pass " +

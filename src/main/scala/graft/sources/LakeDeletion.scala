@@ -52,17 +52,6 @@ object LakeDeletion {
   private def ids(del: DataFrame): DataFrame =
     del.select(col("doc_id")).dropDuplicates("doc_id")
 
-  /** Table subdirectories of a resolved version dir — EVERY table of
-    * the group snapshot, so a rewrite can never silently drop one. */
-  private def tablesOf(spark: SparkSession, ver: String): Seq[String] = {
-    val p = new org.apache.hadoop.fs.Path(ver)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .listStatus(p).toSeq
-      .filter(st => st.isDirectory && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .map(_.getPath.getName).sorted
-  }
-
   /** Delete from a [[graft.operators.Dedup.publishMinhashLake]] split
     * index: anti-join both tables of the current group snapshot and
     * commit them as ONE new group version — a crash mid-delete leaves
@@ -87,16 +76,16 @@ object LakeDeletion {
       deleteIds: DataFrame, alsoFilterByDoc: Seq[String] = Nil,
       passThrough: Seq[String] = Nil): Unit = graft.Materialize.scoped {
     val del = graft.Materialize.once(ids(deleteIds))
-    val ver = StormSinks.currentVersionDir(spark, dir)
-    def filtered(name: String) = spark.read.parquet(s"$ver/$name")
-      .join(broadcast(del), Seq("doc_id"), "left_anti")
-    val tables = tablesOf(spark, ver).map { n =>
-      val df = spark.read.parquet(s"$ver/$n")
+    val ver = StormSinks.currentVersionName(spark, dir)
+    // EVERY table of the group snapshot, so a rewrite can never
+    // silently drop one
+    val tables = StormSinks.groupTablesAt(spark, dir, ver).map { n =>
+      val df = StormSinks.readGroupTableAt(spark, dir, ver, n)
       val filter =
         if (passThrough.contains(n)) false
         else if (alsoFilterByDoc.contains(n) || n == "bands" || n == "sets") true
         else df.columns.contains("doc_id")
-      n -> (if (filter) filtered(n) else df)
+      n -> (if (filter) df.join(broadcast(del), Seq("doc_id"), "left_anti") else df)
     }
     StormSinks.writeVersionedGroup(spark, dir, tables,
       partitionCols = Map("bands" -> Seq("band")))
@@ -115,11 +104,11 @@ object LakeDeletion {
       remainingDocs: DataFrame, deleteIds: DataFrame): Unit =
     graft.Materialize.scoped {
       val del = graft.Materialize.once(ids(deleteIds))
-      val ver = StormSinks.currentVersionDir(spark, dir)
+      val ver = StormSinks.currentVersionName(spark, dir)
       StormSinks.writeVersionedGroup(spark, dir, Seq(
         "bm25" -> graft.operators.PipelineQueries.bm25WeightsOf(
           remainingDocs.select(col("doc_id"), col("text"))),
-        "dense" -> spark.read.parquet(s"$ver/dense")
+        "dense" -> StormSinks.readGroupTableAt(spark, dir, ver, "dense")
           .join(broadcast(del.select(col("doc_id").as("vec_id"))),
             Seq("vec_id"), "left_anti")))
       ()
@@ -142,16 +131,19 @@ object LakeDeletion {
       deleteIds: DataFrame): Unit = graft.Materialize.scoped {
     val del = graft.Materialize.once(
       ids(deleteIds).select(col("doc_id").as("vec_id")))
-    val ver = StormSinks.currentVersionDir(spark, dir)
+    // segment-aware: vectors appended by Pq.appendToIvfPqLake live in
+    // delta segments and must survive the rewrite
+    val ver = StormSinks.currentVersionName(spark, dir)
+    def table(name: String) = StormSinks.readGroupTableAt(spark, dir, ver, name)
     StormSinks.writeVersionedGroup(spark, dir, Seq(
-      "coarse" -> spark.read.parquet(s"$ver/coarse"),
-      "books" -> spark.read.parquet(s"$ver/books"),
-      "codes" -> spark.read.parquet(s"$ver/codes")
+      "coarse" -> table("coarse"),
+      "books" -> table("books"),
+      "codes" -> table("codes")
         .join(broadcast(del), Seq("vec_id"), "left_anti"),
-      "vectors" -> spark.read.parquet(s"$ver/vectors")
+      "vectors" -> table("vectors")
         .withColumn("cell_id", col("cell_id").cast("long"))
         .join(broadcast(del), Seq("vec_id"), "left_anti"),
-      "meta" -> spark.read.parquet(s"$ver/meta")),
+      "meta" -> table("meta")),
       partitionCols = Map("vectors" -> Seq("cell_id")))
     ()
   }

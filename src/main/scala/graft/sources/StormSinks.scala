@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** Write surface for enriched storm events — the Spark-native
   * equivalent of the reference's Kafka produce + Postgres upsert
-  * (/root/reference/internal/pipeline): a partitioned parquet lake
-  * layout plus an idempotent-merge writer.
+  * (its internal/pipeline package): a partitioned parquet lake
+  * layout plus an idempotent-merge writer — and the ONE owner of the
+  * versioned-lake layout every published index and state group uses.
   *
   * Scale notes: partitioning by (event_type, event_date) gives
   * partition pruning on the two dominant predicates (type filters and
@@ -14,8 +15,34 @@ import org.apache.spark.sql.functions._
   * partition. The merge writer reproduces the reference's
   * ON CONFLICT DO NOTHING semantics on the deterministic event ID,
   * which is what makes at-least-once replays collapse.
+  *
+  * Versioned lakes: the on-disk layout (the `_current` pointer, `v-N`
+  * version dirs, `_segments` manifests vs whole-table subdirs, shared
+  * `seg-K` delta dirs) is known only here. Library code resolves a
+  * snapshot once with [[currentVersionName]], reads a table of it only
+  * through [[readGroupTableAt]] / [[readGroupTableKeyedAt]] (both
+  * segment-aware; a single-segment table is one plain parquet read)
+  * and lists its tables with [[groupTablesAt]]; `LakeReadPathSpec`
+  * keeps it that way.
   */
 object StormSinks {
+
+  // ------------------------------------------------- storm lake layout
+  /** The storm lake's partition columns, event_date being the day
+    * prefix of event_time_str ([[withEventDate]]). */
+  private val LakePartitions = Seq("event_type", "event_date")
+
+  private def withEventDate(enriched: DataFrame): DataFrame =
+    enriched.withColumn("event_date", substring(col("event_time_str"), 1, 10))
+
+  /** Re-pack a lake read for compaction: repartition on (partition
+    * cols + a bounded salt), so each lake partition's rows land in
+    * exactly `targetFiles` tasks — per-partition file count control
+    * that stays parallel ACROSS partitions (a plain repartition(n)
+    * would serialize everything through n tasks total). */
+  private def repacked(lake: DataFrame, targetFiles: Int): DataFrame =
+    lake.repartition(LakePartitions.map(col) :+
+      pmod(xxhash64(col("id")), lit(targetFiles.toLong)): _*)
 
   /** Append enriched events as parquet partitioned by
     * (event_type, event_date). `maxRecordsPerFile` bounds file size
@@ -23,10 +50,8 @@ object StormSinks {
     * splittable files. */
   def writePartitioned(enriched: DataFrame, outDir: String,
       maxRecordsPerFile: Long = 5000000L): Unit =
-    enriched
-      .withColumn("event_date", substring(col("event_time_str"), 1, 10))
-      .write
-      .partitionBy("event_type", "event_date")
+    withEventDate(enriched).write
+      .partitionBy(LakePartitions: _*)
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .mode("append")
       .parquet(outDir)
@@ -58,17 +83,9 @@ object StormSinks {
   def compact(spark: org.apache.spark.sql.SparkSession, dir: String,
       targetFiles: Int = 1): Unit = {
     require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
-    val df = spark.read.parquet(dir)
     val tmp = dir + ".compact-tmp"
-    // repartition on (partition cols + a bounded salt): each lake
-    // partition's rows land in exactly `targetFiles` tasks — per-
-    // partition file count control that stays parallel ACROSS
-    // partitions (a plain repartition(n) would serialize everything
-    // through n tasks total)
-    df.repartition(col("event_type"), col("event_date"),
-        pmod(xxhash64(col("id")), lit(targetFiles.toLong)))
-      .write
-      .partitionBy("event_type", "event_date")
+    repacked(spark.read.parquet(dir), targetFiles).write
+      .partitionBy(LakePartitions: _*)
       .mode("overwrite")
       .parquet(tmp)
     val fs = org.apache.hadoop.fs.FileSystem.get(
@@ -127,9 +144,13 @@ object StormSinks {
       val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
         finally in.close()
       require(s.matches("v-[0-9]+"), s"corrupt _current pointer: '$s'")
-      Some(s.stripPrefix("v-").toInt -> s)
+      Some(versionNumber(s) -> s)
     }
   }
+
+  /** The number N of a version name `v-N`. */
+  private[graft] def versionNumber(verName: String): Int =
+    verName.stripPrefix("v-").toInt
 
   /** Publish `version` as current: write the pointer to a temp name,
     * then ONE overwrite-rename onto _current. `FileContext.rename`
@@ -173,18 +194,8 @@ object StormSinks {
     * it. Returns the published version number. Old versions are kept
     * (see [[vacuumVersions]]) so in-flight readers finish against the
     * immutable dir they resolved. */
-  def writeVersioned(df: DataFrame, dir: String): Int = {
-    val spark = df.sparkSession
-    val fs = fsFor(spark, dir)
-    val next = readPointer(fs, dir).map(_._1 + 1).getOrElse(0)
-    df.withColumn("event_date", substring(col("event_time_str"), 1, 10))
-      .write
-      .partitionBy("event_type", "event_date")
-      .mode("overwrite")
-      .parquet(s"$dir/v-$next")
-    publish(fs, dir, next)
-    next
-  }
+  def writeVersioned(df: DataFrame, dir: String): Int =
+    writeVersionedTable(withEventDate(df), dir, LakePartitions)
 
   /** Versioned-pointer publish of an ARBITRARY table — the generic
     * counterpart of [[writeVersioned]] (which writes the storm
@@ -219,8 +230,8 @@ object StormSinks {
     * version, so readers and checkpoint replays NEVER observe table A
     * from version N with table B from version N−1 (the half-commit
     * the per-table layout permits). Readers resolve the pointer once
-    * via [[currentVersionDir]] and read `<ver>/<name>` for each
-    * table — one resolution = one consistent snapshot. */
+    * via [[currentVersionName]] and read each table through
+    * [[readGroupTableAt]] — one resolution = one consistent snapshot. */
   def writeVersionedGroup(spark: org.apache.spark.sql.SparkSession,
       dir: String, tables: Seq[(String, DataFrame)],
       partitionCols: Map[String, Seq[String]] = Map.empty): Int = {
@@ -314,7 +325,10 @@ object StormSinks {
 
   /** Basename (`v-N`) of the current version — the handle for the
     * `...At` readers, so one resolution covers a whole multi-table
-    * read (the [[currentVersionDir]] consistency discipline). */
+    * read. The one pointer resolver: a missing pointer is retried
+    * briefly before failing — on filesystems where [[publish]] had to
+    * take the non-atomic fallback there is a sub-millisecond window
+    * with no pointer, and one retry hides it from 24/7 readers. */
   def currentVersionName(spark: org.apache.spark.sql.SparkSession,
       dir: String): String = {
     val fs = fsFor(spark, dir)
@@ -322,6 +336,12 @@ object StormSinks {
     ptr.getOrElse(throw new java.io.FileNotFoundException(
       s"no _current pointer under $dir"))._2
   }
+
+  /** Whether version `verName` is segmented (carries a manifest
+    * instead of table subdirs). */
+  private[graft] def isSegmented(spark: org.apache.spark.sql.SparkSession,
+      dir: String, verName: String): Boolean =
+    fsFor(spark, dir).exists(new org.apache.hadoop.fs.Path(s"$dir/$verName/$ManifestName"))
 
   /** Table names of the group at version `verName` (manifest tables,
     * or the legacy subdir listing). */
@@ -402,10 +422,7 @@ object StormSinks {
       dir: String, verName: String, name: String,
       keys: Seq[String]): DataFrame = {
     val segs = segmentsAt(spark, dir, verName, name)
-    if (segs.isEmpty)
-      throw new java.io.FileNotFoundException(
-        s"group table '$name' not present in $dir/$verName")
-    if (segs.size == 1) return spark.read.parquet(segs.head)
+    if (segs.size <= 1) return readGroupTableAt(spark, dir, verName, name)
     val u = segs.zipWithIndex
       .map { case (p, i) => spark.read.parquet(p).withColumn("__seg", lit(i)) }
       .reduce(_.unionByName(_, allowMissingColumns = true))
@@ -598,19 +615,12 @@ object StormSinks {
       dir: String, name: String): DataFrame =
     readGroupTableAt(spark, dir, currentVersionName(spark, dir), name)
 
-  /** Resolve the live immutable version dir (`$dir/v-N` named by
-    * `_current`). A missing pointer is retried briefly before failing:
-    * on filesystems where [[publish]] had to take the non-atomic
-    * fallback there is a sub-millisecond window with no pointer, and
-    * one retry hides it from 24/7 readers. Also the resolution step of
-    * the `graftlake` DataSourceV2 format ([[GraftLakeSource]]). */
-  def currentVersionDir(spark: org.apache.spark.sql.SparkSession, dir: String): String = {
-    val fs = fsFor(spark, dir)
-    val ptr = readPointer(fs, dir).orElse { Thread.sleep(100); readPointer(fs, dir) }
-    val (_, name) = ptr.getOrElse(
-      throw new java.io.FileNotFoundException(s"no _current pointer under $dir"))
-    s"$dir/$name"
-  }
+  /** The live immutable version dir (`$dir/v-N` named by `_current`,
+    * resolved by [[currentVersionName]]) — for whole-version readers
+    * of a single-table lake ([[readVersioned]]); group tables read
+    * through [[readGroupTableAt]]. */
+  def currentVersionDir(spark: org.apache.spark.sql.SparkSession, dir: String): String =
+    s"$dir/${currentVersionName(spark, dir)}"
 
   /** Read the current version (resolves _current, reads the immutable
     * version dir — never racing a swap). */
@@ -624,18 +634,8 @@ object StormSinks {
   def compactVersioned(spark: org.apache.spark.sql.SparkSession, dir: String,
       targetFiles: Int = 1): Int = {
     require(targetFiles > 0, s"targetFiles must be positive, got $targetFiles")
-    val fs = fsFor(spark, dir)
-    val (n, name) = readPointer(fs, dir).getOrElse(
-      throw new java.io.FileNotFoundException(s"no _current pointer under $dir"))
-    spark.read.parquet(s"$dir/$name")
-      .repartition(col("event_type"), col("event_date"),
-        pmod(xxhash64(col("id")), lit(targetFiles.toLong)))
-      .write
-      .partitionBy("event_type", "event_date")
-      .mode("overwrite")
-      .parquet(s"$dir/v-${n + 1}")
-    publish(fs, dir, n + 1)
-    n + 1
+    writeVersionedTable(repacked(readVersioned(spark, dir), targetFiles), dir,
+      LakePartitions)
   }
 
   /** Delete version dirs older than the current minus `keep` (the
@@ -662,25 +662,33 @@ object StormSinks {
     fs.listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
       .map(_.getPath)
       .filter(p => p.getName.matches("v-[0-9]+") &&
-        p.getName.stripPrefix("v-").toInt < cur - keep &&
+        versionNumber(p.getName) < cur - keep &&
         !referenced.contains(p.getName))
       .map { p => fs.delete(p, true); p.getName }
   }
 
-  /** Idempotent merge into an existing lake dir: drop incoming rows
-    * whose deterministic `id` already exists (ON CONFLICT DO NOTHING,
-    * reference transform.go:127-139 rationale), then append the rest.
-    * The anti-join reads only the `id` column of the target (column
-    * pruning) and broadcasts nothing — it shuffles on the 8-byte id. */
-  def mergeById(enriched: DataFrame, outDir: String): Long = {
+  /** Idempotent merge into a lake dir: keep one row per deterministic
+    * `id`, the first arrival (smallest `event_id`), drop the ids the
+    * lake already holds (ON CONFLICT DO NOTHING, reference
+    * transform.go:127-139 rationale), append the rest and return how
+    * many rows were written. The anti-join reads only the `id` column
+    * of the target (column pruning) and broadcasts nothing — it
+    * shuffles on the 8-byte id. A lake dir that exists but cannot be
+    * read fails the merge instead of reading as "no lake". */
+  def mergeById(enriched: DataFrame, outDir: String): Long = graft.Materialize.scoped {
     val spark = enriched.sparkSession
-    val existing =
-      try spark.read.parquet(outDir).select(col("id"))
-      catch { case _: Throwable => return { writePartitioned(enriched, outDir); enriched.count() } }
-    val fresh = graft.Materialize.once( // materialize BEFORE writing into the dir we read
-      enriched.join(existing, Seq("id"), "left_anti"))
-    val n = fresh.count()
-    if (n > 0) writePartitioned(fresh, outDir)
+    val rest = enriched.columns.filterNot(c => c == "id" || c == "event_id")
+    val first = enriched.groupBy(col("id"))
+      .agg(min(struct((col("event_id") +: rest.map(col)): _*)).as("__first"))
+      .select(enriched.columns.map(c =>
+        if (c == "id") col(c) else col("__first").getField(c).as(c)): _*)
+    val fresh =
+      if (!fsFor(spark, outDir).exists(new org.apache.hadoop.fs.Path(outDir))) first
+      else first.join(spark.read.parquet(outDir).select(col("id")), Seq("id"), "left_anti")
+    // materialize BEFORE writing into the dir we read; the count rides
+    // the checkpoint job
+    val (rows, n) = graft.Materialize.onceCounted(fresh, count(lit(1)))
+    if (n > 0) writePartitioned(rows, outDir)
     n
   }
 }

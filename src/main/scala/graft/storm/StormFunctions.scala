@@ -166,24 +166,17 @@ object StormFunctions {
 
   /** "8 ESE Chappel" -> place name; unparseable -> raw (transform.go:275-300). */
   def locationName(location: Column): Column = {
-    val t = trim(location)
-    val dir = regexp_extract(t, locRe, 2)
-    when(t === "", lit("")).when(dir =!= "", trim(regexp_extract(t, locRe, 3))).otherwise(t)
+    val p = locationParts(location).toMap
+    locationNameFromParts(p("loc_t"), p("loc_dir_s"), p("loc_name_s"))
   }
 
   /** Distance component; null when unparseable. */
-  def locationDistance(location: Column): Column = {
-    val t = trim(location)
-    val d = regexp_extract(t, locRe, 1)
-    when(d =!= "", d.cast("double")).otherwise(lit(null).cast("double"))
-  }
+  def locationDistance(location: Column): Column =
+    locationDistanceFromParts(locationParts(location).toMap.apply("loc_dist_s"))
 
   /** Compass direction component; null when unparseable. */
-  def locationDirection(location: Column): Column = {
-    val t = trim(location)
-    val d = regexp_extract(t, locRe, 2)
-    when(d =!= "", d).otherwise(lit(null).cast("string"))
-  }
+  def locationDirection(location: Column): Column =
+    locationDirectionFromParts(locationParts(location).toMap.apply("loc_dir_s"))
 
   /** One-pass location parse for staged pipelines: trimmed input plus
     * the three locRe capture groups, meant to be select-ed as

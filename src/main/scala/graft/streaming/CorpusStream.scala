@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 import graft.functions.Text
 import graft.operators.Sampling
+import graft.sources.StormSinks
 
 /** Streaming corpus prep: the training-data pipeline as documents
   * arrive, instead of as a nightly batch.
@@ -292,27 +293,25 @@ object CorpusStream {
       outDir: String, mat: DataFrame => DataFrame = identity): DataFrame = {
     import graft.operators.Dedup
     val s2 = batch.sparkSession
-    val ver = graft.sources.StormSinks.currentVersionDir(s2, lakeDir)
+    val ver = StormSinks.currentVersionName(s2, lakeDir)
     val batchIdx = Dedup.minhashIndex(batch.select(col("doc_id"), col("text")))
     val near = Dedup
-      .minhashPairsLakeVsIndexAt(ver, batchIdx, threshold = 0.2)
+      .minhashPairsLakeVsIndexAt(lakeDir, ver, batchIdx, threshold = 0.2)
       .select(col("doc_new").as("doc_id")).distinct()
-    val fps = s2.read.parquet(s"$ver/fps")
+    val fps = StormSinks.readGroupTableAt(s2, lakeDir, ver, "fps")
     // Bloom fast path (lakes published since the bitmap rode the
     // group): docs whose probe reads false are DEFINITELY not in fps
     // (no false negatives), so only the maybe-set pays the anti-join —
     // on a mostly-fresh ingest the corpus-sized fps table joins
     // against ~0 rows. Legacy lakes without the bitmap take the plain
     // anti-join; classification is identical either way.
-    val bloomPath = new org.apache.hadoop.fs.Path(s"$ver/bloom")
-    val hasBloom = bloomPath
-      .getFileSystem(s2.sessionState.newHadoopConf()).exists(bloomPath)
+    val hasBloom = StormSinks.groupTablesAt(s2, lakeDir, ver).contains("bloom")
     val fpd = batch.withColumn("fp", Text.fingerprint(col("text")))
     val exactFresh =
       if (!hasBloom) fpd.join(fps, Seq("fp"), "left_anti")
       else {
         val probed = fpd
-          .crossJoin(broadcast(s2.read.parquet(s"$ver/bloom")))
+          .crossJoin(broadcast(StormSinks.readGroupTableAt(s2, lakeDir, ver, "bloom")))
           .withColumn("maybe", graft.expressions.native.bloomContains(
             col("bitmap"), graft.operators.Dedup.bloomPositions(col("text"))))
           .drop("bitmap")
@@ -385,7 +384,6 @@ object CorpusStream {
     * one. Segment-aware (meta may live in a delta segment). */
   private[graft] def validateClusterMeta(spark: SparkSession, dir: String,
       verName: String, k: Int, threshold: Double, caller: String): Unit = {
-    import graft.sources.StormSinks
     if (StormSinks.groupTablesAt(spark, dir, verName).contains("meta")) {
       val r = StormSinks.readGroupTableAt(spark, dir, verName, "meta").head()
       val (pk, pt) = (r.getAs[Int]("k"), r.getAs[Double]("threshold"))
@@ -405,7 +403,6 @@ object CorpusStream {
     * through the latest-wins collapse; `docs` segments are disjoint
     * appends and read as a plain union. */
   def readClusterLake(spark: SparkSession, dir: String, name: String): DataFrame = {
-    import graft.sources.StormSinks
     val ver = StormSinks.currentVersionName(spark, dir)
     if (name == "labels")
       StormSinks.readGroupTableKeyedAt(spark, dir, ver, name, Seq("doc_id"))
@@ -477,7 +474,6 @@ object CorpusStream {
     StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
       checkpointDir, "incclusters") { (batch, _) =>
       val s2 = batch.sparkSession
-      import graft.sources.StormSinks
       // resolve the pointer ONCE: all tables come from the same
       // immutable snapshot
       val verName = StormSinks.currentVersionName(s2, lakeDir)
@@ -563,7 +559,6 @@ object CorpusStream {
   def republishClusterIndex(spark: SparkSession, stateDir: String,
       indexDir: String, k: Int = 3, threshold: Double = 0.5): Unit =
     graft.Materialize.scoped {
-      import graft.sources.StormSinks
       val verName = StormSinks.currentVersionName(spark, stateDir)
       validateClusterMeta(spark, stateDir, verName, k, threshold,
         "graft.CorpusStream.republishClusterIndex")
@@ -595,9 +590,8 @@ object CorpusStream {
     StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
       checkpointDir, "incclusters-idx") { (batch, _) =>
       val s2 = batch.sparkSession
-      import graft.sources.StormSinks
       val sVerName = StormSinks.currentVersionName(s2, stateDir)
-      val iVer = StormSinks.currentVersionDir(s2, indexDir)
+      val iVer = StormSinks.currentVersionName(s2, indexDir)
       validateClusterMeta(s2, stateDir, sVerName, k, threshold,
         "graft.CorpusStream.startIncrementalClustersIndexed")
       val docs0 = StormSinks.readGroupTableAt(s2, stateDir, sVerName, "docs")
@@ -620,7 +614,7 @@ object CorpusStream {
       if (!bNew.isEmpty) {
         val delta = graft.Materialize.once(
           graft.operators.Dedup.incrementalClustersLakeAtDelta(
-            iVer, labels0, fresh0, bNew, k, threshold))
+            indexDir, iVer, labels0, fresh0, bNew, k, threshold))
         StormSinks.appendDeltaGroup(s2, stateDir,
           appends = Seq("docs" -> bNew, "labels" -> delta, "fresh" -> bNew))
         // auto-cadence on the STATE group only (segments fold,
@@ -711,9 +705,9 @@ object CorpusStream {
     StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
       checkpointDir, "serving") { (batch, batchId) =>
       val s2 = batch.sparkSession
-      val ver = graft.sources.StormSinks.currentVersionDir(s2, lakeDir)
-      val weights = s2.read.parquet(s"$ver/bm25")
-      val dense = s2.read.parquet(s"$ver/dense")
+      val ver = StormSinks.currentVersionName(s2, lakeDir)
+      val weights = StormSinks.readGroupTableAt(s2, lakeDir, ver, "bm25")
+      val dense = StormSinks.readGroupTableAt(s2, lakeDir, ver, "dense")
       hybridProbe(weights, dense, batch.select(col("doc_id"), col("text")), k)
         .withColumn("batch_seq", lit(batchId))
         .write.mode("append").parquet(outDir)
@@ -738,7 +732,6 @@ object CorpusStream {
     StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
       checkpointDir, "annserving") { (batch, batchId) =>
       val s2 = batch.sparkSession
-      import graft.sources.StormSinks
       val ver = StormSinks.currentVersionName(s2, lakeDir)
       val queries = StormSinks.readGroupTableAt(s2, lakeDir, ver, "vectors")
         .join(broadcast(batch.select(col("doc_id").as("vec_id"))
@@ -883,7 +876,6 @@ object CorpusStream {
   private def cardBatchBody(batch: DataFrame, batchId: Long,
       stateDir: String): Unit = {
     val s2 = batch.sparkSession
-    import graft.sources.StormSinks
     val (prev, lastBatch) = readCardState(s2, stateDir)
     if (batchId > lastBatch) {
       // quality rides as a 1e-6-grid LONG sum (order-free,
@@ -957,7 +949,6 @@ object CorpusStream {
     val empty = Seq.empty[(String, String, Long, Long, Long, Long, Long)]
       .toDF("source", "lang", "n_docs", "n_tokens", "n_chars",
         "sum_q6", "dup_docs")
-    import graft.sources.StormSinks
     // ONLY a missing pointer is a cold start; a pointer whose version
     // is missing a table is CORRUPT state and must propagate —
     // swallowing it would silently reset the cumulative card to this
@@ -1031,7 +1022,6 @@ object CorpusStream {
     StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
       checkpointDir, "mixer") { (batch, batchId) =>
       val s2 = batch.sparkSession
-      import graft.sources.StormSinks
       val (prev, lastBatch) = readMixerState(s2, stateDir)
       if (batchId > lastBatch) {
         val b = batch
@@ -1058,7 +1048,6 @@ object CorpusStream {
     import spark.implicits._
     val empty = Seq.empty[(String, Long, Long)]
       .toDF("source", "n_docs", "sum_q6")
-    import graft.sources.StormSinks
     val ver =
       try StormSinks.currentVersionName(spark, stateDir)
       catch { case _: java.io.FileNotFoundException => return (empty, -1L) }
@@ -1139,9 +1128,7 @@ object CorpusStream {
   private def driftBatchBody(batch: DataFrame, batchId: Long,
       refDir: String, stateDir: String, outDir: String): Unit = {
     val s2 = batch.sparkSession
-    import graft.sources.StormSinks
-    val refC = s2.read.parquet(
-      s"${StormSinks.currentVersionDir(s2, refDir)}/ref")
+    val refC = StormSinks.readVersionedGroupTable(s2, refDir, "ref")
     val (prev, lastBatch) = readDriftState(s2, stateDir)
     if (batchId > lastBatch) {
       val counts = graft.Materialize.once(
@@ -1173,12 +1160,12 @@ object CorpusStream {
   /** Cumulative-count state at the current version; (-1, empty) on a
     * cold start (no state published yet). */
   private def readDriftState(spark: SparkSession, stateDir: String): (DataFrame, Long) =
-    try {
-      val v = graft.sources.StormSinks.currentVersionDir(spark, stateDir)
-      (spark.read.parquet(s"$v/counts"),
-        spark.read.parquet(s"$v/meta").head().getLong(0))
-    } catch {
-      case _: java.io.FileNotFoundException =>
+    (try Some(StormSinks.currentVersionName(spark, stateDir))
+    catch { case _: java.io.FileNotFoundException => None }) match {
+      case Some(v) =>
+        (StormSinks.readGroupTableAt(spark, stateDir, v, "counts"),
+          StormSinks.readGroupTableAt(spark, stateDir, v, "meta").head().getLong(0))
+      case None =>
         (spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
           StructType(Seq(StructField("feature", StringType),
             StructField("bucket", StringType), StructField("cur_n", LongType)))),
@@ -1262,10 +1249,8 @@ object CorpusStream {
       "graft.CorpusStream.startClassifyGate", outDir,
       hasScores && {
         val curVer: Option[Long] =
-          try {
-            val ver = graft.sources.StormSinks.currentVersionDir(spark, modelDir)
-            Some(ver.substring(ver.lastIndexOf("v-") + 2).toLong)
-          } catch { case scala.util.control.NonFatal(_) => None }
+          try Some(StormSinks.versionNumber(StormSinks.currentVersionName(spark, modelDir)))
+          catch { case scala.util.control.NonFatal(_) => None }
         val scores = spark.read.parquet(outDir)
         val maxScoreVer: Long =
           if (scores.columns.contains("model_ver")) {
@@ -1279,10 +1264,10 @@ object CorpusStream {
     StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
       checkpointDir, "classify") { (batch, batchId) =>
       val s2 = batch.sparkSession
-      val ver = graft.sources.StormSinks.currentVersionDir(s2, modelDir)
-      val wRow = s2.read.parquet(s"$ver/weights").head()
+      val ver = StormSinks.currentVersionName(s2, modelDir)
+      val wRow = StormSinks.readGroupTableAt(s2, modelDir, ver, "weights").head()
       val w = Array.tabulate(5)(wRow.getDouble)
-      val modelVer = ver.substring(ver.lastIndexOf("v-") + 2).toLong
+      val modelVer = StormSinks.versionNumber(ver).toLong
       sizedBatchOutput(graft.operators.Classify.scoreWith(batch, w)
         .withColumn("batch_seq", lit(batchId))
         .withColumn("model_ver", lit(modelVer)))
@@ -1429,7 +1414,6 @@ object CorpusStream {
     StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
       checkpointDir, "lineclean") { (batch, batchId) =>
       val s2 = batch.sparkSession
-      import graft.sources.StormSinks
       // one resolution = one consistent (fps, meta) snapshot
       val verName = StormSinks.currentVersionName(s2, stateDir)
       val lastBatch = StormSinks
@@ -1513,7 +1497,6 @@ object CorpusStream {
     StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
       checkpointDir, "pardedup") { (batch, batchId) =>
       val s2 = batch.sparkSession
-      import graft.sources.StormSinks
       // one resolution = one consistent (fps, meta) snapshot
       val verName = StormSinks.currentVersionName(s2, stateDir)
       val lastBatch = StormSinks
@@ -1623,7 +1606,6 @@ object CorpusStream {
     StreamOps.startForeachBatch(readDocuments(spark, inDir, maxFilesPerTrigger),
       checkpointDir, "pretrain") { (batch, batchId) =>
       val s2 = batch.sparkSession
-      import graft.sources.StormSinks
       // one resolution = one consistent (line_fps, par_fps, meta)
       val verName = StormSinks.currentVersionName(s2, stateDir)
       val lastBatch = StormSinks

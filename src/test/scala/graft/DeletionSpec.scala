@@ -161,6 +161,43 @@ class DeletionSpec extends SparkSpec {
       "a deleted id was retrieved")
   }
 
+  test("ivfpq lake delete after an append: delta vectors survive, deleted ids purged, ranking matches filtered tables") {
+    val embs = Tables.embeddings(spark, sfDir)
+    val lake = java.nio.file.Files.createTempDirectory("graft-del-pq-append").toString
+    graft.operators.Pq.publishIvfPqLake(embs.where($"vec_id" % 5 =!= 4), lake)
+    // below its compaction threshold, v-1 holds only a segment manifest
+    val appended = embs.where($"vec_id" % 5 === 4)
+    graft.operators.Pq.appendToIvfPqLake(spark, lake, appended, maxSegments = 0)
+    val del = embs.where($"vec_id" % 7 === 3).select($"vec_id")
+    val delSet = del.as[Long].collect().toSet
+    val appendedIds = appended.select($"vec_id").as[Long].collect().toSet
+    assert((appendedIds & delSet).nonEmpty && (appendedIds -- delSet).nonEmpty)
+    // the pre-delete snapshot, filtered the way the delete must filter it
+    val before = StormSinks.currentVersionName(spark, lake)
+    def snap(name: String) = StormSinks.readGroupTableAt(spark, lake, before, name)
+    def filtered(name: String) = snap(name).join(del, Seq("vec_id"), "left_anti")
+    LakeDeletion.deleteFromIvfPqLake(spark, lake, del.select($"vec_id".as("doc_id")))
+    def ids(name: String) = StormSinks.readVersionedGroupTable(spark, lake, name)
+      .select($"vec_id").distinct().as[Long].collect().toSet
+    for (name <- Seq("codes", "vectors")) {
+      val got = ids(name)
+      assert((got & delSet).isEmpty, s"deleted ids keep $name rows")
+      assert((appendedIds -- delSet).subsetOf(got), s"appended $name rows dropped")
+      assert(got == filtered(name).select($"vec_id").distinct().as[Long].collect().toSet)
+    }
+    val queries = embs.where($"vec_id" < 10)
+      .join(del, Seq("vec_id"), "left_anti")
+      .select($"vec_id", $"embedding")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toSeq).toSeq
+    val got = rows(graft.operators.Pq.ivfPqTopKIndexed(spark, lake, queries, k = 5))
+    val m = snap("meta").head().getAs[Int]("m")
+    val want = rows(graft.operators.Pq.probe(snap("coarse"),
+      filtered("vectors").withColumn("cell_id", $"cell_id".cast("long")),
+      snap("books"), filtered("codes"), queries, k = 5, m = m, nProbe = 4, rerank = 4))
+    assert(got.nonEmpty)
+    assert(got == want, "post-delete ranking differs from a probe over the filtered tables")
+  }
+
   test("cluster lake delete: bridge removal SPLITS the merged cluster (targeted CC repair)") {
     val ta = "alpha beta gamma delta epsilon zeta"
     val tb = "omicron pi rho sigma tau upsilon"
@@ -359,8 +396,8 @@ class DeletionSpec extends SparkSpec {
     // and the swept indexes still serve: a minhash probe runs clean
     // against the post-sweep lake and never returns a deleted id
     val batch = corpus.limit(30)
-    val near = graft.operators.Dedup.minhashPairsLakeVsIndexAt(
-      StormSinks.currentVersionDir(spark, s"$base/minhash"),
+    val near = graft.operators.Dedup.minhashPairsLakeVsIndexAt(s"$base/minhash",
+      StormSinks.currentVersionName(spark, s"$base/minhash"),
       graft.operators.Dedup.minhashIndex(batch), threshold = 0.2)
     assert(near.where($"doc_old".isin(delSet.toSeq: _*)).count() == 0,
       "post-sweep minhash probe cites a deleted doc")

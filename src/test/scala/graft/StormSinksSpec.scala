@@ -36,6 +36,41 @@ class StormSinksSpec extends SparkSpec {
     assert(spark.read.parquet(out).count() == n + 1)
   }
 
+  test("merge collapses redeliveries inside one frame: first arrival (smallest event_id) wins") {
+    val out = Files.createTempDirectory("graft-sink-dup").toString + "/lake"
+    val enriched = StormPipeline.enrich(StormFeed.feed(spark, sfDir)).limit(40)
+      .localCheckpoint()
+    val n = enriched.count()
+    // one row delivered twice, and one id arriving again under a later
+    // event_id with different content (placed first in the frame)
+    val again = enriched.orderBy(col("event_id")).limit(1)
+    val later = enriched.orderBy(col("event_id").desc).limit(1)
+      .withColumn("event_id", col("event_id") + 1000000L)
+      .withColumn("county", lit("LATER"))
+    val frame = later.unionByName(enriched).unionByName(again)
+    assert(frame.count() == n + 2)
+    assert(StormSinks.mergeById(frame, out) == n)
+    val lake = spark.read.parquet(out)
+    assert(lake.count() == n)
+    assert(lake.select(col("id")).distinct().count() == n)
+    assert(lake.where(col("county") === "LATER").count() == 0,
+      "a later event_id displaced the first arrival")
+    // a replay of the same frame adds nothing
+    assert(StormSinks.mergeById(frame, out) == 0)
+    assert(spark.read.parquet(out).count() == n)
+  }
+
+  test("merge fails on an unreadable lake instead of appending the frame again") {
+    val out = Files.createTempDirectory("graft-sink-bad").toString + "/lake"
+    new java.io.File(out).mkdirs()
+    Files.write(java.nio.file.Paths.get(out, "part-00000.parquet"),
+      "not parquet".getBytes("UTF-8"))
+    val enriched = StormPipeline.enrich(StormFeed.feed(spark, sfDir)).limit(10)
+    intercept[Exception](StormSinks.mergeById(enriched, out))
+    assert(new java.io.File(out).list().toSeq == Seq("part-00000.parquet"),
+      "a failed merge appended to the lake")
+  }
+
   test("compaction: re-packs small files, content identical, layout kept") {
     val out = Files.createTempDirectory("graft-compact").toString + "/lake"
     val enriched = StormPipeline.enrich(StormFeed.feed(spark, sfDir))
