@@ -61,7 +61,7 @@ object Kernels {
 
   // ------------------------------------------------------------ simhash
   /** One-pass 64-bit SimHash over word unigrams; identical output to
-    * the HOF formulation in Dedup.simhash64Hof. */
+    * the HOF formulation ReferenceForms.simhash64Hof (test sources). */
   def simhash64(text: UTF8String): Long = {
     val votes = new Array[Int](64)
     val toks = tokens(text)
@@ -260,8 +260,8 @@ object Kernels {
     * x => x === t))))` under the callers' `size === 0` guard: that HOF
     * composition evaluates interpreted in O(n · distinct) — quadratic
     * per document, and it dominated Classify.measured / corpus_gopher
-    * (r19-opt; the HOF reference stays as [[graft.functions.Text
-    * .topTokenCountHof]], NativeExprSpec asserts equality). Null
+    * (r19-opt; the HOF reference is ReferenceForms.topTokenCountHof
+    * in the test sources, NativeExprSpec asserts equality). Null
     * elements count zero (the HOF's `x === t` is null for them, so
     * the filter drops them) and an empty array returns 0 (the guard's
     * value). */
@@ -295,7 +295,7 @@ object Kernels {
 
   // ----------------------------------------------------------- vectors
   /** Sequential double dot product over float arrays — same order, same
-    * arithmetic as aggregate(zip_with(...)) in Knn.dot. */
+    * arithmetic as aggregate(zip_with(...)) in ReferenceForms.dot. */
   def dotF(a: ArrayData, b: ArrayData): Double = {
     val n = a.numElements()
     var acc = 0.0
@@ -348,7 +348,8 @@ object Kernels {
   /** Cosine of a FLOAT vector against a DOUBLE (trained) centroid —
     * the hot expression of k-means / Rocchio assignment (n·k
     * evaluations per pass; the HOF form pays interpreted lambdas per
-    * element). Bit-identical to Knn.cosineDHof (NativeExprSpec). */
+    * element). Bit-identical to ReferenceForms.cosineDHof
+    * (NativeExprSpec). */
   def cosineFD(a: ArrayData, b: ArrayData): Double =
     dotFD(a, b) / (math.sqrt(dotF(a, a)) * math.sqrt(dotD(b, b)))
 

@@ -305,20 +305,13 @@ object Text {
     * O(n·distinct) HOF is fine here: it runs inside the per-document
     * quality scan (docs are KB-scale), not in a join hot path. */
   def topTokenCount(toks: Column): Column =
-    // r19-opt: native O(n) hash-count kernel; the HOF composition below
-    // ran interpreted in O(n·distinct) — quadratic per document — and
+    // r19-opt: native O(n) hash-count kernel; the HOF composition
+    // (`ReferenceForms.topTokenCountHof` in the test sources) ran
+    // interpreted in O(n·distinct) — quadratic per document — and
     // dominated the Gopher measurement pass. NativeExprSpec asserts
     // kernel ≡ HOF on adversarial arrays.
     when(size(toks) === 0, lit(0))
       .otherwise(graft.expressions.native.topTokenCount(toks))
-
-  /** Reference HOF formulation of [[topTokenCount]] (interpreted
-    * lambdas, O(n·distinct)) — kept for the equivalence spec, the
-    * [[graft.operators.Dedup.shinglesHof]] precedent. */
-  def topTokenCountHof(toks: Column): Column =
-    when(size(toks) === 0, lit(0)).otherwise(
-      array_max(transform(array_distinct(toks),
-        t => size(filter(toks, x => x === t)))))
 
   /** Fraction of array entries that are repeats of an earlier entry:
     * 1 − distinct/total, 0 for empty. The Gopher-class repetition

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.expressions.Window
 import graft.functions.Text
 import graft.sources.StormSinks
 
@@ -15,6 +16,23 @@ import graft.sources.StormSinks
   * pay the exact-verification cost. All signatures are computed with
   * built-in array HOFs + xxhash64, so signature generation is a narrow
   * codegen'd map.
+  *
+  * PIPELINE: every near-dup join is the same four steps, and each step
+  * has ONE definition here that the batch, indexed (lake) and
+  * incremental probes share:
+  *   1. band or prefix — [[bitBands]] (SimHash, and pHash/sign-LSH in
+  *      Multimodal and Knn), [[bandedOf]] (MinHash slices), or the
+  *      PPJoin prefix [[rankPostings]] + [[inPrefix]];
+  *   2. candidates — a band-key join (capped by [[capBuckets]]), or a
+  *      prefix join under [[prefixBound]] (self-join `doc_a < doc_b`
+  *      in [[jaccardCandidatesFromSets]], touching probe in
+  *      [[prefixCandidates]]), or the asymmetric [[minhashProbe]];
+  *   3. one exact verify — [[verifyJaccard]] (containment keeps its own
+  *      |A∩B|/|A| formula);
+  *   4. cluster — [[clusters]], and for incremental maintenance the
+  *      quotient merge ([[besideBatch]] prelude, [[quotientOf]] core).
+  * Helpers return frames that are NOT materialized; every
+  * `Materialize.once` sits in the operator that owns the frame.
   *
   * BLOCK LIFECYCLE: the pair/cluster operators materialize internal
   * multi-consumer subtrees through [[graft.Materialize.once]]
@@ -52,20 +70,11 @@ object Dedup {
   // -------------------------------------------------------- word shingles
   /** Distinct word k-shingles of the normalized text (set semantics —
     * Jaccard is over shingle sets). Native codegen'd expression; the
-    * built-in-HOF formulation is kept as [[shinglesHof]] and asserted
-    * equivalent in NativeExprSpec. */
+    * built-in-HOF formulation lives in the test sources
+    * (`ReferenceForms.shinglesHof`) and NativeExprSpec asserts the two
+    * equal. */
   def shingles(text: Column, k: Int): Column =
     graft.expressions.native.shingles(text, k)
-
-  /** Reference HOF formulation of [[shingles]] (interpreted lambdas). */
-  def shinglesHof(text: Column, k: Int): Column = {
-    val toks = Text.tokens(text)
-    val n = size(toks)
-    val idx = sequence(lit(0), greatest(n - k, lit(0)))
-    array_distinct(
-      when(n < k, array(concat_ws(" ", toks)))
-        .otherwise(transform(idx, i => concat_ws(" ", slice(toks, i + 1, lit(k))))))
-  }
 
   // --------------------------------------------------------- 26: MinHash
   /** MinHash signature: for each of `perms` hash seeds, the min
@@ -154,10 +163,23 @@ object Dedup {
       .where(col("__df") <= cap)
       .drop("__df")
 
+  /** THE bit-chunk band: one row per (input row, chunk) carrying the
+    * `n` consecutive `bits`-wide chunks of the 64-bit column `sig`
+    * (low bits first) as `as = (chunk id, chunk value)`, next to the
+    * `keep` columns. The pigeonhole band of [[simhashPairs]],
+    * [[Multimodal.phashPairs]], [[Knn.embeddingPairs]] and
+    * [[Knn.lshTopK]]: two signatures within hamming distance < n share
+    * at least one chunk exactly. */
+  private[operators] def bitBands(df: DataFrame, keep: Seq[String], sig: String,
+      n: Int, bits: Int, as: (String, String)): DataFrame =
+    df.select(keep.map(col) :+ posexplode(transform(sequence(lit(0), lit(n - 1)),
+        c => call_function("shiftrightunsigned", col(sig), c * bits)
+          .bitwiseAND(lit((1L << bits) - 1)))): _*)
+      .withColumnRenamed("pos", as._1).withColumnRenamed("col", as._2)
+
   def minhashPairs(docs: DataFrame, k: Int = 3, bands: Int = 8,
       rowsPerBand: Int = 4, threshold: Double = 0.5): DataFrame = {
     val parts = docs.sparkSession.sessionState.conf.numShufflePartitions
-    val sigLen = bands * rowsPerBand
     // ONE scan + ONE shingle/signature pass: this frame has four
     // consumers (the banding posexplode is referenced by capBuckets'
     // histogram AND join sides, and the exact-Jaccard verify re-attaches
@@ -167,23 +189,16 @@ object Dedup {
     // plan for the same defect class; the multi-consumer recompute rule
     // of SURVEY §5 applied to the operator's OWN input, not just the
     // banded frame below).
-    val withSig = graft.Materialize.once(docs
-      .select(col("doc_id"), shingles(col("text"), k).as("sh"),
-        graft.expressions.native.minhashSigSha(col("text"), k, sigLen).as("sig")))
-    // explode into one row per band: (band id, the band's sig slice),
-    // ids only — shingle arrays re-attach after the distinct. The
-    // capped frame is MATERIALIZED once: it feeds the occupancy
-    // groupBy plus both self-join sides, exchange reuse does not fire
-    // across those branches, and an un-truncated plan would recompute
-    // the per-doc signature pass on each (the multi-consumer
+    val withSig = graft.Materialize.once(minhashSigOf(docs, k, bands * rowsPerBand))
+    // one row per band, ids only — shingle arrays re-attach after the
+    // distinct. The capped frame is MATERIALIZED once: it feeds the
+    // occupancy groupBy plus both self-join sides, exchange reuse does
+    // not fire across those branches, and an un-truncated plan would
+    // recompute the per-doc signature pass on each (the multi-consumer
     // recompute rule); the frame is 3 small values per (doc, band).
     // Hot buckets (duplicate crowds) never reach the self-join.
-    val banded = graft.Materialize.once(capBuckets(withSig.select(
-      col("doc_id"),
-      posexplode(transform(sequence(lit(0), lit(bands - 1)),
-        b => concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket"),
-      Seq("band", "bucket")))
+    val banded = graft.Materialize.once(
+      capBuckets(bandedOf(withSig, bands, rowsPerBand), Seq("band", "bucket")))
     val a = banded.select(col("band"), col("bucket"), col("doc_id").as("doc_a"))
     val b = banded.select(col("band"), col("bucket"), col("doc_id").as("doc_b"))
     // candidate ids only through the shuffle (a pair may collide in many
@@ -194,16 +209,7 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"))
       .repartition(parts, col("doc_a"), col("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
-    val sets = withSig.select(col("doc_id"), col("sh"))
-    val inter = graft.expressions.native
-      .intersectCount(col("sh_a"), col("sh_b")).cast("double")
-    cand
-      .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      .withColumn("inter", inter)
-      .withColumn("uni", (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
-      .select(col("doc_a"), col("doc_b"), round(col("inter") / col("uni"), 6).as("jaccard"))
-      .where(col("jaccard") >= threshold)
+    verifyJaccard(cand, withSig, withSig, threshold)
   }
 
   // ------------------------------------ 26b: incremental (batch ⋈ corpus)
@@ -235,13 +241,18 @@ object Dedup {
     * dominates. */
   def minhashIndex(docs: DataFrame, k: Int = 3, bands: Int = 8,
       rowsPerBand: Int = 4): DataFrame =
-    graft.Materialize.once(docs.select(col("doc_id"),
-      shingles(col("text"), k).as("sh"),
-      graft.expressions.native
-        .minhashSigSha(col("text"), k, bands * rowsPerBand).as("sig")))
+    graft.Materialize.once(minhashSigOf(docs, k, bands * rowsPerBand))
 
-  /** One row per (doc, band): the band's signature slice as a join
-    * key — the banded-probe form of a [[minhashIndex]]. */
+  /** The (doc_id, sh, sig) signature projection behind
+    * [[minhashIndex]] and [[minhashPairs]] (not materialized). */
+  private def minhashSigOf(docs: DataFrame, k: Int, sigLen: Int): DataFrame =
+    docs.select(col("doc_id"), shingles(col("text"), k).as("sh"),
+      graft.expressions.native.minhashSigSha(col("text"), k, sigLen).as("sig"))
+
+  /** THE MinHash slice band: one row per (doc, band), the band's
+    * signature slice as a join key — the banded form of a
+    * [[minhashIndex]] for the self-join, the probe and the published
+    * `bands` table alike. */
   private def bandedOf(sigDf: DataFrame, bands: Int, rowsPerBand: Int): DataFrame =
     sigDf.select(col("doc_id"),
       posexplode(transform(sequence(lit(0), lit(bands - 1)),
@@ -320,26 +331,27 @@ object Dedup {
       batchIndex: DataFrame, bands: Int = 8, rowsPerBand: Int = 4,
       threshold: Double = 0.5): DataFrame = {
     val spark = batchIndex.sparkSession
-    val parts = spark.sessionState.conf.numShufflePartitions
     val corpusBands = StormSinks.readGroupTableAt(spark, dir, verName, "bands")
-    val setsO = StormSinks.readGroupTableAt(spark, dir, verName, "sets")
-    val sigN = batchIndex
-    val a = bandedOf(sigN, bands, rowsPerBand)
-      .select(col("band"), col("bucket"), col("doc_id").as("doc_new"))
+    val corpusSets = StormSinks.readGroupTableAt(spark, dir, verName, "sets")
+    minhashProbe(bandedOf(batchIndex, bands, rowsPerBand), batchIndex,
+      corpusBands, corpusSets, threshold)
+  }
+
+  /** THE asymmetric MinHash band probe: candidates from the batch's
+    * bands ⋈ the corpus's bands, each (doc_id, band, bucket) — never a
+    * corpus × corpus pair — verified against each side's (doc_id, sh)
+    * sets. Returns (doc_new, doc_old, jaccard ≥ threshold). Builds and
+    * materializes nothing, so the caller owns both sides' lifetimes. */
+  private def minhashProbe(batchBands: DataFrame, batchSets: DataFrame,
+      corpusBands: DataFrame, corpusSets: DataFrame, threshold: Double): DataFrame = {
+    val parts = batchBands.sparkSession.sessionState.conf.numShufflePartitions
+    val a = batchBands.select(col("band"), col("bucket"), col("doc_id").as("doc_new"))
     val b = corpusBands.select(col("band"), col("bucket"), col("doc_id").as("doc_old"))
     val cand = a.join(b, Seq("band", "bucket"))
       .select(col("doc_new"), col("doc_old"))
       .repartition(parts, col("doc_new"), col("doc_old"))
       .dropDuplicates("doc_new", "doc_old")
-    val setsN = sigN.select(col("doc_id").as("doc_new"), col("sh").as("sh_a"))
-    val inter = graft.expressions.native
-      .intersectCount(col("sh_a"), col("sh_b")).cast("double")
-    cand.join(setsN, "doc_new")
-      .join(setsO.select(col("doc_id").as("doc_old"), col("sh").as("sh_b")), "doc_old")
-      .withColumn("inter", inter)
-      .withColumn("uni", (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
-      .select(col("doc_new"), col("doc_old"), round(col("inter") / col("uni"), 6).as("jaccard"))
-      .where(col("jaccard") >= threshold)
+    verifyJaccard(cand, batchSets, corpusSets, threshold, "doc_new", "doc_old")
   }
 
   /** [[minhashPairsAgainst]] with a pre-built corpus index
@@ -368,28 +380,9 @@ object Dedup {
     * every micro-batch. */
   def minhashPairsBetweenIndexes(corpusIndex: DataFrame, batchIndex: DataFrame,
       bands: Int = 8, rowsPerBand: Int = 4,
-      threshold: Double = 0.5): DataFrame = {
-    val parts = batchIndex.sparkSession.sessionState.conf.numShufflePartitions
-    val sigN = batchIndex
-    val sigO = corpusIndex
-    val a = bandedOf(sigN, bands, rowsPerBand)
-      .select(col("band"), col("bucket"), col("doc_id").as("doc_new"))
-    val b = bandedOf(sigO, bands, rowsPerBand)
-      .select(col("band"), col("bucket"), col("doc_id").as("doc_old"))
-    val cand = a.join(b, Seq("band", "bucket"))
-      .select(col("doc_new"), col("doc_old"))
-      .repartition(parts, col("doc_new"), col("doc_old"))
-      .dropDuplicates("doc_new", "doc_old")
-    val setsN = sigN.select(col("doc_id").as("doc_new"), col("sh").as("sh_a"))
-    val setsO = sigO.select(col("doc_id").as("doc_old"), col("sh").as("sh_b"))
-    val inter = graft.expressions.native
-      .intersectCount(col("sh_a"), col("sh_b")).cast("double")
-    cand.join(setsN, "doc_new").join(setsO, "doc_old")
-      .withColumn("inter", inter)
-      .withColumn("uni", (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
-      .select(col("doc_new"), col("doc_old"), round(col("inter") / col("uni"), 6).as("jaccard"))
-      .where(col("jaccard") >= threshold)
-  }
+      threshold: Double = 0.5): DataFrame =
+    minhashProbe(bandedOf(batchIndex, bands, rowsPerBand), batchIndex,
+      bandedOf(corpusIndex, bands, rowsPerBand), corpusIndex, threshold)
 
   // --------------------- 38b: cluster representative selection
   /** Keep-BEST cluster representative — [[clusters]] (and the oracle
@@ -492,29 +485,14 @@ object Dedup {
   // --------------------------------------------------------- 27: SimHash
   /** 64-bit SimHash over word unigrams: per bit, sum +1/-1 votes of
     * each token's xxhash64; sign becomes the bit. Native codegen'd
-    * expression; HOF reference kept as [[simhash64Hof]]. */
+    * expression; the HOF reference form is
+    * `ReferenceForms.simhash64Hof` in the test sources. */
   def simhash64(text: Column): Column = graft.expressions.native.simhash64(text)
 
   /** [[simhash64]] with sha-256-prefix token hashes — same construction,
     * engine-reproducible (DuckDB oracle replays it); used by
     * [[simhashPairs]]. */
   def simhash64Sha(text: Column): Column = graft.expressions.native.simhash64Sha(text)
-
-  /** Reference HOF formulation of [[simhash64]] (interpreted lambdas). */
-  def simhash64Hof(text: Column): Column = {
-    val votes = aggregate(
-      Text.tokens(text),
-      array_repeat(lit(0), 64),
-      (acc, t) => {
-        val h = xxhash64(t)
-        zip_with(acc, sequence(lit(0), lit(63)),
-          (a, i) => a + when(call_function("shiftright", h, i).bitwiseAND(1) === 1, 1).otherwise(-1))
-      })
-    aggregate(
-      zip_with(votes, sequence(lit(0), lit(63)),
-        (v, i) => when(v > 0, call_function("shiftleft", lit(1L), i)).otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc.bitwiseOR(x))
-  }
 
   /** SimHash near-dup pairs with hamming distance <= maxHamming.
     * Pigeonhole: split 64 bits into (maxHamming+1) chunks — any pair
@@ -547,13 +525,9 @@ object Dedup {
     // every chunk value, so a duplicate crowd is a hot bucket by data.
     // Materialized once for the same three-consumer reason as
     // minhashPairs' banded frame (3 longs per (doc, chunk) row).
-    val chunked = graft.Materialize.once(
-      capBuckets(withSim.select(col("doc_id"), col("sim"),
-        posexplode(transform(sequence(lit(0), lit(nChunks - 1)),
-          c => call_function("shiftrightunsigned", col("sim"), c * chunkBits)
-            .bitwiseAND(lit((1L << chunkBits) - 1)))))
-        .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "val"),
-        Seq("chunk", "val")))
+    val chunked = graft.Materialize.once(capBuckets(
+      bitBands(withSim, Seq("doc_id", "sim"), "sim", nChunks, chunkBits, ("chunk", "val")),
+      Seq("chunk", "val")))
     val a = chunked.select(col("chunk"), col("val"),
       col("doc_id").as("doc_a"), col("sim").as("sim_a"))
     val b = chunked.select(col("chunk"), col("val"),
@@ -665,65 +639,6 @@ object Dedup {
   }
 
   // -------------------------------------------------- 28: n-gram Jaccard
-  /** Exact n-gram Jaccard similarity join with PREFIX + POSITIONAL
-    * FILTERING (the full PPJoin candidate rule): a pair with
-    * Jaccard >= t must share at least one shingle among each side's
-    * prefix — its `|s| - ceil(t*|s|) + 1` globally-rarest shingles.
-    * Only prefix postings are joined, so hot (high-document-frequency)
-    * shingles never generate candidate pairs: pair work is driven by
-    * RARE shingles, which is what makes this survive a corpus where
-    * every document shares the common vocabulary. On top of the prefix,
-    * PPJoin's positional upper bound (see
-    * [[jaccardCandidatesFromSets]]) prunes collisions that happen too
-    * deep in both sorted lists to ever reach the threshold — lossless,
-    * and nearly free since the prefix rank is already computed. Exact
-    * Jaccard is then verified on candidates only, via the full shingle
-    * sets.
-    *
-    * One shuffle on the shingle (candidates), one on doc_id (verify
-    * re-attach). Lossless for `jaccard >= threshold`.
-    *
-    * Two deliberate non-defaults, both found by profiling sf0.1
-    * (BENCH_r02 recorded 62s; these bring it back to seconds):
-    * - candidate pairs are repartitioned to a FIXED partition count
-    *   before dedup/verify. The pair rows are tiny (two ids), so AQE's
-    *   byte-based coalescing squeezes them into one partition — and then
-    *   the per-pair verify work (the expensive part) runs on one core.
-    *   Work-per-byte here is huge, so bytes are the wrong signal; the
-    *   explicit repartition keeps verify at full parallelism and is
-    *   what you'd want at 100 TB anyway (candidate volume >> 64 MB).
-    * - intersection size is a native O(n+m) kernel
-    *   ([[graft.expressions.Kernels.intersectCount]]), not
-    *   array_intersect: the built-in does O(n·m) non-codegen pairwise
-    *   comparisons for string arrays, and the pushed-down jaccard filter
-    *   made the optimizer evaluate it up to 3× per pair.
-    */
-  /** Candidate (doc_a, doc_b) pairs from the prefix index, deduped —
-    * the pre-verify half of [[jaccardPairs]], exposed so specs can
-    * measure the candidate count with/without the positional filter.
-    */
-  private[graft] def jaccardCandidates(docs: DataFrame, k: Int = 2,
-      threshold: Double = 0.5, positional: Boolean = true): DataFrame =
-    jaccardCandidatesFromSets(
-      graft.Materialize.once(
-        jaccardSets(docs, k)),
-      threshold, positional)
-
-  /** The AllPairs/PPJoin prefix table of `sets` — each doc's rarest
-    * |d|−⌈t|d|⌉+1 shingles under the global (df, s) order, with their
-    * positional rank: (s, doc_id, n_sh, rk).
-    *
-    * `sets` MUST be materialized by the caller: the postings explode is
-    * referenced twice (the df aggregate side and the join probe side),
-    * and exchange reuse does not fire across join branches — over an
-    * un-truncated input the corpus scan + shingle kernel ran twice per
-    * prefix build (r18-opt). Over checkpointed blocks the second
-    * explode is a cheap re-read, and the hash-agg + join stays
-    * sort-free (a count window partitioned by shingle was measured
-    * SLOWER here: it sorts every posting by the shingle string, where
-    * the aggregate hashes them). The repartition pins the rank
-    * window's clustering at a fixed width (the window reuses the
-    * exchange), dodging the AQE-coalesce trap. */
   /** THE shingle-set frame every jaccard/containment path materializes
     * — one definition, exposed private[graft] so the plan audit can
     * assert column pruning on the operator's OWN projection (a
@@ -748,19 +663,102 @@ object Dedup {
         explode(col("sh")).as("s0"))
       .select(col("doc_id"), col("n_sh"), xxhash64(col("s0")).as("s"))
 
+  /** (s, df): the document frequency of each posting key — the global
+    * (df, s) shingle order the prefix rank sorts by. A hash aggregate,
+    * not a count window: a window partitioned by shingle was measured
+    * SLOWER here (it sorts every posting by key, the aggregate hashes
+    * them). */
+  private def postingDfs(postings: DataFrame): DataFrame =
+    postings.groupBy(col("s")).agg(count(lit(1)).as("df"))
+
+  /** THE AllPairs/PPJoin prefix rank: `postings` ⋈ `dfs`, then `rk` =
+    * each posting's 1-based position in its doc's shingle list under
+    * the global (df, s) order. With `frozen`, `dfs` is a PUBLISHED
+    * order that may miss fresh shingles: they take df 0 (any fixed
+    * total order keeps the prefix theorem lossless). The repartition
+    * pins the rank window's clustering at a fixed width (the window
+    * reuses the exchange), dodging the AQE-coalesce trap.
+    *
+    * Over an un-materialized `postings` source the explode is
+    * referenced twice (the df aggregate and this join) and exchange
+    * reuse does not fire across join branches, so callers rank over a
+    * MATERIALIZED sets frame — un-truncated, the corpus scan + shingle
+    * kernel ran twice per prefix build (r18-opt). */
+  private def rankPostings(postings: DataFrame, dfs: DataFrame, parts: Int,
+      frozen: Boolean = false): DataFrame = {
+    val withDf =
+      if (frozen) postings.join(dfs, Seq("s"), "left")
+        .withColumn("df", coalesce(col("df"), lit(0L)))
+      else postings.join(dfs, "s")
+    withDf.repartition(parts, col("doc_id"))
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(col("doc_id")).orderBy(col("df"), col("s"))))
+  }
+
+  /** The prefix cutoff on ranked postings: a doc's prefix is its
+    * |d|−⌈t|d|⌉+1 rarest shingles. */
+  private def inPrefix(threshold: Double): Column =
+    col("rk") <= col("n_sh") - ceil(col("n_sh") * threshold) + 1
+
+  /** The prefix table (s, doc_id, n_sh, rk) of [[rankPostings]]. */
+  private def prefixOf(postings: DataFrame, dfs: DataFrame, threshold: Double,
+      parts: Int, frozen: Boolean = false): DataFrame =
+    rankPostings(postings, dfs, parts, frozen).where(inPrefix(threshold))
+      .select(col("s"), col("doc_id"), col("n_sh"), col("rk"))
+
+  /** The prefix table of a MATERIALIZED `sets` frame, ranked under its
+    * own (df, s) order. */
   private def jaccardPrefixOf(sets: DataFrame, threshold: Double,
       parts: Int): DataFrame = {
     val postings = hashedPostings(sets)
-    val dfs = postings.groupBy(col("s")).agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("df"), col("s"))
-    postings.join(dfs, "s")
-      .repartition(parts, col("doc_id"))
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= col("n_sh") - ceil(col("n_sh") * threshold) + 1)
-      .select(col("s"), col("doc_id"), col("n_sh"), col("rk"))
+    prefixOf(postings, postingDfs(postings), threshold, parts)
   }
 
+  /** One side of a prefix join: (s, doc_x, n_x, rk_x). */
+  private def prefixSide(prefix: DataFrame, x: String): DataFrame =
+    prefix.select(col("s"), col("doc_id").as(s"doc_$x"),
+      col("n_sh").as(s"n_$x"), col("rk").as(s"rk_$x"))
+
+  /** `pairOk` plus the candidate bounds on a prefix-join row of sides
+    * a and b ([[prefixSide]]):
+    *  - size filter: t|b| <= |a| <= |b|/t is necessary for J >= t;
+    *  - PPJoin POSITIONAL filter (with `positional`): rk is the shared
+    *    shingle's 1-based position in each doc's full (df, s)-sorted
+    *    list, so the overlap can be at most 1 + min(n_a - rk_a,
+    *    n_b - rk_b) — every other common shingle sits strictly after
+    *    it on at least one side when this row's shingle is the pair's
+    *    FIRST common one. J >= t needs overlap >= t(n_a+n_b)/(1+t); a
+    *    pair survives iff SOME generating row passes (rows are per
+    *    shared prefix shingle, dedup comes after), and for J >= t the
+    *    first common shingle lies in BOTH prefixes and always passes —
+    *    so the filter is lossless while pruning the candidates hot
+    *    shingles generate at positions too deep for the threshold.
+    *    Integer bound vs real target compared in cross-multiplied form
+    *    (no ceil), 1e-9 slack for fp safety. */
+  private def prefixBound(pairOk: Column, threshold: Double,
+      positional: Boolean = true): Column = {
+    val sizeOk = col("n_a") * threshold <= col("n_b") &&
+      col("n_b") * threshold <= col("n_a")
+    val posOk =
+      if (!positional) lit(true)
+      else (lit(1) + least(col("n_a") - col("rk_a"), col("n_b") - col("rk_b")))
+        .cast("double") * (1.0 + threshold) >=
+        (col("n_a") + col("n_b")).cast("double") * threshold - 1e-9
+    pairOk && sizeOk && posOk
+  }
+
+  /** Candidate (doc_a, doc_b) pairs from the prefix index, deduped —
+    * the pre-verify half of [[jaccardPairs]], exposed so specs can
+    * measure the candidate count with/without the positional filter.
+    */
+  private[graft] def jaccardCandidates(docs: DataFrame, k: Int = 2,
+      threshold: Double = 0.5, positional: Boolean = true): DataFrame =
+    jaccardCandidatesFromSets(
+      graft.Materialize.once(
+        jaccardSets(docs, k)),
+      threshold, positional)
+
+  /** The prefix SELF-join: each pair once, as doc_a < doc_b. */
   private def jaccardCandidatesFromSets(sets: DataFrame, threshold: Double,
       positional: Boolean): DataFrame = {
     val parts = sets.sparkSession.sessionState.conf.numShufflePartitions
@@ -770,53 +768,53 @@ object Dedup {
     // the r18-opt dedup_jaccard plan before this change).
     val prefix = graft.Materialize.once(
       jaccardPrefixOf(sets, threshold, parts))
-    val a = prefix.select(col("s"), col("doc_id").as("doc_a"),
-      col("n_sh").as("n_a"), col("rk").as("rk_a"))
-    val b = prefix.select(col("s"), col("doc_id").as("doc_b"),
-      col("n_sh").as("n_b"), col("rk").as("rk_b"))
-    // size filter: t|b| <= |a| <= |b|/t is necessary for J >= t
-    val sizeOk = col("n_a") * threshold <= col("n_b") &&
-      col("n_b") * threshold <= col("n_a")
-    // PPJoin POSITIONAL filter: rk is the shared shingle's 1-based
-    // position in each doc's full (df, s)-sorted list, so the overlap
-    // can be at most 1 + min(n_a - rk_a, n_b - rk_b) — every other
-    // common shingle sits strictly after it on at least one side when
-    // this row's shingle is the pair's FIRST common one. J >= t needs
-    // overlap >= t(n_a+n_b)/(1+t); a pair survives iff SOME generating
-    // row passes (rows are per shared prefix shingle, dedup comes
-    // after), and for J >= t the first common shingle lies in BOTH
-    // prefixes and always passes — so the filter is lossless while
-    // pruning the candidates hot shingles generate at positions too
-    // deep for the threshold. Integer bound vs real target compared in
-    // cross-multiplied form (no ceil), 1e-9 slack for fp safety.
-    val posOk =
-      if (!positional) lit(true)
-      else (lit(1) + least(col("n_a") - col("rk_a"), col("n_b") - col("rk_b")))
-        .cast("double") * (1.0 + threshold) >=
-        (col("n_a") + col("n_b")).cast("double") * threshold - 1e-9
-    a.join(b, Seq("s"))
-      .where(col("doc_a") < col("doc_b") && sizeOk && posOk)
+    prefixSide(prefix, "a").join(prefixSide(prefix, "b"), Seq("s"))
+      .where(prefixBound(col("doc_a") < col("doc_b"), threshold, positional))
       .select(col("doc_a"), col("doc_b"))
       .repartition(parts, col("doc_a"), col("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
   }
 
+  /** Exact n-gram Jaccard similarity join with PREFIX + POSITIONAL
+    * FILTERING (the full PPJoin candidate rule): a pair with
+    * Jaccard >= t must share at least one shingle among each side's
+    * prefix — its `|s| - ceil(t*|s|) + 1` globally-rarest shingles.
+    * Only prefix postings are joined, so hot (high-document-frequency)
+    * shingles never generate candidate pairs: pair work is driven by
+    * RARE shingles, which is what makes this survive a corpus where
+    * every document shares the common vocabulary. On top of the prefix,
+    * PPJoin's positional upper bound (see [[prefixBound]]) prunes
+    * collisions that happen too deep in both sorted lists to ever reach
+    * the threshold — lossless, and nearly free since the prefix rank is
+    * already computed. Exact Jaccard is then verified on candidates
+    * only, via the full shingle sets.
+    *
+    * One shuffle on the shingle (candidates), one on doc_id (verify
+    * re-attach). Lossless for `jaccard >= threshold`.
+    *
+    * Two deliberate non-defaults, both found by profiling sf0.1
+    * (BENCH_r02 recorded 62s; these bring it back to seconds):
+    * - candidate pairs are repartitioned to a FIXED partition count
+    *   before dedup/verify. The pair rows are tiny (two ids), so AQE's
+    *   byte-based coalescing squeezes them into one partition — and then
+    *   the per-pair verify work (the expensive part) runs on one core.
+    *   Work-per-byte here is huge, so bytes are the wrong signal; the
+    *   explicit repartition keeps verify at full parallelism and is
+    *   what you'd want at 100 TB anyway (candidate volume >> 64 MB).
+    * - intersection size is a native O(n+m) kernel
+    *   ([[graft.expressions.Kernels.intersectCount]]), not
+    *   array_intersect: the built-in does O(n·m) non-codegen pairwise
+    *   comparisons for string arrays, and the pushed-down jaccard filter
+    *   made the optimizer evaluate it up to 3× per pair.
+    */
   def jaccardPairs(docs: DataFrame, k: Int = 2, threshold: Double = 0.5): DataFrame = {
     // ONE scan + ONE shingle pass: the set table feeds the prefix build
     // plus both exact-verify endpoint joins (three consumers; the
     // shingle kernel re-ran per consumer un-materialized — r18-opt).
     val sets = graft.Materialize.once(
       jaccardSets(docs, k))
-    val cand = jaccardCandidatesFromSets(sets, threshold, positional = true)
-    val inter = graft.expressions.native
-      .intersectCount(col("sh_a"), col("sh_b")).cast("double")
-    cand
-      .join(sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")
-      .join(sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), "doc_b")
-      .withColumn("inter", inter)
-      .withColumn("uni", (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
-      .select(col("doc_a"), col("doc_b"), round(col("inter") / col("uni"), 6).as("jaccard"))
-      .where(col("jaccard") >= threshold)
+    verifyJaccard(jaccardCandidatesFromSets(sets, threshold, positional = true),
+      sets, sets, threshold)
   }
 
   // -------------------- 123: incremental near-dup cluster maintenance
@@ -841,57 +839,50 @@ object Dedup {
     val parts = sets.sparkSession.sessionState.conf.numShufflePartitions
     // prefix materialized ONCE for the same two-consumer reason as
     // jaccardCandidatesFromSets (the batch-restricted A side and the
-    // full B side both read it); df via the hash aggregate — a count
-    // window was measured slower, see [[jaccardPrefixOf]] (r18-opt).
+    // full B side both read it)
     val prefix = graft.Materialize.once(
       jaccardPrefixOf(sets, threshold, parts))
-    val a = prefix.join(batchIds.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .select(col("s"), col("doc_id").as("doc_a"),
-        col("n_sh").as("n_a"), col("rk").as("rk_a"))
-    val b = prefix.select(col("s"), col("doc_id").as("doc_b"),
-      col("n_sh").as("n_b"), col("rk").as("rk_b"))
-    val cand = prefixCandidates(a, b, threshold, parts)
-    verifyJaccard(cand,
-      sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")),
-      sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), threshold)
+    val cand = prefixCandidates(
+      prefix.join(batchIds.select(col("doc_id")), Seq("doc_id"), "left_semi"),
+      prefix, threshold, parts)
+    verifyJaccard(cand, sets, sets, threshold)
   }
 
-  /** AllPairs/PPJoin candidate join over two prefix tables that were
-    * ranked under ONE shared global shingle order — a: (s, doc_a, n_a,
-    * rk_a), b: (s, doc_b, n_b, rk_b). Applies the size filter, the
-    * positional (PPJoin) overlap bound, normalizes each pair to
-    * doc_a < doc_b and dedups. Lossless given the shared order: for a
-    * J ≥ t pair the FIRST common shingle under that order lies in
-    * both prefixes, and its row passes both bounds. */
+  /** The TOUCHING prefix join over two prefix tables (s, doc_id, n_sh,
+    * rk) that were ranked under ONE shared global shingle order: side a
+    * is the probing (batch) prefix, side b the full one. Applies
+    * [[prefixBound]], normalizes each pair to doc_a < doc_b (a batch
+    * doc may sit on either side of a pair) and dedups. Lossless given
+    * the shared order: for a J ≥ t pair the FIRST common shingle under
+    * that order lies in both prefixes, and its row passes both bounds.
+    * The self-join keeps its own `doc_a < doc_b` shape
+    * ([[jaccardCandidatesFromSets]]): this one would emit every self
+    * pair twice before the dedup shuffle. */
   private def prefixCandidates(a: DataFrame, b: DataFrame,
-      threshold: Double, parts: Int): DataFrame = {
-    val sizeOk = col("n_a") * threshold <= col("n_b") &&
-      col("n_b") * threshold <= col("n_a")
-    val posOk =
-      (lit(1) + least(col("n_a") - col("rk_a"), col("n_b") - col("rk_b")))
-        .cast("double") * (1.0 + threshold) >=
-        (col("n_a") + col("n_b")).cast("double") * threshold - 1e-9
-    a.join(b, Seq("s"))
-      .where(col("doc_a") =!= col("doc_b") && sizeOk && posOk)
+      threshold: Double, parts: Int): DataFrame =
+    prefixSide(a, "a").join(prefixSide(b, "b"), Seq("s"))
+      .where(prefixBound(col("doc_a") =!= col("doc_b"), threshold))
       .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
         greatest(col("doc_a"), col("doc_b")).as("doc_b"))
       .repartition(parts, col("doc_a"), col("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
-  }
 
-  /** Exact-Jaccard verify of candidate pairs: attach each endpoint's
-    * shingle set (setsA keyed doc_a → sh_a, setsB keyed doc_b →
-    * sh_b), return (doc_a, doc_b, jaccard ≥ threshold). Candidates
-    * only ever price this — both joins are candidate-bounded. */
+  /** THE exact-Jaccard verify of candidate pairs (idA, idB): attach
+    * each endpoint's shingle set from `setsA` / `setsB` (both (doc_id,
+    * sh)), return (idA, idB, jaccard ≥ threshold) with jaccard =
+    * |A∩B| / |A∪B| rounded to 6 places. Candidates only ever price
+    * this — both joins are candidate-bounded. */
   private def verifyJaccard(cand: DataFrame, setsA: DataFrame,
-      setsB: DataFrame, threshold: Double): DataFrame = {
+      setsB: DataFrame, threshold: Double,
+      idA: String = "doc_a", idB: String = "doc_b"): DataFrame = {
     val inter = graft.expressions.native
       .intersectCount(col("sh_a"), col("sh_b")).cast("double")
-    cand.join(setsA, "doc_a").join(setsB, "doc_b")
+    cand.join(setsA.select(col("doc_id").as(idA), col("sh").as("sh_a")), idA)
+      .join(setsB.select(col("doc_id").as(idB), col("sh").as("sh_b")), idB)
       .withColumn("inter", inter)
       .withColumn("uni",
         (size(col("sh_a")) + size(col("sh_b")) - col("inter")).cast("double"))
-      .select(col("doc_a"), col("doc_b"),
+      .select(col(idA), col(idB),
         round(col("inter") / col("uni"), 6).as("jaccard"))
       .where(col("jaccard") >= threshold)
   }
@@ -933,21 +924,14 @@ object Dedup {
       // under the same hashed order (see [[hashedPostings]]; r19-opt)
       val postings = hashedPostings(sets)
       // dfs feeds BOTH the published table and the rank join below —
-      // materialize once (the multi-consumer recompute class)
-      val dfs = graft.Materialize.once(
-        postings.groupBy(col("s")).agg(count(lit(1)).as("df")))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("doc_id")).orderBy(col("df"), col("s"))
-      val prefix = postings.join(dfs, "s")
-        .repartition(parts, col("doc_id"))
-        .withColumn("rk", row_number().over(w))
-        .where(col("rk") <= col("n_sh") - ceil(col("n_sh") * threshold) + 1)
-        .select(col("s"), col("doc_id"), col("n_sh"), col("rk"))
-      graft.sources.StormSinks.writeVersionedGroup(spark, dir, Seq(
-        "dfs" -> dfs, "prefix" -> prefix,
-        "sets" -> sets.select(col("doc_id"), col("sh"))))
-      graft.Materialize.free(dfs)
-      ()
+      // materialize once (the multi-consumer recompute class); freed
+      // whether or not the publish lands
+      val dfs = graft.Materialize.once(postingDfs(postings))
+      try {
+        StormSinks.writeVersionedGroup(spark, dir, Seq("dfs" -> dfs,
+          "prefix" -> prefixOf(postings, dfs, threshold, parts), "sets" -> sets))
+        ()
+      } finally graft.Materialize.free(dfs)
     } finally graft.Materialize.free(sets)
   }
 
@@ -966,14 +950,8 @@ object Dedup {
     val parts = spark.sessionState.conf.numShufflePartitions
     val prefix = StormSinks.readGroupTableAt(spark, dir, ver, "prefix")
     val sets = StormSinks.readGroupTableAt(spark, dir, ver, "sets")
-    val a = prefix.select(col("s"), col("doc_id").as("doc_a"),
-      col("n_sh").as("n_a"), col("rk").as("rk_a"))
-    val b = prefix.select(col("s"), col("doc_id").as("doc_b"),
-      col("n_sh").as("n_b"), col("rk").as("rk_b"))
-    val cand = prefixCandidates(a, b, threshold, parts)
-    verifyJaccard(cand,
-      sets.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")),
-      sets.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), threshold)
+    verifyJaccard(prefixCandidates(prefix, prefix, threshold, parts),
+      sets, sets, threshold)
   }
 
   /** [[jaccardPairsTouching]] against a [[publishJaccardLake]] index:
@@ -1030,36 +1008,23 @@ object Dedup {
         df => df.join(broadcast(freshIds), Seq("doc_id"), "left_anti")
       else
         df => df.join(freshIds, Seq("doc_id"), "left_anti")
-    // hashed fresh-side keys — must match the published index's long
-    // keys (see [[hashedPostings]]; publishJaccardLake hashes too)
-    val postings = hashedPostings(freshSets)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("df"), col("s"))
     // the fresh-side rank (the ONLY window in a probe — batch-sized)
     // feeds both candidate branches below; materialize once so it
-    // runs once and the probe plan itself carries zero windows
-    val freshPrefix = graft.Materialize.once(postings.join(dfsL, Seq("s"), "left")
-      .withColumn("df", coalesce(col("df"), lit(0L)))
-      .repartition(parts, col("doc_id"))
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= col("n_sh") - ceil(col("n_sh") * threshold) + 1)
-      .select(col("s"), col("doc_id"), col("n_sh"), col("rk")))
+    // runs once and the probe plan itself carries zero windows. Its
+    // hashed keys match the published index's (see [[hashedPostings]])
+    val freshPrefix = graft.Materialize.once(
+      prefixOf(hashedPostings(freshSets), dfsL, threshold, parts, frozen = true))
     // fresh docs SHADOW the lake on overlap (replayed batch): drop the
     // lake's rows for fresh ids so prefixes and sets stay one-per-doc
-    val lakeOnlyPrefix = antiFresh(
+    val allPrefix = antiFresh(
       prefixL.select(col("s"), col("doc_id"), col("n_sh"), col("rk")))
-    val allPrefix = lakeOnlyPrefix.unionByName(freshPrefix)
-    val a = allPrefix.join(batchIds.select(col("doc_id")), Seq("doc_id"), "left_semi")
-      .select(col("s"), col("doc_id").as("doc_a"),
-        col("n_sh").as("n_a"), col("rk").as("rk_a"))
-    val b = allPrefix.select(col("s"), col("doc_id").as("doc_b"),
-      col("n_sh").as("n_b"), col("rk").as("rk_b"))
-    val cand = prefixCandidates(a, b, threshold, parts)
+      .unionByName(freshPrefix)
+    val cand = prefixCandidates(
+      allPrefix.join(batchIds.select(col("doc_id")), Seq("doc_id"), "left_semi"),
+      allPrefix, threshold, parts)
     val setsAll = antiFresh(setsL.select(col("doc_id"), col("sh")))
       .unionByName(freshSets)
-    verifyJaccard(cand,
-      setsAll.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")),
-      setsAll.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), threshold)
+    verifyJaccard(cand, setsAll, setsAll, threshold)
   }
 
   /** Incremental cluster maintenance — the per-ingest complement of
@@ -1088,28 +1053,38 @@ object Dedup {
     * self-labeled. */
   def incrementalClusters(corpusDocs: DataFrame, corpusLabels: DataFrame,
       batchDocs: DataFrame, k: Int = 2, threshold: Double = 0.5): DataFrame = {
-    // overlap-safe union: an at-least-once ingest can replay a batch
-    // whose docs ALREADY landed in the corpus (crash between the docs
-    // and labels publishes). A raw union would then hold duplicate
-    // doc_id rows, whose duplicated postings inflate df and the
-    // n_sh-based prefix cutoff in jaccardPairsTouching — breaking
-    // prefix-filter completeness (silently missed merges) — and would
-    // emit duplicate label rows (the doc on both sides below). So the
-    // batch is authoritative: dedup it by id, anti-join the corpus
-    // side against its ids (batch ids are micro-batch-sized →
-    // broadcast, the corpus stays un-shuffled), and the two sides are
-    // disjoint by construction. Replaying a fully-committed batch
-    // recomputes the identical merge (deterministic), so republishing
-    // is a no-op — the checkpoint-idempotence CorpusStreamSpec pins.
-    val batch = graft.Materialize.once(
-      batchDocs.select(col("doc_id"), col("text")).dropDuplicates("doc_id"))
-    val corpusOnly = corpusDocs.select(col("doc_id"), col("text"))
+    val batch = graft.Materialize.once(byId(batchDocs))
+    val bIds = batch.select(col("doc_id"))
+    val (corpusOnly, union) = besideBatch(corpusDocs, batch)
+    quotientMerge(jaccardPairsTouching(union, bIds, k, threshold),
+      corpusOnly.select(col("doc_id")), corpusLabels, bIds)
+  }
+
+  /** An incremental merge's batch, one row per id: (doc_id, text).
+    * Callers materialize it (it feeds the prelude, the probe and the
+    * label merge). */
+  private def byId(batchDocs: DataFrame): DataFrame =
+    batchDocs.select(col("doc_id"), col("text")).dropDuplicates("doc_id")
+
+  /** THE overlap-safe union prelude of every incremental merge:
+    * `side`'s (doc_id, text) rows minus the ids of `batch` (a
+    * materialized [[byId]] frame), and that plus the batch. An
+    * at-least-once ingest can replay a batch whose docs ALREADY landed
+    * on the corpus side (crash between the docs and labels publishes).
+    * A raw union would then hold duplicate doc_id rows, whose
+    * duplicated postings inflate df and the n_sh-based prefix cutoff —
+    * breaking prefix-filter completeness (silently missed merges) —
+    * and would emit duplicate label rows. So the batch is
+    * authoritative: the other side anti-joins its ids (batch ids are
+    * micro-batch-sized → broadcast, the corpus stays un-shuffled), and
+    * the two sides are disjoint by construction. Replaying a
+    * fully-committed batch recomputes the identical merge
+    * (deterministic), so republishing is a no-op — the
+    * checkpoint-idempotence CorpusStreamSpec pins. */
+  private def besideBatch(side: DataFrame, batch: DataFrame): (DataFrame, DataFrame) = {
+    val rest = side.select(col("doc_id"), col("text"))
       .join(broadcast(batch.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-    val union = corpusOnly.unionByName(batch)
-    val newPairs = jaccardPairsTouching(union,
-      batch.select(col("doc_id")), k, threshold)
-    quotientMerge(newPairs, corpusOnly.select(col("doc_id")), corpusLabels,
-      batch.select(col("doc_id")))
+    (rest, rest.unionByName(batch))
   }
 
   /** [[incrementalClusters]] probing a [[publishJaccardLake]] prefix
@@ -1139,12 +1114,9 @@ object Dedup {
       corpusLabels: DataFrame, priorFresh: DataFrame,
       batchDocs: DataFrame, k: Int = 2, threshold: Double = 0.5): DataFrame = {
     val spark = batchDocs.sparkSession
-    val batch = graft.Materialize.once(
-      batchDocs.select(col("doc_id"), col("text")).dropDuplicates("doc_id"))
+    val batch = graft.Materialize.once(byId(batchDocs))
     val bIds = batch.select(col("doc_id"))
-    val prior = priorFresh.select(col("doc_id"), col("text"))
-      .join(broadcast(bIds), Seq("doc_id"), "left_anti")
-    val fresh = prior.unionByName(batch)
+    val (prior, fresh) = besideBatch(priorFresh, batch)
     val pairs = jaccardPairsTouchingLakeAt(dir, verName, fresh, bIds, k, threshold)
     // corpus side for labeling = indexed docs + prior fresh, each id
     // once: the batch anti-joins out (a re-delivered batch may sit in
@@ -1176,18 +1148,8 @@ object Dedup {
     * reproduces the committed labels exactly (min-labels compose). */
   private def quotientMerge(newPairs: DataFrame, corpusIds: DataFrame,
       corpusLabels: DataFrame, batchIds: DataFrame): DataFrame = {
-    val lbl = corpusLabels.select(col("doc_id"), col("cluster_id"))
-      .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
-    val e = newPairs
-      .join(lbl.select(col("doc_id").as("doc_a"), col("cluster_id").as("ca")),
-        Seq("doc_a"), "left")
-      .join(lbl.select(col("doc_id").as("doc_b"), col("cluster_id").as("cb")),
-        Seq("doc_b"), "left")
-      .select(coalesce(col("ca"), col("doc_a")).as("doc_a"),
-        coalesce(col("cb"), col("doc_b")).as("doc_b"))
-      .where(col("doc_a") =!= col("doc_b"))
-    val quotient = clusters(e) // (doc_id = node, cluster_id) — tiny graph
-    val q = quotient.select(col("doc_id").as("node"), col("cluster_id").as("qlab"))
+    val lbl = labelsOutside(corpusLabels, batchIds)
+    val q = quotientOf(newPairs, lbl)
     val corpusSide = corpusIds
       .join(lbl, Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("cluster_id"), col("doc_id")).as("lab0"))
@@ -1197,6 +1159,28 @@ object Dedup {
       .join(q.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
       .select(col("doc_id"), coalesce(col("qlab"), col("doc_id")).as("cluster_id"))
     corpusSide.unionByName(batchSide)
+  }
+
+  /** The published labels outside the batch — the contraction map
+    * (restricted to corpus-side ids; see [[quotientMerge]]). */
+  private def labelsOutside(corpusLabels: DataFrame, batchIds: DataFrame): DataFrame =
+    corpusLabels.select(col("doc_id"), col("cluster_id"))
+      .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
+
+  /** THE quotient CC of [[quotientMerge]] and [[quotientMergeDelta]]:
+    * each endpoint of `pairs` with a label in `lbl` contracts to it
+    * (others stay themselves), self-loops drop, and [[clusters]] runs
+    * on that batch-sized graph. Returns (node, qlab). */
+  private def quotientOf(pairs: DataFrame, lbl: DataFrame): DataFrame = {
+    val e = pairs
+      .join(lbl.select(col("doc_id").as("doc_a"), col("cluster_id").as("ca")),
+        Seq("doc_a"), "left")
+      .join(lbl.select(col("doc_id").as("doc_b"), col("cluster_id").as("cb")),
+        Seq("doc_b"), "left")
+      .select(coalesce(col("ca"), col("doc_a")).as("doc_a"),
+        coalesce(col("cb"), col("doc_b")).as("doc_b"))
+      .where(col("doc_a") =!= col("doc_b"))
+    clusters(e).select(col("doc_id").as("node"), col("cluster_id").as("qlab"))
   }
 
   /** CHANGED-ROWS-ONLY [[incrementalClusters]] — the delta-segment
@@ -1219,14 +1203,11 @@ object Dedup {
     * full output disappears along with the O(corpus) write. */
   def incrementalClustersDelta(corpusDocs: DataFrame, corpusLabels: DataFrame,
       batchDocs: DataFrame, k: Int = 2, threshold: Double = 0.5): DataFrame = {
-    val batch = graft.Materialize.once(
-      batchDocs.select(col("doc_id"), col("text")).dropDuplicates("doc_id"))
-    val corpusOnly = corpusDocs.select(col("doc_id"), col("text"))
-      .join(broadcast(batch.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-    val union = corpusOnly.unionByName(batch)
-    val newPairs = jaccardPairsTouching(union,
-      batch.select(col("doc_id")), k, threshold)
-    quotientMergeDelta(newPairs, corpusLabels, batch.select(col("doc_id")))
+    val batch = graft.Materialize.once(byId(batchDocs))
+    val bIds = batch.select(col("doc_id"))
+    val (_, union) = besideBatch(corpusDocs, batch)
+    quotientMergeDelta(jaccardPairsTouching(union, bIds, k, threshold),
+      corpusLabels, bIds)
   }
 
   /** [[incrementalClustersDelta]] against a RESOLVED
@@ -1237,14 +1218,12 @@ object Dedup {
   private[graft] def incrementalClustersLakeAtDelta(dir: String, verName: String,
       corpusLabels: DataFrame, priorFresh: DataFrame,
       batchDocs: DataFrame, k: Int = 2, threshold: Double = 0.5): DataFrame = {
-    val batch = graft.Materialize.once(
-      batchDocs.select(col("doc_id"), col("text")).dropDuplicates("doc_id"))
+    val batch = graft.Materialize.once(byId(batchDocs))
     val bIds = batch.select(col("doc_id"))
-    val prior = priorFresh.select(col("doc_id"), col("text"))
-      .join(broadcast(bIds), Seq("doc_id"), "left_anti")
-    val fresh = prior.unionByName(batch)
-    val pairs = jaccardPairsTouchingLakeAt(dir, verName, fresh, bIds, k, threshold)
-    quotientMergeDelta(pairs, corpusLabels, bIds)
+    val (_, fresh) = besideBatch(priorFresh, batch)
+    quotientMergeDelta(
+      jaccardPairsTouchingLakeAt(dir, verName, fresh, bIds, k, threshold),
+      corpusLabels, bIds)
   }
 
   /** The changed-rows core of [[incrementalClustersDelta]]: same
@@ -1269,18 +1248,8 @@ object Dedup {
     // the pair probe is the expensive input and now has TWO consumers
     // (the contraction and the endpoint set) — materialize once
     val pairs = graft.Materialize.once(newPairs)
-    val lbl = corpusLabels.select(col("doc_id"), col("cluster_id"))
-      .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
-    val e = pairs
-      .join(lbl.select(col("doc_id").as("doc_a"), col("cluster_id").as("ca")),
-        Seq("doc_a"), "left")
-      .join(lbl.select(col("doc_id").as("doc_b"), col("cluster_id").as("cb")),
-        Seq("doc_b"), "left")
-      .select(coalesce(col("ca"), col("doc_a")).as("doc_a"),
-        coalesce(col("cb"), col("doc_b")).as("doc_b"))
-      .where(col("doc_a") =!= col("doc_b"))
-    val quotient = clusters(e) // (doc_id = node, cluster_id) — tiny graph
-    val q = quotient.select(col("doc_id").as("node"), col("cluster_id").as("qlab"))
+    val lbl = labelsOutside(corpusLabels, batchIds)
+    val q = quotientOf(pairs, lbl)
     val relabeled = lbl
       .join(broadcast(q.withColumnRenamed("node", "cluster_id")), Seq("cluster_id"))
       .where(col("qlab") =!= col("cluster_id"))
@@ -1373,28 +1342,20 @@ object Dedup {
     // string-set verify in containmentPairs removes any extra
     // candidates a collision could add (r19-opt)
     val postings = hashedPostings(sets)
-    val dfs = postings.groupBy(col("s")).agg(count(lit(1)).as("df"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("df"), col("s"))
     // materialized ONCE: the ranked posting table feeds BOTH candidate
     // sides (A's prefix and B's full list) — un-truncated, the whole
     // postings/df/rank chain re-ran per side (r18-opt; the caller
     // materializes `sets`, so the two explode references above it are
     // cheap block re-reads).
-    val ranked = graft.Materialize.once(postings.join(dfs, "s")
-      .repartition(parts, col("doc_id"))
-      .withColumn("rk", row_number().over(w)))
-    val prefix = ranked
-      .where(col("rk") <= col("n_sh") - ceil(col("n_sh") * threshold) + 1)
-      .select(col("s"), col("doc_id").as("doc_a"), col("n_sh").as("n_a"),
-        col("rk").as("rk_a"))
-    val all = ranked.select(col("s"), col("doc_id").as("doc_b"),
-      col("n_sh").as("n_b"), col("rk").as("rk_b"))
+    val ranked = graft.Materialize.once(
+      rankPostings(postings, postingDfs(postings), parts))
     val posOk =
       if (!positional) lit(true)
       else (lit(1) + least(col("n_a") - col("rk_a"), col("n_b") - col("rk_b")))
         .cast("double") >= col("n_a").cast("double") * threshold - 1e-9
-    prefix.join(all, Seq("s"))
+    // A's prefix against B's FULL ranked list
+    prefixSide(ranked.where(inPrefix(threshold)), "a")
+      .join(prefixSide(ranked, "b"), Seq("s"))
       .where(col("doc_a") =!= col("doc_b") &&
         col("n_b") >= col("n_a") * threshold && posOk)
       .select(col("doc_a"), col("doc_b"))

@@ -20,20 +20,11 @@ import org.apache.spark.sql.expressions.Window
   */
 object Knn {
 
-  /** dot(a, b) in double precision, sequential (index-order) sum. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, x) => acc + x)
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
   /** Cosine over array<float> — native codegen'd expression computing
-    * the same sequential double arithmetic as [[cosineHof]]
-    * (NativeExprSpec asserts bit-equality). */
+    * dot(a, b) / (‖a‖·‖b‖) with sequential (index-order) double sums;
+    * NativeExprSpec asserts bit-equality with the HOF reference form
+    * (`ReferenceForms.cosineHof` in the test sources). */
   def cosine(a: Column, b: Column): Column = graft.expressions.native.cosineF(a, b)
-
-  /** Reference HOF formulation of [[cosine]] (interpreted lambdas). */
-  def cosineHof(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   // ------------------------------------------------- 29: brute-force topk
   /** Exact cosine top-k: every (query, corpus) pair via broadcast
@@ -55,14 +46,10 @@ object Knn {
   }
 
   // --------------------------------------------- 30: LSH-bucketed variant
-  /** Deterministic pseudo-random hyperplane component for (plane p,
-    * dim i): xxhash64 -> uniform in [-0.5, 0.5). */
-  private def planeComponent(p: Column, i: Column): Column =
-    (pmod(xxhash64(lit("hyperplane"), p, i), lit(1000000L)).cast("double")
-      / 1000000.0) - 0.5
-
-  /** Sign-bit signature of `emb` under `nPlanes` random hyperplanes —
-    * native codegen'd expression; HOF reference kept below. */
+  /** Sign-bit signature of `emb` under `nPlanes` random hyperplanes
+    * (plane component for (plane p, dim i): xxhash64 -> uniform in
+    * [-0.5, 0.5)) — native codegen'd expression; the HOF reference form
+    * is `ReferenceForms.lshSignatureHof` in the test sources. */
   def lshSignature(emb: Column, nPlanes: Int): Column =
     graft.expressions.native.lshSign(emb, nPlanes)
 
@@ -73,18 +60,6 @@ object Knn {
     * operators below. */
   def lshSignatureSha(emb: Column, nPlanes: Int): Column =
     graft.expressions.native.lshSignSha(emb, nPlanes)
-
-  /** Reference HOF formulation of [[lshSignature]]. */
-  def lshSignatureHof(emb: Column, nPlanes: Int): Column =
-    aggregate(
-      transform(sequence(lit(0), lit(nPlanes - 1)), p => {
-        val proj = aggregate(
-          zip_with(emb, sequence(lit(0), size(emb) - 1),
-            (x, i) => x.cast("double") * planeComponent(p, i)),
-          lit(0.0), (acc, x) => acc + x)
-        when(proj > 0, call_function("shiftleft", lit(1L), p)).otherwise(lit(0L))
-      }),
-      lit(0L), (acc, x) => acc.bitwiseOR(x))
 
   /** Occupancy-targeted LSH band width: 2^bandBits buckets per band
     * sized so a bucket holds ~targetBucketRows vectors. At n=2k this
@@ -124,15 +99,9 @@ object Knn {
     val bb = if (bandBits > 0) bandBits
       else autoBandBits(if (corpusSize > 0) corpusSize else corpus.count())
     val nPlanes = nBands * bb
-    val mask = (1L << bb) - 1
-    val banded = corpus
-      .select(col("vec_id"), col("embedding"),
-        lshSignatureSha(col("embedding"), nPlanes).as("sig"))
-      .select(col("vec_id"), col("embedding"),
-        posexplode(transform(sequence(lit(0), lit(nBands - 1)),
-          b => call_function("shiftrightunsigned", col("sig"), b * bb)
-            .bitwiseAND(lit(mask)))))
-      .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
+    val banded = Dedup.bitBands(corpus.select(col("vec_id"), col("embedding"),
+        lshSignatureSha(col("embedding"), nPlanes).as("sig")),
+      Seq("vec_id", "embedding"), "sig", nBands, bb, ("band", "bucket"))
     val a = banded.select(col("band"), col("bucket"),
       col("vec_id").as("vec_a"), col("embedding").as("emb_a"))
     val b = banded.select(col("band"), col("bucket"),
@@ -156,15 +125,10 @@ object Knn {
     val bb = if (bandBits > 0) bandBits
       else autoBandBits(if (corpusSize > 0) corpusSize else corpus.count())
     val nPlanes = nBands * bb
-    val mask = (1L << bb) - 1
     def banded(df: DataFrame, idCol: String, embOut: String): DataFrame =
-      df.select(col("vec_id").as(idCol), col("embedding").as(embOut),
-          lshSignatureSha(col("embedding"), nPlanes).as("sig"))
-        .select(col(idCol), col(embOut),
-          posexplode(transform(sequence(lit(0), lit(nBands - 1)),
-            b => call_function("shiftrightunsigned", col("sig"), b * bb)
-              .bitwiseAND(lit(mask)))))
-        .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
+      Dedup.bitBands(df.select(col("vec_id").as(idCol), col("embedding").as(embOut),
+          lshSignatureSha(col("embedding"), nPlanes).as("sig")),
+        Seq(idCol, embOut), "sig", nBands, bb, ("band", "bucket"))
     val c = banded(corpus, "vec_id", "emb")
     val q = broadcast(banded(queries, "query_id", "q_emb"))
     val candidates = c.join(q, Seq("band", "bucket"))
@@ -435,16 +399,12 @@ object Knn {
     * native codegen'd kernel (n·k evaluations per assignment pass;
     * the HOF form paid interpreted lambdas per element — measured
     * 5.4s → dedup_semantic's assignment dominated its wall once the
-    * cell count rode the √n dial). [[cosineDHof]] is the reference
-    * formulation; NativeExprSpec asserts bit-equality. */
+    * cell count rode the √n dial). The HOF reference formulation is
+    * `ReferenceForms.cosineDHof` in the test sources (identical
+    * sequential double arithmetic, so trained-centroid scores replay
+    * across engines); NativeExprSpec asserts bit-equality. */
   private def cosineD(a: Column, b: Column): Column =
     graft.expressions.native.cosineFD(a, b)
-
-  /** Reference HOF formulation of [[cosineD]]: identical sequential
-    * double arithmetic, so trained-centroid scores replay across
-    * engines. */
-  private[graft] def cosineDHof(a: Column, b: Column): Column =
-    dot(a, b) / (norm(a) * norm(b))
 
   /** Nearest-centroid assignment against (possibly trained, double-
     * array) centroids — the [[ivfAssign]] narrow-map shape (r19-opt:

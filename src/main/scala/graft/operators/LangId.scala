@@ -55,9 +55,12 @@ object LangId {
     * EXCHANGE disappear (the frame is a pure narrow map now), and md5
     * runs once per DISTINCT trigram — the per-doc dedup that was ~2×
     * slower as a DataFrame-level string-keyed aggregation is a plain
-    * in-kernel hashmap. Bit-identical to [[trigramBucketsExploded]]
-    * (LangIdSpec/NativeExprSpec assert corpus + adversarial equality;
-    * the normalized text is staged as an attribute, same as before). */
+    * in-kernel hashmap. Bit-identical to the pre-r19 built-in
+    * composition (explode one row per character position, md5 per
+    * occurrence, then the (doc, b) aggregation), kept as
+    * `ReferenceForms.trigramBucketsExploded` in the test sources;
+    * NativeExprSpec asserts corpus + adversarial equality (the
+    * normalized text is staged as an attribute, same as before). */
   private[graft] def trigramBuckets(docs: DataFrame, buckets: Int): DataFrame =
     docs.select(col("doc_id"), col("lang"), Text.normalize(col("text")).as("s"))
       .where(length(col("s")) >= 3)
@@ -65,23 +68,6 @@ object LangId {
         explode(graft.expressions.native.trigramBucketCounts(col("s"), buckets)).as("bm"))
       .select(col("doc_id"), col("lang"),
         col("bm").getField("b").as("b"), col("bm").getField("m").as("m"))
-
-  /** The pre-r19 built-in composition of [[trigramBuckets]] — kept as
-    * the spec reference the kernel is asserted against (explode one
-    * row per character position, md5 per occurrence, then the (doc, b)
-    * aggregation; a mid-r19 variant aggregating on the raw trigram
-    * BEFORE the md5 measured ~2× slower — the string-keyed hash
-    * aggregation cost more than the md5 calls it saved). */
-  private[graft] def trigramBucketsExploded(docs: DataFrame, buckets: Int): DataFrame =
-    docs.select(col("doc_id"), col("lang"), Text.normalize(col("text")).as("s"))
-      .where(length(col("s")) >= 3)
-      .select(col("doc_id"), col("lang"),
-        explode(expr("transform(sequence(1, length(s) - 2), i -> substring(s, i, 3))")).as("t"))
-      .select(col("doc_id"), col("lang"),
-        (conv(substring(md5(concat(lit("lid:"), col("t"))), 1, 8), 16, 10)
-          .cast("long") % buckets).as("b"))
-      .groupBy(col("doc_id"), col("lang"), col("b"))
-      .agg(count(lit(1)).as("m"))
 
   /** (doc_id, lang_label, lang_tri, n_tri): trigram-NB prediction per
     * document. `trainFilter` selects the labeled training rows (the

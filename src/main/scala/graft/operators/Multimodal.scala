@@ -208,11 +208,8 @@ object Multimodal {
     // recompute rule) — without this every PNG would decode TWICE;
     // the materialized frame is three longs per image
     val hashed = graft.Materialize.once(avgHash(media))
-    val chunked = hashed.select(col("media_id"), col("phash"), col("ptot"),
-      posexplode(transform(sequence(lit(0), lit(nChunks - 1)),
-        c => call_function("shiftrightunsigned", col("phash"), c * chunkBits)
-          .bitwiseAND(lit((1L << chunkBits) - 1)))))
-      .withColumnRenamed("pos", "chunk").withColumnRenamed("col", "val")
+    val chunked = Dedup.bitBands(hashed, Seq("media_id", "phash", "ptot"), "phash",
+      nChunks, chunkBits, ("chunk", "val"))
     // occupancy guard: hot (chunk, value) buckets never reach the join.
     // Materialized once — the capped frame feeds BOTH self-join sides,
     // so un-truncated the occupancy histogram + join re-ran per side

@@ -33,7 +33,7 @@ import org.apache.spark.sql.expressions.Window
   * probes broadcast. Nothing is ever corpus × corpus.
   *
   * Determinism notes: dist² is the sequential dot product of the
-  * difference vector with itself (same fold order as [[Knn.dot]]);
+  * difference vector with itself (sequential, index-order fold);
   * ADC partials are 1e-6-grid BIGINTs so the per-candidate sum is
   * order-free; every rank breaks ties by id.
   */
@@ -45,16 +45,11 @@ object Pq {
   /** round(Σ(a_i−b_i)², 6) with the cross-engine-stable term order:
     * difference vector first, then the sequential self-dot — native
     * codegen'd kernel (the n·m·kCodes assignment evaluations paid
-    * interpreted lambdas per element in the HOF form). [[dist2Hof]]
-    * is the reference; NativeExprSpec pins bit parity. */
+    * interpreted lambdas per element in the HOF form).
+    * `ReferenceForms.dist2Hof` in the test sources is the reference;
+    * NativeExprSpec pins bit parity. */
   private def dist2(a: Column, b: Column): Column =
     round(graft.expressions.native.dist2D(a, b), 6)
-
-  /** Reference HOF formulation of [[dist2]]. */
-  private[graft] def dist2Hof(a: Column, b: Column): Column = {
-    val d = zip_with(a, b, (x, y) => x - y)
-    round(dotSeq(d, d), 6)
-  }
 
   /** (id, block, sub) — vector split into `m` equal blocks of
     * d/m doubles. Requires m | d, enforced per row inside the slice

@@ -111,11 +111,8 @@ object LakeCatalog {
       val path = r.getAs[String]("path")
       val (ver, nTables, ptrMtime) =
         try {
-          val v = StormSinks.currentVersionName(spark, path)
-          val p = new org.apache.hadoop.fs.Path(s"$path/_current")
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          (v, StormSinks.groupTablesAt(spark, path, v).size,
-            fs.getFileStatus(p).getModificationTime)
+          val (v, mtime) = StormSinks.currentVersionStamp(spark, path)
+          (v, StormSinks.groupTablesAt(spark, path, v).size, mtime)
         } catch { case _: java.io.FileNotFoundException => ("<unpublished>", 0, 0L) }
       (r.getAs[String]("name"), path, r.getAs[String]("kind"),
         ver, nTables, ptrMtime)

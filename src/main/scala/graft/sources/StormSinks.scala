@@ -133,9 +133,11 @@ object StormSinks {
     try Some(org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri, fs.getConf))
     catch { case _: org.apache.hadoop.fs.UnsupportedFileSystemException => None }
 
+  private def pointerPath(dir: String) = new org.apache.hadoop.fs.Path(s"$dir/_current")
+
   private def readPointer(fs: org.apache.hadoop.fs.FileSystem,
       dir: String): Option[(Int, String)] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_current")
+    val p = pointerPath(dir)
     val fc = fcFor(fs)
     val exists = fc.map(_.util().exists(p)).getOrElse(fs.exists(p))
     if (!exists) None
@@ -165,7 +167,7 @@ object StormSinks {
   private def publish(fs: org.apache.hadoop.fs.FileSystem, dir: String,
       version: Int): Unit = {
     val tmp = new org.apache.hadoop.fs.Path(s"$dir/._current.tmp")
-    val cur = new org.apache.hadoop.fs.Path(s"$dir/_current")
+    val cur = pointerPath(dir)
     fcFor(fs) match {
       case Some(fc) =>
         // write tmp AND rename through the same (raw / native) channel,
@@ -335,6 +337,25 @@ object StormSinks {
     val ptr = readPointer(fs, dir).orElse { Thread.sleep(100); readPointer(fs, dir) }
     ptr.getOrElse(throw new java.io.FileNotFoundException(
       s"no _current pointer under $dir"))._2
+  }
+
+  /** [[currentVersionName]] with the modification time of the pointer
+    * that named it — the catalog's freshness stamp. Both come from ONE
+    * consistent observation: the pointer is stat'ed between two reads
+    * of its content and the pair is kept only when both reads name the
+    * same version (versions only grow, so equal names mean no publish
+    * replaced the pointer in between); otherwise it looks again. A
+    * separate stat after the read could pair version N with the mtime
+    * of version N+1. */
+  def currentVersionStamp(spark: org.apache.spark.sql.SparkSession,
+      dir: String): (String, Long) = {
+    val fs = fsFor(spark, dir)
+    val p = pointerPath(dir)
+    val v = currentVersionName(spark, dir)
+    val mtime = fcFor(fs).map(_.getFileStatus(p)).getOrElse(fs.getFileStatus(p))
+      .getModificationTime
+    if (currentVersionName(spark, dir) == v) (v, mtime)
+    else currentVersionStamp(spark, dir)
   }
 
   /** Whether version `verName` is segmented (carries a manifest

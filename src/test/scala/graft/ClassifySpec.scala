@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.Classify
 import graft.sources.Tables
+import graft.ReferenceForms.topTokenCountHof
 
 /** Trained linear quality classifier (SURVEY §2 #128). */
 class ClassifySpec extends SparkSpec {
@@ -30,7 +31,7 @@ class ClassifySpec extends SparkSpec {
       aggregate(col("tk"), lit(0L), (a, t) => a + length(t)).as("tot_len"),
       size(filter(col("tk"), t => t.rlike("[a-z]"))).cast("long").as("n_alpha"),
       size(filter(col("tk"), t => array_contains(enArr, t))).cast("long").as("stop_hits"),
-      Text.topTokenCountHof(col("tk")).cast("long").as("top_n"),
+      topTokenCountHof(col("tk")).cast("long").as("top_n"),
       size(col("bg")).cast("long").as("n_bg"),
       size(array_distinct(col("bg"))).cast("long").as("n_bg_d"))
     val now = Classify.measuredOf(src)

@@ -435,6 +435,16 @@ class DedupSpec extends SparkSpec {
       "every grown-corpus member must read true after republish")
   }
 
+  test("publishJaccardLake: a failed publish throws and leaves no checkpoint behind") {
+    // a lake dir under a regular file cannot be created
+    val notADir = java.nio.file.Files.createTempFile("graft-jlake-file", "")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    intercept[Exception](
+      Dedup.publishJaccardLake(docs, s"$notADir/lake", k = 2, threshold = 0.5))
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"failed publish left checkpointed RDDs $left")
+  }
+
   test("keepBest: elects the longest member, min-id on ties, counts members") {
     import spark.implicits._
     val labels = Seq((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L))

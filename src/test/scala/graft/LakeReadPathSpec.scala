@@ -12,7 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * version layout inside StormSinks: outside it, no code may call
   * `currentVersionDir(` (whose `<ver>/<table>` paths miss delta
   * segments), name the `_segments` manifest as a literal or a path
-  * segment, or parse a version name with `lastIndexOf("v-")`. Comments are ignored. (The Spark
+  * segment, parse a version name with `lastIndexOf("v-")`, or name
+  * the `_current` pointer's path. Comments are ignored. (The Spark
   * session is never started here.) */
 class LakeReadPathSpec extends AnyFunSuite {
   private val owner = Paths.get("src/main/scala/graft/sources/StormSinks.scala")
@@ -46,5 +47,17 @@ class LakeReadPathSpec extends AnyFunSuite {
     } yield s"$f: $name"
     assert(found.isEmpty,
       s"lake version layout used outside StormSinks:\n${found.mkString("\n")}")
+  }
+
+  test("outside StormSinks, src/main names no _current pointer path") {
+    // the pointer is read (name and mtime) only through StormSinks, so
+    // a stat of it elsewhere cannot pair one version with another's mtime
+    val pointer = """"_current"|/_current\b""".r
+    val files = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.contains(owner), "run from the repo root")
+    assert(pointer.findFirstIn(codeOf(owner)).isDefined)
+    val found = files.filter(f => f != owner && pointer.findFirstIn(codeOf(f)).isDefined)
+    assert(found.isEmpty, s"_current pointer path outside StormSinks:\n${found.mkString("\n")}")
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Knn}
+import graft.ReferenceForms.{cosineDHof, cosineHof, dist2Hof, lshSignatureHof,
+  shinglesHof, simhash64Hof, topTokenCountHof, trigramBucketsExploded}
 import graft.sources.Tables
 
 /** The native codegen expressions must reproduce the built-in-function
@@ -22,7 +24,7 @@ class NativeExprSpec extends SparkSpec {
 
   test("simhash64 native == HOF on corpus + edges") {
     val diff = docs.select(
-      Dedup.simhash64($"text").as("a"), Dedup.simhash64Hof($"text").as("b"))
+      Dedup.simhash64($"text").as("a"), simhash64Hof($"text").as("b"))
       .where($"a" =!= $"b").count()
     assert(diff == 0)
   }
@@ -30,7 +32,7 @@ class NativeExprSpec extends SparkSpec {
   test("shingles native == HOF (k=2,3) on corpus + edges") {
     for (k <- Seq(2, 3)) {
       val diff = docs.select(
-        Dedup.shingles($"text", k).as("a"), Dedup.shinglesHof($"text", k).as("b"))
+        Dedup.shingles($"text", k).as("a"), shinglesHof($"text", k).as("b"))
         .where($"a" =!= $"b").count()
       assert(diff == 0, s"k=$k")
     }
@@ -114,7 +116,7 @@ class NativeExprSpec extends SparkSpec {
     // whole-corpus tokens (incl. the planted empty/whitespace/mixed
     // edge docs above)
     val diff = docs.select(Text.tokensOrEmpty($"text").as("tk"))
-      .select(Text.topTokenCount($"tk").as("a"), Text.topTokenCountHof($"tk").as("b"))
+      .select(Text.topTokenCount($"tk").as("a"), topTokenCountHof($"tk").as("b"))
       .where(!($"a" <=> $"b")).count()
     assert(diff == 0)
     // adversarial arrays the tokenizer can't produce: nulls inside the
@@ -126,7 +128,7 @@ class NativeExprSpec extends SparkSpec {
       .unionAll(arrs.toDF("tk")) // non-trivial partitioning
       .repartition(2)            // defeat ConvertToLocalRelation folding
     val diff2 = df
-      .select(Text.topTokenCount($"tk").as("a"), Text.topTokenCountHof($"tk").as("b"))
+      .select(Text.topTokenCount($"tk").as("a"), topTokenCountHof($"tk").as("b"))
       .where(!($"a" <=> $"b")).count()
     assert(diff2 == 0)
   }
@@ -151,7 +153,7 @@ class NativeExprSpec extends SparkSpec {
     val all = docs.unionByName(adv)
     for (buckets <- Seq(7, 4096)) {
       val a = LangId.trigramBuckets(all, buckets)
-      val b = LangId.trigramBucketsExploded(all, buckets)
+      val b = trigramBucketsExploded(all, buckets)
       assert(a.schema.map(f => (f.name, f.dataType)) ==
         b.schema.map(f => (f.name, f.dataType)))
       val diff = a.unionByName(b).groupBy("doc_id", "lang", "b", "m")
@@ -237,7 +239,7 @@ class NativeExprSpec extends SparkSpec {
   test("minhash signature native == HOF on corpus") {
     val diff = docs.select(
       graft.expressions.native.minhashSig($"text", 3, 32).as("a"),
-      Dedup.minhashSignature(Dedup.shinglesHof($"text", 3), 32).as("b"))
+      Dedup.minhashSignature(shinglesHof($"text", 3), 32).as("b"))
       .where($"a" =!= $"b").count()
     assert(diff == 0)
   }
@@ -249,12 +251,12 @@ class NativeExprSpec extends SparkSpec {
     val joined = e.crossJoin(broadcast(q))
     val cosDiff = joined.select(
       Knn.cosine($"embedding", $"q").as("a"),
-      Knn.cosineHof($"embedding", $"q").as("b"))
+      cosineHof($"embedding", $"q").as("b"))
       .where($"a" =!= $"b" && !(isnan($"a") && isnan($"b"))).count()
     assert(cosDiff == 0)
     val sigDiff = e.select(
       Knn.lshSignature($"embedding", 16).as("a"),
-      Knn.lshSignatureHof($"embedding", 16).as("b"))
+      lshSignatureHof($"embedding", 16).as("b"))
       .where($"a" =!= $"b").count()
     assert(sigDiff == 0)
     // mixed float-vector × double-centroid kernel (k-means / Rocchio
@@ -264,14 +266,14 @@ class NativeExprSpec extends SparkSpec {
       transform($"q", x => x.cast("double") * 1.37 + 0.001).as("c"))
     val fdDiff = e.crossJoin(broadcast(cents)).select(
       graft.expressions.native.cosineFD($"embedding", $"c").as("a"),
-      Knn.cosineDHof($"embedding", $"c").as("b"))
+      cosineDHof($"embedding", $"c").as("b"))
       .where($"a" =!= $"b" && !(isnan($"a") && isnan($"b"))).count()
     assert(fdDiff == 0)
     // PQ code-assignment distance: native == HOF over double pairs
     val dd = e.select(transform($"embedding", x => x.cast("double")).as("v"))
       .crossJoin(broadcast(cents))
       .select(round(graft.expressions.native.dist2D($"v", $"c"), 6).as("a"),
-        graft.operators.Pq.dist2Hof($"v", $"c").as("b"))
+        dist2Hof($"v", $"c").as("b"))
       .where($"a" =!= $"b").count()
     assert(dd == 0)
   }
