@@ -47,4 +47,20 @@ object GraftSession {
       // limit bites. Production executors run 64g+ heaps, so this is a
       // deploy-config fix, not a bench workaround.
       .config("spark.buffer.pageSize", "4m")
+      // Process spawns (graft.sources.GraftLocalFs): Spark ships without
+      // libhadoop, so Hadoop's stock `file:` filesystem forks `chmod`
+      // for every file and directory it creates and `readlink` for
+      // every FileContext rename. A JFR jdk.ProcessStart recording of
+      // one seed-1 perfbench storm_stream run counted 893 process
+      // starts, 450 of them chmod and 432 readlink (~40 per micro-batch,
+      // serial on the stream thread through the offsets, commits,
+      // sources and _spark_metadata logs); with this class, none.
+      // Graft's subclass makes the same calls through NIO with the
+      // same results (chmod's sticky-bit and set-id-directory cases
+      // still fall back to the command); `file:` only — HDFS and object
+      // stores keep their own classes, and streaming keeps Spark's
+      // FileContext checkpoint manager and its atomic rename.
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.GraftLocalFs].getName)
 }

@@ -674,4 +674,89 @@ object Kernels {
     }
     true
   }
+
+  // ------------------------------------------------------- ParseFloat
+  /** The finite-number forms Go's strconv.ParseFloat accepts: optional
+    * sign, digits with the decimal point on either side (".5", "5.",
+    * "5"), optional decimal exponent ("1e2"), underscore separators
+    * only BETWEEN digits ("1_000" yes, "1_.5"/"1__0"/"_1" no; "0x_1" is
+    * the one leading-underscore form the hex prefix allows), and hex
+    * floats ("0x1p-2", "0x1.8p+3", "0x.8p1") with a mandatory binary
+    * exponent (go/spec FloatLit). The storm oracle's DuckDB SQL matches
+    * the same three strings. */
+  private val DU = "[0-9](?:_?[0-9])*" // decimal digits, Go underscore rule
+  private val HU = "[0-9a-fA-F](?:_?[0-9a-fA-F])*"
+  private[graft] val DecimalFloatRe = s"^[+-]?($DU(\\.(?:$DU)?)?|\\.$DU)([eE][+-]?$DU)?$$"
+  private[graft] val HexFloatRe = s"^[+-]?0[xX](_?$HU(\\.(?:$HU)?)?|\\.$HU)[pP][+-]?$DU$$"
+  private[graft] val InfRe = "^[+-]?(inf|infinity)$"
+  private val decimalFloat = java.util.regex.Pattern.compile(DecimalFloatRe)
+  private val hexFloat = java.util.regex.Pattern.compile(HexFloatRe)
+  private val infinity = java.util.regex.Pattern.compile(InfRe)
+  private val hexInt = java.util.regex.Pattern.compile("^0[xX]([0-9a-fA-F]*)")
+  private val hexFrac = java.util.regex.Pattern.compile("^0[xX][0-9a-fA-F]*\\.([0-9a-fA-F]*)")
+  private val hexExp = java.util.regex.Pattern.compile("[pP]([+-]?[0-9]+)$")
+
+  /** `regexp_extract(s, re, 1)`: the first match's group, else "". */
+  private def group1(re: java.util.regex.Pattern, s: String): String = {
+    val m = re.matcher(s)
+    if (m.find()) m.group(1) else ""
+  }
+
+  /** strconv.ParseFloat with every error mapped to 0 (the storm
+    * reference's parseFloatOrZero), on an already-trimmed string:
+    *  - a finite decimal form parses with its underscores stripped;
+    *    a value that overflows to ±Inf ("1e999") is Go's ErrRange, so 0;
+    *  - a hex float is ±M · 2^(p − 4·|frac|) with M the int ++ frac
+    *    digits read as ONE unsigned hex integer — correctly rounded
+    *    while M has at most 16 SIGNIFICANT digits (leading zeros don't
+    *    count); a longer M, an exponent outside `Int` and an overflow
+    *    to ±Inf give 0 on both engines (Go would round the long
+    *    mantissa, SURVEY §1);
+    *  - "inf"/"infinity" with an optional sign and "nan", any case, are
+    *    ±Inf and NaN; everything else is 0.
+    * The gates match with `find()`, as RLike does, so a final line
+    * terminator ("1.5\n") still parses. Bit-for-bit the value of the
+    * regex composition ReferenceForms.lenientDoubleRegex (test
+    * sources), `-0.0` and NaN included, wherever that composition does
+    * not throw (NativeExprSpec); one static call replaces its ~12
+    * argument references and a dozen regex expressions per column. */
+  def lenientDouble(text: UTF8String): Double = {
+    val t = text.toString
+    if (decimalFloat.matcher(t).find()) {
+      val d =
+        try java.lang.Double.parseDouble(t.replace("_", ""))
+        catch { case _: NumberFormatException => return 0.0 }
+      if (Math.abs(d) == Double.PositiveInfinity) 0.0 else d
+    } else if (hexFloat.matcher(t).find()) hexDouble(t)
+    else {
+      val lower = t.toLowerCase(java.util.Locale.ROOT)
+      if (infinity.matcher(lower).find()) {
+        if (t.startsWith("-")) Double.NegativeInfinity else Double.PositiveInfinity
+      } else if (lower == "nan") Double.NaN
+      else 0.0
+    }
+  }
+
+  /** The hex branch of [[lenientDouble]] on a string its gate matched,
+    * in the composition's operation order: sign * M * 2^e. */
+  private def hexDouble(t: String): Double = {
+    val u = t.replace("_", "")
+    val sign = if (u.startsWith("-")) -1.0 else 1.0
+    val body = if (u.startsWith("-") || u.startsWith("+")) u.substring(1) else u
+    val ip = group1(hexInt, body)
+    val fp = group1(hexFrac, body)
+    val digits = ip + fp
+    var lead = 0
+    while (lead < digits.length && digits.charAt(lead) == '0') lead += 1
+    if (digits.length - lead > 16) return 0.0
+    val ex =
+      try Integer.parseInt(group1(hexExp, body))
+      catch { case _: NumberFormatException => return 0.0 }
+    val m = java.lang.Long.parseUnsignedLong(digits.substring(lead).padTo(1, '0'), 16)
+    // unsigned long -> double, correctly rounded (the sticky low bit
+    // keeps round-half-even exact for values past 2^63)
+    val md = if (m >= 0) m.toDouble else ((m >>> 1) | (m & 1L)).toDouble * 2.0
+    val v = sign * md * StrictMath.pow(2.0, (ex.toLong - 4L * fp.length).toDouble)
+    if (Math.abs(v) == Double.PositiveInfinity) 0.0 else v
+  }
 }

@@ -125,10 +125,15 @@ object Kernel {
   /** Count-min estimate over a broadcast [[CmsAgg]] sketch. */
   val cmsEstimate =
     Kernel("graft_cms_estimate", "cmsEstimate", Seq(BinaryType, longs), LongType, sql = true)
+  /** Go's strconv.ParseFloat-or-zero on a trimmed string: replaces the
+    * storm enrichment's regex composition, which grew the enrichment's
+    * whole-stage method past HotSpot's huge-method limit. */
+  val lenientDouble = Kernel("graft_lenient_double", "lenientDouble", Seq(text), DoubleType)
 
   val all: Seq[Kernel] = Seq(simhash64, nfc, shingles, minhashSig, simhash64Sha, minhashSigSha,
     cosineF, cosineFD, dist2D, intersectCount, ivfArgmin, kmArgmin, pqArgmin, topTokenCount,
-    trigramBucketCounts, dsirBucketCounts, lshSign, lshSignSha, bloomContains, cmsEstimate)
+    trigramBucketCounts, dsirBucketCounts, lshSign, lshSignSha, bloomContains, cmsEstimate,
+    lenientDouble)
 }
 
 /** A [[Kernel]] call: Spark's null-safe `defineCodeGen` around the
@@ -224,6 +229,8 @@ object native {
   /** Min-over-own-seeds count estimate — see [[Kernels.cmsEstimate]]. */
   def cmsEstimate(sketch: Column, indices: Column): Column =
     call(Kernel.cmsEstimate, sketch, indices)()
+  /** ParseFloat-or-zero — see [[Kernels.lenientDouble]]. */
+  def lenientDouble(text: Column): Column = call(Kernel.lenientDouble, text)()
 }
 
 /** Injected optimizer rule: rewrite `size(array_intersect(a, b))`

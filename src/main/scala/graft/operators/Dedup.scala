@@ -25,7 +25,7 @@ import graft.sources.StormSinks
   *      PPJoin prefix [[rankPostings]] + [[inPrefix]];
   *   2. candidates — a band-key join (capped by [[capBuckets]]), or a
   *      prefix join under [[prefixBound]] (self-join `doc_a < doc_b`
-  *      in [[jaccardCandidatesFromSets]], touching probe in
+  *      in [[selfCandidates]], touching probe in
   *      [[prefixCandidates]]), or the asymmetric [[minhashProbe]];
   *   3. one exact verify — [[verifyJaccard]] (containment keeps its own
   *      |A∩B|/|A| formula);
@@ -758,7 +758,7 @@ object Dedup {
         jaccardSets(docs, k)),
       threshold, positional)
 
-  /** The prefix SELF-join: each pair once, as doc_a < doc_b. */
+  /** The prefix SELF-join of a MATERIALIZED `sets` frame. */
   private def jaccardCandidatesFromSets(sets: DataFrame, threshold: Double,
       positional: Boolean): DataFrame = {
     val parts = sets.sparkSession.sessionState.conf.numShufflePartitions
@@ -768,12 +768,19 @@ object Dedup {
     // the r18-opt dedup_jaccard plan before this change).
     val prefix = graft.Materialize.once(
       jaccardPrefixOf(sets, threshold, parts))
+    selfCandidates(prefix, threshold, parts, positional)
+  }
+
+  /** The prefix SELF-join over one prefix table (s, doc_id, n_sh, rk):
+    * [[prefixBound]] with `doc_a < doc_b`, so each pair is generated
+    * once per shared prefix shingle, then deduped. */
+  private def selfCandidates(prefix: DataFrame, threshold: Double, parts: Int,
+      positional: Boolean = true): DataFrame =
     prefixSide(prefix, "a").join(prefixSide(prefix, "b"), Seq("s"))
       .where(prefixBound(col("doc_a") < col("doc_b"), threshold, positional))
       .select(col("doc_a"), col("doc_b"))
       .repartition(parts, col("doc_a"), col("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
-  }
 
   /** Exact n-gram Jaccard similarity join with PREFIX + POSITIONAL
     * FILTERING (the full PPJoin candidate rule): a pair with
@@ -855,9 +862,8 @@ object Dedup {
     * doc may sit on either side of a pair) and dedups. Lossless given
     * the shared order: for a J ≥ t pair the FIRST common shingle under
     * that order lies in both prefixes, and its row passes both bounds.
-    * The self-join keeps its own `doc_a < doc_b` shape
-    * ([[jaccardCandidatesFromSets]]): this one would emit every self
-    * pair twice before the dedup shuffle. */
+    * Self-joins use [[selfCandidates]]: this shape would emit every
+    * self pair twice before the dedup shuffle. */
   private def prefixCandidates(a: DataFrame, b: DataFrame,
       threshold: Double, parts: Int): DataFrame =
     prefixSide(a, "a").join(prefixSide(b, "b"), Seq("s"))
@@ -950,8 +956,7 @@ object Dedup {
     val parts = spark.sessionState.conf.numShufflePartitions
     val prefix = StormSinks.readGroupTableAt(spark, dir, ver, "prefix")
     val sets = StormSinks.readGroupTableAt(spark, dir, ver, "sets")
-    verifyJaccard(prefixCandidates(prefix, prefix, threshold, parts),
-      sets, sets, threshold)
+    verifyJaccard(selfCandidates(prefix, threshold, parts), sets, sets, threshold)
   }
 
   /** [[jaccardPairsTouching]] against a [[publishJaccardLake]] index:

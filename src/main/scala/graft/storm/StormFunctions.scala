@@ -2,15 +2,17 @@ package graft.storm
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.expressions.native
 
 /** Storm-report enrichment, re-expressed as pure Spark `Column`
   * functions (reference: /root/reference/internal/domain/transform.go).
   *
   * Every function here compiles to built-in Catalyst expressions
-  * (CASE WHEN, regexp, sha2, date_trunc, format_string) — no UDFs —
-  * so the whole enrichment stays inside whole-stage codegen, gets
-  * column pruning / predicate pushdown for free, and is a narrow
-  * (shuffle-free) map at any scale.
+  * (CASE WHEN, regexp, sha2, date_trunc, format_string) plus one
+  * native kernel call, the ParseFloat of [[parseFloatOrZero]] and
+  * [[magnitudeRaw]] — no UDFs — so the whole enrichment stays inside
+  * whole-stage codegen, gets column pruning / predicate pushdown for
+  * free, and is a narrow (shuffle-free) map at any scale.
   *
   * Documented deviations from the reference (SURVEY.md §1):
   *  - IDs format magnitude as %.2f (Go's %g is not portable across
@@ -20,73 +22,11 @@ import org.apache.spark.sql.functions._
   */
 object StormFunctions {
 
-  /** Finite-number forms strconv.ParseFloat accepts — the full Go
-    * literal grammar: optional sign, digits with the decimal point on
-    * either side (".5", "5.", "5"), optional decimal exponent
-    * ("1e2"), underscore digit separators placed only BETWEEN digits
-    * ("1_000" yes, "1_.5"/"1__0"/"_1" no; "0x_1" is the one leading-
-    * underscore form the hex prefix allows), and hex floats
-    * ("0x1p-2", "0x1.8p+3", "0x.8p1") with a mandatory binary
-    * exponent. Go grammar refs: go/spec FloatLit; strconv
-    * ParseFloat accepts exactly these plus inf/nan forms. */
-  private val DU = "[0-9](?:_?[0-9])*" // decimal digits, Go underscore rule
-  private val HU = "[0-9a-fA-F](?:_?[0-9a-fA-F])*"
-  private val numRe = s"^[+-]?($DU(\\.(?:$DU)?)?|\\.$DU)([eE][+-]?$DU)?$$"
-  private val hexRe = s"^[+-]?0[xX](_?$HU(\\.(?:$HU)?)?|\\.$HU)[pP][+-]?$DU$$"
-  private val infRe = "^[+-]?(inf|infinity)$"
-
-  /** Exact hex-float value: mantissa digits (int ++ frac) as ONE hex
-    * integer M via conv(_,16,10), value = ±M · 2^(p − 4·|frac|) — the
-    * multiply is a pure exponent scale, so the result is correctly
-    * rounded whenever M fits 16 SIGNIFICANT hex digits (leading zeros
-    * stripped — they don't consume the 64-bit window). A LONGER
-    * mantissa maps to
-    * 0.0 on BOTH engines (Go rounds it — an edge documented in SURVEY
-    * §1, far past any feed's precision): conv's 64-bit window would
-    * silently truncate here while DuckDB's UBIGINT cast would THROW,
-    * so the explicit shared cutoff is the only way the two engines
-    * degrade identically. Overflow (±Inf) and unparseable-exponent
-    * cases yield 0 like Go's ErrRange does through the reference's
-    * err != nil branch. */
-  private def hexDouble(t: Column): Column = {
-    val u = regexp_replace(t, "_", "")
-    val sign = when(u.startsWith("-"), lit(-1.0)).otherwise(lit(1.0))
-    val body = regexp_replace(u, "^[+-]", "")
-    val ip = regexp_extract(body, "^0[xX]([0-9a-fA-F]*)", 1)
-    val fp = regexp_extract(body, "^0[xX][0-9a-fA-F]*\\.([0-9a-fA-F]*)", 1)
-    val ex = regexp_extract(body, "[pP]([+-]?[0-9]+)$", 1).cast("int")
-    val m = conv(concat(ip, fp), 16, 10).cast("double")
-    val v = sign * m * pow(lit(2.0), (ex - length(fp) * 4).cast("double"))
-    // the 16-digit cutoff counts SIGNIFICANT digits: leading zeros
-    // don't consume conv's 64-bit window, so "0x00000000000000001p0"
-    // must parse 1.0 (as Go does), not trip the guard
-    val sig = regexp_replace(concat(ip, fp), "^0+", "")
-    when(length(sig) > 16, lit(0.0)).otherwise(
-      coalesce(when(abs(v) === lit(Double.PositiveInfinity), lit(0.0)).otherwise(v),
-        lit(0.0)))
-  }
-
-  /** ParseFloat semantics on an already-trimmed string: finite forms
-    * (underscores stripped after the validity check), hex floats,
-    * signed Inf/Infinity, unsigned NaN (all case-insensitive like Go);
-    * everything else -> 0. A syntactically-valid finite form whose
-    * VALUE overflows to ±Inf ("1e999") is 0, not Inf — Go returns
-    * ErrRange there and the reference's parseFloatOrZero
-    * (transform.go:47-58) maps any error to 0. */
-  private def lenientDouble(t: Column): Column = {
-    val clean = regexp_replace(t, "_", "").cast("double")
-    when(t.rlike(numRe),
-      when(abs(clean) === lit(Double.PositiveInfinity), lit(0.0)).otherwise(clean))
-      .when(t.rlike(hexRe), hexDouble(t))
-      .when(lower(t).rlike(infRe),
-        when(t.startsWith("-"), lit(Double.NegativeInfinity))
-          .otherwise(lit(Double.PositiveInfinity)))
-      .when(lower(t) === "nan", lit(Double.NaN))
-      .otherwise(lit(0.0))
-  }
-
-  /** strconv.ParseFloat-or-zero (transform.go:47-58): non-numeric -> 0. */
-  def parseFloatOrZero(c: Column): Column = lenientDouble(trim(c))
+  /** strconv.ParseFloat-or-zero (transform.go:47-58): non-numeric -> 0.
+    * Go's grammar (hex floats, underscores, inf/nan) is one native
+    * kernel, [[graft.expressions.Kernels.lenientDouble]]; Spark's trim
+    * (0x20 only) stays a Column. */
+  def parseFloatOrZero(c: Column): Column = coalesce(native.lenientDouble(trim(c)), lit(0.0))
 
   /** Per-type magnitude column select + parse (transform.go:60-86):
     * hail->Size, tornado->F_Scale, wind->Speed; UNK/empty/invalid -> 0.
@@ -100,7 +40,7 @@ object StormFunctions {
     val t = trim(sel)
     val stripped = regexp_replace(regexp_replace(t, "^EF", ""), "^F", "")
     when(sel.isNull || t === "" || upper(t) === "UNK", lit(0.0))
-      .otherwise(lenientDouble(stripped))
+      .otherwise(native.lenientDouble(stripped))
   }
 
   /** Event-time resolution (transform.go:88-125): RFC3339 `...Z`, else

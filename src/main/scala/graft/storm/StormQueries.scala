@@ -190,15 +190,14 @@ object StormQueries {
   // ---------------------------------------------------------------- oracle
 
   private val A = StormFeed.adapterSql
-  private val DUQ = "[0-9](?:_?[0-9])*" // Go underscore digit rule
-  private val HUQ = "[0-9a-fA-F](?:_?[0-9a-fA-F])*"
-  private val NUM = s"^[+-]?($DUQ(\\.(?:$DUQ)?)?|\\.$DUQ)([eE][+-]?$DUQ)?$$"
-  private val HEX = s"^[+-]?0[xX](_?$HUQ(\\.(?:$HUQ)?)?|\\.$HUQ)[pP][+-]?$DUQ$$"
-  private val INF = "^[+-]?(inf|infinity)$"
+  // the Go grammar the Spark kernel gates on, one definition
+  private val NUM = graft.expressions.Kernels.DecimalFloatRe
+  private val HEX = graft.expressions.Kernels.HexFloatRe
+  private val INF = graft.expressions.Kernels.InfRe
   private val LOC = "^([0-9]+(?:\\.[0-9]+)?)\\s+([NSEW]{1,3})\\s+(.+)$"
 
   /** ParseFloat-or-zero over an already-trimmed SQL expression —
-    * DuckDB mirror of StormFunctions.lenientDouble, Go grammar
+    * DuckDB mirror of Kernels.lenientDouble, Go grammar
     * included: underscores stripped after the validity check, hex
     * floats as ±(int++frac hex digits) · 2^(p − 4·|frac|), and
     * value-overflow (±Inf, Go ErrRange) mapped to 0 like the
@@ -210,12 +209,12 @@ object StormQueries {
     val fp = s"regexp_extract($b, '^0[xX][0-9a-fA-F]*\\.([0-9a-fA-F]*)', 1)"
     val ex = s"TRY_CAST(regexp_extract($b, '[pP]([+-]?[0-9]+)$$', 1) AS INT)"
     // mantissas beyond 16 SIGNIFICANT hex digits map to 0.0 on BOTH
-    // engines (the shared cutoff StormFunctions.hexDouble documents):
+    // engines (the shared cutoff Kernels.lenientDouble documents):
     // a plain CAST to UBIGINT would THROW on the 17th digit — crashing
     // the oracle run where Spark's conv would truncate — so the length
     // guard plus TRY_CAST make the two engines degrade identically by
     // construction. Leading zeros are stripped before both the guard
-    // and the cast (mirroring hexDouble): they don't consume the
+    // and the cast (as the kernel does): they don't consume the
     // 64-bit window, so '0x00000000000000001p0' parses 1.0 like Go.
     // an ALL-zero mantissa strips to '' — TRY_CAST('0x') would yield
     // NULL -> 0.0 here while Spark still computes sign * 0 = -0.0 for

@@ -18,6 +18,19 @@ class GraftSessionSpec extends SparkSpec {
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
   }
 
+  test("file: is graft's process-spawn-free local filesystem, for FileSystem and FileContext") {
+    // the stock classes fork chmod per created file and readlink per
+    // FileContext rename (~40 per streaming micro-batch)
+    assert(spark.conf.get("spark.hadoop.fs.file.impl") == "graft.sources.GraftLocalFileSystem")
+    assert(spark.conf.get("spark.hadoop.fs.AbstractFileSystem.file.impl") ==
+      "graft.sources.GraftLocalFs")
+    val hadoopConf = spark.sparkContext.hadoopConfiguration
+    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI("file:///"), hadoopConf)
+    assert(fs.getClass == classOf[graft.sources.GraftLocalFileSystem])
+    val fc = org.apache.hadoop.fs.FileContext.getFileContext(new java.net.URI("file:///"), hadoopConf)
+    assert(fc.getDefaultFileSystem.getClass == classOf[graft.sources.GraftLocalFs])
+  }
+
   test("reliable-materialize checkpoints are cleaner-managed") {
     // without this, reliable mode's Dataset.checkpoint files outlive
     // every query in the session (nothing deletes them by default)

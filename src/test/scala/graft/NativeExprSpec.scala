@@ -278,6 +278,76 @@ class NativeExprSpec extends SparkSpec {
     assert(dd == 0)
   }
 
+  test("lenient_double native == the regex ParseFloat composition, raw bits, wherever it does not throw") {
+    import graft.ReferenceForms.lenientDoubleRegex
+    // grammar-shaped strings: signs, underscores (valid and misplaced),
+    // dots, exponents, hex mantissas of 15–18 digits, inf/infinity/nan
+    // in mixed case, surrounding whitespace and line terminators
+    val rnd = new scala.util.Random(97)
+    def pick[T](xs: T*): T = xs(rnd.nextInt(xs.length))
+    def digits(n: Int, alphabet: String): String = {
+      val sb = new StringBuilder
+      for (i <- 0 until n) {
+        if (i > 0 && rnd.nextInt(8) == 0) sb += '_'
+        sb += alphabet(rnd.nextInt(alphabet.length))
+      }
+      rnd.nextInt(24) match {
+        case 0 => "_" + sb
+        case 1 => sb.toString + "_"
+        case 2 => sb.toString.replaceFirst("_", "__")
+        case _ => sb.toString
+      }
+    }
+    def dec(n: Int) = digits(n, "0123456789")
+    def sign = pick("", "", "+", "-")
+    def decimal: String = {
+      val ip = if (rnd.nextInt(6) == 0) "" else dec(1 + rnd.nextInt(9))
+      val fp = pick("", ".", "." + dec(1 + rnd.nextInt(9)))
+      val ex = if (rnd.nextInt(3) == 0) pick("e", "E") + sign + dec(1 + rnd.nextInt(3)) else ""
+      sign + ip + fp + ex
+    }
+    def hex: String = {
+      val d = pick("", "0", "000") + digits(pick(1, 3, 15, 16, 17, 18), "0123456789abcdefABCDEF")
+      val cut = rnd.nextInt(d.length + 1)
+      val mant = if (rnd.nextBoolean()) d else d.take(cut) + "." + d.drop(cut)
+      val ex = pick(dec(1 + rnd.nextInt(4)), "1074", "1075", "2147483647", "-2147483648",
+        "99999999999")
+      sign + pick("0x", "0X") + pick("", "", "_") + mant + pick("p", "P") + pick("", "+", "-") + ex
+    }
+    def special: String = sign + pick("inf", "infinity", "nan", "na", "infinit")
+      .map(c => if (rnd.nextBoolean()) c.toUpper else c)
+    def wrapped(t: String): String =
+      pick(t, t, t, t, t, t, t, t, " " + t, t + " ", t + "\n", t + "\r\n", t + "\t", t + "\u2028",
+        "\n" + t, t + "\n\n", t + "x")
+    val corpus = StormFunctionsSpec.GoGrammar.map(_._1) ++
+      Seq("1.5\n", "-0.0", "-0", "0x1p99999999999", "-0x0p0", "", " ") ++
+      Seq.fill(3000)(wrapped(pick(decimal, decimal, hex, special)))
+    def bits(v: Any): Option[Long] =
+      Option(v).map(d => java.lang.Double.doubleToRawLongBits(d.asInstanceOf[Double]))
+    // non-ANSI evaluation lets the composition finish on every input;
+    // each input where it disagrees with the kernel must be one where
+    // the ANSI composition (the session default) throws
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val rows =
+      try {
+        spark.conf.set("spark.sql.ansi.enabled", "false") // read at analysis
+        corpus.toDF("x")
+          .select($"x", graft.expressions.native.lenientDouble($"x"), lenientDoubleRegex($"x"))
+          .collect().toSeq
+      } finally spark.conf.unset("spark.sql.ansi.enabled")
+    // not vacuous: over a quarter of the corpus parses to a non-zero value
+    assert(rows.count(r => r.getDouble(1) != 0.0) > corpus.size / 4)
+    val diffs = rows.filter(r => bits(r.get(1)) != bits(r.get(2))).map(_.getString(0))
+    // the inputs ANSI rejects: an exponent past Int, its scale
+    // overflowing Int, a line terminator Java's parseDouble keeps
+    (diffs.distinct :+ "0x1p99999999999").foreach { x =>
+      withClue(s"input '$x' differs, yet the composition ran: ") {
+        intercept[Exception](Seq(x).toDF("x").select(lenientDoubleRegex($"x")).collect())
+      }
+    }
+    assert(diffs.size < corpus.size / 10, s"${diffs.size} diffs: ${diffs.take(10)}")
+  }
+
   test("sha-256 kernels match a plain-JVM reference implementation") {
     import graft.expressions.Kernels
     // sha64 / sha64Hex vs MessageDigest computed here, independently

@@ -99,4 +99,41 @@ object ReferenceForms {
           .cast("long") % buckets).as("b"))
       .groupBy(col("doc_id"), col("lang"), col("b"))
       .agg(count(lit(1)).as("m"))
+
+  /** [[graft.storm.StormFunctions.parseFloatOrZero]]'s ParseFloat as
+    * the pre-kernel composition of regexes, casts and CASE WHENs over
+    * an already-trimmed string (the kernel is
+    * [[graft.expressions.Kernels.lenientDouble]]). Under ANSI it throws
+    * where the hex exponent or its scale overflows `Int`. */
+  def lenientDoubleRegex(t: Column): Column = {
+    import graft.expressions.Kernels.{DecimalFloatRe, HexFloatRe, InfRe}
+    val clean = regexp_replace(t, "_", "").cast("double")
+    when(t.rlike(DecimalFloatRe),
+      when(abs(clean) === lit(Double.PositiveInfinity), lit(0.0)).otherwise(clean))
+      .when(t.rlike(HexFloatRe), hexDoubleRegex(t))
+      .when(lower(t).rlike(InfRe),
+        when(t.startsWith("-"), lit(Double.NegativeInfinity))
+          .otherwise(lit(Double.PositiveInfinity)))
+      .when(lower(t) === "nan", lit(Double.NaN))
+      .otherwise(lit(0.0))
+  }
+
+  /** The hex branch of [[lenientDoubleRegex]]: the mantissa digits
+    * (int ++ frac) as ONE hex integer through conv(_, 16, 10), value
+    * ±M · 2^(p − 4·|frac|); more than 16 significant digits or ±Inf
+    * give 0. */
+  private def hexDoubleRegex(t: Column): Column = {
+    val u = regexp_replace(t, "_", "")
+    val sign = when(u.startsWith("-"), lit(-1.0)).otherwise(lit(1.0))
+    val body = regexp_replace(u, "^[+-]", "")
+    val ip = regexp_extract(body, "^0[xX]([0-9a-fA-F]*)", 1)
+    val fp = regexp_extract(body, "^0[xX][0-9a-fA-F]*\\.([0-9a-fA-F]*)", 1)
+    val ex = regexp_extract(body, "[pP]([+-]?[0-9]+)$", 1).cast("int")
+    val m = conv(concat(ip, fp), 16, 10).cast("double")
+    val v = sign * m * pow(lit(2.0), (ex - length(fp) * 4).cast("double"))
+    val sig = regexp_replace(concat(ip, fp), "^0+", "")
+    when(length(sig) > 16, lit(0.0)).otherwise(
+      coalesce(when(abs(v) === lit(Double.PositiveInfinity), lit(0.0)).otherwise(v),
+        lit(0.0)))
+  }
 }

@@ -52,41 +52,7 @@ class StormFunctionsSpec extends SparkSpec {
   test("ParseFloat Go grammar: hex floats and underscore separators, bit-for-bit") {
     // each expected value is strconv.ParseFloat(s, 64)'s output
     // (transform.go:47-58 maps err != nil -> 0, including ErrRange)
-    val cases = Seq(
-      "0x1p-2" -> 0.25, // go doc's own example
-      "0x1.8p+3" -> 12.0,
-      "0X1P3" -> 8.0, // case-insensitive prefix/exponent
-      "0x_1p4" -> 16.0, // the one leading-underscore slot Go allows
-      "0x.8p1" -> 1.0, // fraction-only mantissa
-      "0x1.p2" -> 4.0, // empty fraction after the point
-      "-0x1.8p1" -> -3.0,
-      "0xffp0" -> 255.0,
-      "0xde_ad_be_efp-4" -> 0xdeadbeefL.toDouble / 16.0,
-      "1_000" -> 1000.0,
-      "1_000.000_5" -> 1000.0005,
-      "1e1_0" -> 1e10, // underscores in the exponent too
-      // invalid underscore placement / missing parts / overflow -> 0
-      "1__0" -> 0.0, "_100" -> 0.0, "100_" -> 0.0, "1_.5" -> 0.0,
-      "1._5" -> 0.0, "0x1p2_" -> 0.0, "0xp2" -> 0.0,
-      "0x1" -> 0.0, // hex REQUIRES the binary exponent
-      "0x1.8" -> 0.0,
-      "1e999" -> 0.0, // value overflow = ErrRange -> err branch -> 0
-      "-1e999" -> 0.0,
-      "0x1p99999" -> 0.0,
-      // mantissa beyond 16 hex digits -> 0.0: the documented shared
-      // cutoff (SURVEY §1; Go rounds) — conv's 64-bit window would
-      // truncate and DuckDB's plain UBIGINT cast would throw, so both
-      // engines pin the explicit guard instead
-      "0x11112222333344445p0" -> 0.0,
-      "0x1111222233334444p0" -> 0x1111222233334444L.toDouble, // 16 digits still exact
-      "0x1.11122223333444455p0" -> 0.0,
-      // the cutoff counts SIGNIFICANT digits: leading zeros don't
-      // consume the 64-bit window, so Go parses these exactly and so
-      // must both engines (r11 ADVICE: the raw-length guard mapped the
-      // first to 0.0 while Go says 1.0)
-      "0x00000000000000001p0" -> 1.0, // 17 raw digits, 1 significant
-      "0x0.000000000000000001p0" -> math.pow(2.0, -72), // frac zeros set the exponent
-      "0x000011112222333344445p0" -> 0.0) // 17 SIGNIFICANT digits still 0
+    val cases = StormFunctionsSpec.GoGrammar
     val got = cases.map(_._1).toDF("x")
       .select(parseFloatOrZero($"x").as("r")).collect().map(_.getDouble(0))
     cases.zip(got).foreach { case ((s, want), g) =>
@@ -107,6 +73,18 @@ class StormFunctionsSpec extends SparkSpec {
       java.lang.Double.doubleToRawLongBits(-0.0))
     assert(java.lang.Double.doubleToRawLongBits(zeros(3)) ==
       java.lang.Double.doubleToRawLongBits(-0.0))
+  }
+
+  test("ParseFloat: an exponent outside Int gives 0 instead of failing the query") {
+    // ANSI casts threw CAST_INVALID_INPUT on the exponent here, which
+    // failed every micro-batch carrying the record; DuckDB's TRY_CAST
+    // and Go's ErrRange both give 0
+    val got = Seq("0x1p99999999999", "-0x1.8p-99999999999", "0x0p2147483648")
+      .toDF("x").select(parseFloatOrZero($"x").as("r")).collect().map(_.getDouble(0))
+    assert(got.toSeq == Seq(0.0, 0.0, 0.0))
+    val mag = Seq(("hail", "0x1p99999999999", "", "")).toDF("t", "size", "f", "sp")
+      .select(magnitudeRaw($"t", $"size", $"f", $"sp")).head.getDouble(0)
+    assert(mag == 0.0)
   }
 
   test("severity thresholds per type (transform.go:212-257)") {
@@ -222,4 +200,46 @@ class StormFunctionsSpec extends SparkSpec {
     assert(f4(32.1) == "32.1000" && f4(-97.5) == "-97.5000")
     assert(f2(1.75) == "1.75" && f2(0.0) == "0.00")
   }
+}
+
+object StormFunctionsSpec {
+  /** strconv.ParseFloat's Go grammar: each input with the value
+    * strconv.ParseFloat(s, 64) gives (transform.go:47-58 maps
+    * err != nil -> 0, including ErrRange). NativeExprSpec reuses it as
+    * the table half of the kernel-equality corpus. */
+  val GoGrammar: Seq[(String, Double)] = Seq(
+    "0x1p-2" -> 0.25, // go doc's own example
+    "0x1.8p+3" -> 12.0,
+    "0X1P3" -> 8.0, // case-insensitive prefix/exponent
+    "0x_1p4" -> 16.0, // the one leading-underscore slot Go allows
+    "0x.8p1" -> 1.0, // fraction-only mantissa
+    "0x1.p2" -> 4.0, // empty fraction after the point
+    "-0x1.8p1" -> -3.0,
+    "0xffp0" -> 255.0,
+    "0xde_ad_be_efp-4" -> 0xdeadbeefL.toDouble / 16.0,
+    "1_000" -> 1000.0,
+    "1_000.000_5" -> 1000.0005,
+    "1e1_0" -> 1e10, // underscores in the exponent too
+    // invalid underscore placement / missing parts / overflow -> 0
+    "1__0" -> 0.0, "_100" -> 0.0, "100_" -> 0.0, "1_.5" -> 0.0,
+    "1._5" -> 0.0, "0x1p2_" -> 0.0, "0xp2" -> 0.0,
+    "0x1" -> 0.0, // hex REQUIRES the binary exponent
+    "0x1.8" -> 0.0,
+    "1e999" -> 0.0, // value overflow = ErrRange -> err branch -> 0
+    "-1e999" -> 0.0,
+    "0x1p99999" -> 0.0,
+    // mantissa beyond 16 hex digits -> 0.0: the documented shared
+    // cutoff (SURVEY §1; Go rounds) — conv's 64-bit window would
+    // truncate and DuckDB's plain UBIGINT cast would throw, so both
+    // engines pin the explicit guard instead
+    "0x11112222333344445p0" -> 0.0,
+    "0x1111222233334444p0" -> 0x1111222233334444L.toDouble, // 16 digits still exact
+    "0x1.11122223333444455p0" -> 0.0,
+    // the cutoff counts SIGNIFICANT digits: leading zeros don't
+    // consume the 64-bit window, so Go parses these exactly and so
+    // must both engines (r11 ADVICE: the raw-length guard mapped the
+    // first to 0.0 while Go says 1.0)
+    "0x00000000000000001p0" -> 1.0, // 17 raw digits, 1 significant
+    "0x0.000000000000000001p0" -> math.pow(2.0, -72), // frac zeros set the exponent
+    "0x000011112222333344445p0" -> 0.0) // 17 SIGNIFICANT digits still 0
 }

@@ -45,6 +45,25 @@ class StormStreamSpec extends SparkSpec {
     assert(out.exceptAll(batch).isEmpty && batch.exceptAll(out).isEmpty)
   }
 
+  test("one out-of-range hex Lat drains like any record: its lat is 0.0") {
+    // under ANSI the regex ParseFloat's exponent cast threw on this
+    // value, failing the micro-batch and every supervised restart
+    val base = Files.createTempDirectory("graft-hex-lat").toString
+    val feed = StormFeed.feed(spark, sfDir)
+    val victim = feed.agg(min(col("event_id"))).head.getLong(0)
+    val wire = StormPipeline.toRawJson(feed.withColumn("lat",
+        when(col("event_id") === victim, lit("0x1p99999999999")).otherwise(col("lat"))))
+      .select(col("event_id"), col("ts"), col("raw_value"))
+    wire.coalesce(1).write.json(s"$base/in")
+
+    val (_, restarts) = graft.streaming.StreamOps.runEnrichmentSupervised(
+      spark, s"$base/in", s"$base/out", s"$base/cp")
+    assert(restarts == 0)
+    val out = spark.read.parquet(s"$base/out")
+    assert(out.count() == wire.count())
+    assert(out.where(col("event_id") === victim).select("lat").head.getDouble(0) == 0.0)
+  }
+
   test("config-driven entry points: env-built config drives the same pipeline") {
     val base = Files.createTempDirectory("graft-cfg-stream").toString
     val cfg = GraftConfig.fromEnv(Map(
