@@ -85,6 +85,12 @@ object PlanCheck {
     "text_lmscore" -> StatRow,
     "text_tfidf" -> StatRow)
 
+  /** The reason shared by the query-family files' own checkpoint sites. */
+  private val QueryOwned = "composite-owned materializations: 1-row " +
+    "statistics-aggregate crosses, bounded probe/recall truth sides, " +
+    "vocab-sized top-k sorts - the same shapes sanctioned per-key " +
+    "above, caught at their checkpoint"
+
   /** Sanctions for CHECKPOINT-SUBTREE flags (the [[graft.Materialize
     * .planHook]] surface — r18 ADVICE: eager materialization had moved
     * e.g. dedup_embed's bounded centroid BNLJ out of the served-plan
@@ -101,14 +107,13 @@ object PlanCheck {
       "query-side top-k"),
     "Pca.scala" -> ("PCA moment subtree: 1-row corpus-moment aggregate " +
       "cross (centering), not a data-by-data product"),
-    "PipelineQueries.scala" -> ("composite-owned materializations: 1-row " +
-      "statistics-aggregate crosses, bounded probe/recall truth sides, " +
-      "vocab-sized top-k sorts - the same shapes sanctioned per-key " +
-      "above, caught at their checkpoint"),
     "Pretrain.scala" -> ("pipeline gate subtrees: 1-row statistics " +
-      "aggregate crosses (decontaminate probe, temperature thresholds)"),
+      "aggregate crosses (decontaminate probe, temperature thresholds); " +
+      "BPE trainer rounds: the vocab-sized top-1 merge pick sort"),
     "Retrieval.scala" -> ("retrieval index subtrees: bounded query-side " +
-      "crosses and report-sized top-k sorts"))
+      "crosses and report-sized top-k sorts")) ++
+    Seq("CurationQueries.scala", "DedupQueries.scala", "MultimodalQueries.scala",
+      "RetrievalQueries.scala", "SamplingQueries.scala").map(_ -> QueryOwned)
 
   private val ShuffleRe = "(?<![A-Za-z])Exchange ".r
   private val BroadcastRe = "BroadcastExchange".r

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
+import graft.QueryKey
 import graft.sources.Tables
 
 /** Relational analytics surface: grouped aggregation, broadcast joins,
@@ -839,43 +840,6 @@ object Analytics {
       .orderBy(col("user_id"))
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_asof_nearest" -> (qAsofNearest _),
-    "q_decay"      -> (qDecay _),
-    "q_topk_agg"   -> (qTopkAgg _),
-    "q_retention"  -> (qRetention _),
-    "q_transitions" -> (qTransitions _),
-    "q_skyline"    -> (qSkyline _),
-    "q_histogram"  -> (qHistogram _),
-    "q_pivot"      -> (qPivot _),
-    "q_approx"     -> (qApproxChecked _),
-    "q_gapfill"    -> (qGapfill _),
-    "q_funnel"     -> (qFunnel _),
-    "q_json"       -> (qJson _),
-    "q_zorder"     -> (qZorder _),
-    "q_percentile" -> (qPercentile _),
-    "q_scd2"       -> (qScd2 _),
-    "q_subquery"   -> (qSubquery _),
-    "q_profile"    -> (qProfile _),
-    "q_setop"      -> (qSetop _),
-    "fuzzy_join"   -> (qFuzzyJoin _),
-    "q_temporal"   -> (qTemporal _),
-    "q_trailing"   -> (qTrailing _),
-    "q_anomaly"    -> (qAnomaly _),
-    "q_integrity"  -> (qIntegrity _),
-    "q_asof"       -> (qAsof _),
-    "q_range"      -> (qRange _),
-    "q1_agg"       -> (q1Agg _),
-    "q3_join"      -> (q3Join _),
-    "q5_multijoin" -> (q5MultiJoin _),
-    "q_window"     -> (qWindow _),
-    "q_semi_anti"  -> (qSemiAnti _),
-    "q_rollup"     -> (qRollup _),
-    "q_cube"       -> (qCube _),
-    "q_unpivot"    -> (qUnpivot _),
-    "q_topk_group" -> (qTopkGroup _),
-    "q_sessionize" -> (qSessionize _))
-
   /** DuckDB mirror of [[graft.operators.Layout.zorderValue]]: the
     * statically-unrolled 16-bit Morton interleave as one bit-arithmetic
     * expression over pre-masked terms `x`/`y`. */
@@ -884,11 +848,12 @@ object Analytics {
       s"((($x >> $i) & 1) << ${2 * i})",
       s"((($y >> $i) & 1) << ${2 * i + 1})")).mkString("(", " | ", ")")
 
-  /** DuckDB-dialect oracles; decimal-stabilized double sums mirror stableSum. */
-  val oracleSql: Map[String, String] = Map(
-    // the argmin theta join IS the spec for the nearest-time operator;
-    // tie preference (dist equal -> prior) encoded in dirrank
-    "q_asof_nearest" ->
+  /** Every analytics key: its query method and its DuckDB-dialect
+    * oracle; decimal-stabilized double sums mirror stableSum. */
+  val keys: Seq[(String, QueryKey)] = Seq(
+    "q_asof_nearest" -> QueryKey(qAsofNearest,
+      // the argmin theta join IS the spec for the nearest-time operator;
+      // tie preference (dist equal -> prior) encoded in dirrank
       """WITH clicks AS (
         |  SELECT user_id, ts, max(value) AS click_value
         |  FROM events WHERE event_type = 'click' GROUP BY user_id, ts
@@ -908,9 +873,9 @@ object Analytics {
         |  strftime(pts, '%Y-%m-%d %H:%M:%S') AS purchase_time,
         |  strftime(cts, '%Y-%m-%d %H:%M:%S') AS click_time,
         |  click_value
-        |FROM r WHERE rk = 1 ORDER BY user_id, event_id""".stripMargin,
-    // same power-of-two fixed-point weights, same floor division
-    "q_decay" ->
+        |FROM r WHERE rk = 1 ORDER BY user_id, event_id""".stripMargin),
+    "q_decay" -> QueryKey(qDecay,
+      // same power-of-two fixed-point weights, same floor division
       """WITH e AS (
         |  SELECT user_id, CAST(round(value * 100) AS BIGINT) AS v_i,
         |    least(greatest(date_diff('day', CAST(ts AS DATE), DATE '2024-02-01'), 0), 62) AS age
@@ -919,9 +884,9 @@ object Analytics {
         |SELECT user_id, count(*) AS n_events,
         |  CAST(sum(v_i * (1000000000000 // (CAST(1 AS BIGINT) << CAST(age AS INT))))
         |    AS BIGINT) AS decayed_i
-        |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin,
-    // the window formulation IS the spec for the heap aggregate
-    "q_topk_agg" ->
+        |FROM e GROUP BY user_id ORDER BY user_id""".stripMargin),
+    "q_topk_agg" -> QueryKey(qTopkAgg,
+      // the window formulation IS the spec for the heap aggregate
       """WITH v AS (
         |  SELECT event_type, event_id, CAST(round(value * 100) AS BIGINT) AS v_i
         |  FROM events
@@ -931,9 +896,9 @@ object Analytics {
         |  FROM v
         |)
         |SELECT event_type, CAST(rk AS BIGINT) AS rk, event_id, v_i
-        |FROM r WHERE rk <= 3 ORDER BY event_type, rk""".stripMargin,
-    // exact integer day-div-7 weeks from the fixed epoch
-    "q_retention" ->
+        |FROM r WHERE rk <= 3 ORDER BY event_type, rk""".stripMargin),
+    "q_retention" -> QueryKey(qRetention,
+      // exact integer day-div-7 weeks from the fixed epoch
       """WITH ev AS (
         |  SELECT user_id,
         |    date_diff('day', DATE '2024-01-01', CAST(ts AS DATE)) // 7 AS wk
@@ -952,8 +917,8 @@ object Analytics {
         |SELECT r.cohort_wk, r.week_offset, r.n_users, sz.cohort_size,
         |  round(CAST(r.n_users AS DOUBLE) / CAST(sz.cohort_size AS DOUBLE), 6) AS retention
         |FROM r JOIN sz USING (cohort_wk)
-        |ORDER BY cohort_wk, week_offset""".stripMargin,
-    "q_transitions" ->
+        |ORDER BY cohort_wk, week_offset""".stripMargin),
+    "q_transitions" -> QueryKey(qTransitions,
       """WITH tr AS (
         |  SELECT event_type AS from_type,
         |    lead(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS to_type
@@ -965,10 +930,10 @@ object Analytics {
         |SELECT from_type, to_type, n,
         |  round(CAST(n AS DOUBLE) /
         |    CAST(sum(n) OVER (PARTITION BY from_type) AS DOUBLE), 6) AS p
-        |FROM c ORDER BY from_type, to_type""".stripMargin,
-    // the NOT EXISTS dominance definition IS the spec; the Spark side's
-    // grid prune + range-frame pass is lossless (see qSkyline's scaladoc)
-    "q_skyline" ->
+        |FROM c ORDER BY from_type, to_type""".stripMargin),
+    "q_skyline" -> QueryKey(qSkyline,
+      // the NOT EXISTS dominance definition IS the spec; the Spark side's
+      // grid prune + range-frame pass is lossless (see qSkyline's scaladoc)
       """WITH p AS (
         |  SELECT p_partkey, CAST(round(p_retailprice * 100) AS BIGINT) AS price_i,
         |    CAST(p_size AS BIGINT) AS sz
@@ -979,10 +944,10 @@ object Analytics {
         |  SELECT 1 FROM p b
         |  WHERE b.price_i <= a.price_i AND b.sz >= a.sz
         |    AND (b.price_i < a.price_i OR b.sz > a.sz))
-        |ORDER BY price_i, p_partkey""".stripMargin,
-    // same integer-cents floor-division bucketing as qHistogram
-    // (DuckDB // == Spark div for non-negative BIGINTs)
-    "q_histogram" ->
+        |ORDER BY price_i, p_partkey""".stripMargin),
+    "q_histogram" -> QueryKey(qHistogram,
+      // same integer-cents floor-division bucketing as qHistogram
+      // (DuckDB // == Spark div for non-negative BIGINTs)
       """WITH v AS (
         |  SELECT CAST(round(l_extendedprice * 100) AS BIGINT) AS v_i
         |  FROM lineitem
@@ -996,29 +961,168 @@ object Analytics {
         |SELECT bucket, min_i + bucket * width_i AS lo_i,
         |  min_i + (bucket + 1) * width_i - 1 AS hi_i,
         |  count(*) AS n, CAST(sum(v_i) AS BIGINT) AS sum_i
-        |FROM s GROUP BY bucket, min_i, width_i ORDER BY bucket""".stripMargin,
-    // the naive theta join IS the spec; the Spark side's deletion-
-    // neighborhood banding is lossless for dist <= 1 (FastSS property),
-    // so the two agree exactly. DuckDB and Spark both implement classic
-    // unit-cost Levenshtein.
-    "fuzzy_join" ->
+        |FROM s GROUP BY bucket, min_i, width_i ORDER BY bucket""".stripMargin),
+    "q_pivot" -> QueryKey(qPivot,
+      """SELECT user_id % 10 AS cohort,
+        |  count(*) FILTER (event_type = 'click') AS click,
+        |  count(*) FILTER (event_type = 'view') AS "view",
+        |  count(*) FILTER (event_type = 'purchase') AS purchase,
+        |  count(*) FILTER (event_type = 'signup') AS signup,
+        |  count(*) FILTER (event_type = 'error') AS error
+        |FROM events GROUP BY cohort ORDER BY cohort""".stripMargin),
+    "q_approx" -> QueryKey(qApproxChecked,
+      // q_approx: the sketch values can't replay across engines — the
+      // oracle recomputes the EXACT columns and asserts the error-bound
+      // booleans as literal TRUE; a sketch out of tolerance flips the
+      // Spark-side boolean and fails the hash compare (see qApproxChecked)
+      """SELECT event_type,
+        |  count(DISTINCT user_id) AS exact_users,
+        |  TRUE AS users_within_3rsd,
+        |  TRUE AS p50_within_rank_eps,
+        |  TRUE AS p95_within_rank_eps
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    "q_gapfill" -> QueryKey(qGapfill,
+      """WITH base AS (
+        |  SELECT event_type, date_trunc('hour', ts) AS hour, count(*) AS n_events,
+        |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS hour_value
+        |  FROM events GROUP BY 1, 2
+        |), bounds AS (
+        |  SELECT event_type, min(hour) AS h0, max(hour) AS h1 FROM base GROUP BY 1
+        |), spine AS (
+        |  SELECT event_type, unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour
+        |  FROM bounds
+        |), joined AS (
+        |  SELECT s.event_type, s.hour, b.n_events, b.hour_value
+        |  FROM spine s LEFT JOIN base b
+        |    ON s.event_type = b.event_type AND s.hour = b.hour
+        |)
+        |SELECT event_type, strftime(hour, '%Y-%m-%d %H:%M:%S') AS hour,
+        |  coalesce(n_events, 0) AS n_events,
+        |  CAST(CASE WHEN n_events IS NULL THEN 1 ELSE 0 END AS INT) AS is_gap,
+        |  last_value(hour_value IGNORE NULLS) OVER (PARTITION BY event_type
+        |    ORDER BY hour ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled_value
+        |FROM joined ORDER BY event_type, hour""".stripMargin),
+    "q_funnel" -> QueryKey(qFunnel,
+      """WITH c AS (
+        |  SELECT user_id, min(ts) AS t1 FROM events
+        |  WHERE event_type = 'click' GROUP BY user_id
+        |), v AS (
+        |  SELECT c.user_id, min(e.ts) AS t2 FROM c JOIN events e
+        |    ON e.user_id = c.user_id AND e.event_type = 'view' AND e.ts > c.t1
+        |  GROUP BY c.user_id
+        |), p AS (
+        |  SELECT v.user_id, min(e.ts) AS t3 FROM v JOIN events e
+        |    ON e.user_id = v.user_id AND e.event_type = 'purchase' AND e.ts > v.t2
+        |  GROUP BY v.user_id
+        |)
+        |SELECT (SELECT count(*) FROM c) AS n_clicked,
+        |       (SELECT count(*) FROM v) AS n_viewed_after,
+        |       (SELECT count(*) FROM p) AS n_purchased_after""".stripMargin),
+    "q_json" -> QueryKey(qJson,
+      """WITH t AS (
+        |  SELECT event_type, CAST(props->>'$.k' AS BIGINT) AS k FROM events
+        |)
+        |SELECT event_type, count(*) AS n,
+        |  CAST(sum(k) AS BIGINT) AS sum_k,
+        |  min(k) AS min_k, max(k) AS max_k,
+        |  CAST(sum(CASE WHEN k >= 50 THEN 1 ELSE 0 END) AS BIGINT) AS n_hot
+        |FROM t GROUP BY event_type ORDER BY event_type""".stripMargin),
+    "q_zorder" -> QueryKey(qZorder,
+      s"""WITH staged AS (
+         |  SELECT o_custkey & 65535 AS ck0, o_custkey AS ck,
+         |    (epoch_us(o_orderdate) // 86400000000) & 65535 AS dy0,
+         |    epoch_us(o_orderdate) // 86400000000 AS dy
+         |  FROM orders
+         |), z AS (
+         |  SELECT ck, dy, ${zorderSql("ck0", "dy0")} AS z FROM staged
+         |)
+         |SELECT z >> 12 AS zbucket, count(*) AS n,
+         |  min(ck) AS min_ck, max(ck) AS max_ck,
+         |  min(dy) AS min_dy, max(dy) AS max_dy
+         |FROM z GROUP BY zbucket ORDER BY zbucket""".stripMargin),
+    "q_percentile" -> QueryKey(qPercentile,
+      """SELECT event_type, count(*) AS n,
+        |  round(quantile_cont(value, 0.25), 6) AS p25,
+        |  round(quantile_cont(value, 0.5), 6) AS p50,
+        |  round(quantile_cont(value, 0.75), 6) AS p75
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin),
+    "q_scd2" -> QueryKey(qScd2,
+      """WITH cur AS (
+        |  SELECT c_custkey, c_mktsegment AS segment, '1990-01-01' AS valid_from,
+        |    CAST(NULL AS VARCHAR) AS valid_to, true AS is_current
+        |  FROM customer
+        |), snap AS (
+        |  SELECT c_custkey,
+        |    CASE WHEN c_custkey % 10 = 3 THEN 'MOVED' ELSE c_mktsegment END AS segment
+        |  FROM customer WHERE c_custkey % 97 <> 5
+        |  UNION ALL
+        |  SELECT c_custkey + 1000000, 'NEWKEY' FROM customer WHERE c_custkey % 50 = 0
+        |), j AS (
+        |  SELECT cur.c_custkey, cur.segment, cur.valid_from, cur.valid_to,
+        |    cur.is_current, snap.c_custkey AS s_key, snap.segment AS s_segment
+        |  FROM cur FULL OUTER JOIN snap ON cur.c_custkey = snap.c_custkey
+        |)
+        |SELECT c_custkey, segment, valid_from, valid_to, is_current FROM j
+        |WHERE c_custkey IS NOT NULL AND s_key IS NOT NULL AND segment = s_segment
+        |UNION ALL
+        |SELECT c_custkey, segment, valid_from, '2024-06-01', false FROM j
+        |WHERE c_custkey IS NOT NULL AND (s_key IS NULL OR segment <> s_segment)
+        |UNION ALL
+        |SELECT s_key, s_segment, '2024-06-01', CAST(NULL AS VARCHAR), true FROM j
+        |WHERE s_key IS NOT NULL AND (c_custkey IS NULL OR segment <> s_segment)
+        |ORDER BY 1, 3, 5""".stripMargin),
+    "q_subquery" -> QueryKey(qSubquery,
+      """SELECT c_custkey, c_mktsegment,
+        |  (SELECT max(o_totalprice) FROM orders WHERE o_custkey = c_custkey)
+        |    AS max_order
+        |FROM customer
+        |WHERE c_custkey < 200
+        |ORDER BY c_custkey""".stripMargin),
+    "q_profile" -> QueryKey(qProfile,
+      """SELECT count(*) AS n_rows,
+        |  CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS qty_nulls,
+        |  count(DISTINCT l_quantity) AS qty_distinct,
+        |  round(min(l_quantity), 6) AS qty_min,
+        |  round(max(l_quantity), 6) AS qty_max,
+        |  count(DISTINCT l_returnflag) AS flag_distinct,
+        |  min(l_returnflag) AS flag_min,
+        |  max(l_returnflag) AS flag_max,
+        |  count(DISTINCT l_orderkey) AS orderkey_distinct,
+        |  min(l_orderkey) AS orderkey_min,
+        |  max(l_orderkey) AS orderkey_max
+        |FROM lineitem""".stripMargin),
+    "q_setop" -> QueryKey(qSetop,
+      """SELECT 'with_orders' AS op, count(*) AS n FROM (
+        |  SELECT c_custkey FROM customer INTERSECT SELECT o_custkey FROM orders)
+        |UNION ALL
+        |SELECT 'no_orders' AS op, count(*) AS n FROM (
+        |  SELECT c_custkey FROM customer EXCEPT SELECT o_custkey FROM orders)
+        |ORDER BY op""".stripMargin),
+    "fuzzy_join" -> QueryKey(qFuzzyJoin,
+      // the naive theta join IS the spec; the Spark side's deletion-
+      // neighborhood banding is lossless for dist <= 1 (FastSS property),
+      // so the two agree exactly. DuckDB and Spark both implement classic
+      // unit-cost Levenshtein.
       """SELECT a.p_name AS name_a, b.p_name AS name_b,
         |  CAST(levenshtein(a.p_name, b.p_name) AS INT) AS dist
         |FROM (SELECT DISTINCT p_name FROM part) a,
         |     (SELECT DISTINCT p_name FROM part) b
         |WHERE a.p_name < b.p_name AND levenshtein(a.p_name, b.p_name) <= 1
-        |ORDER BY name_a, name_b""".stripMargin,
-    "q_integrity" ->
-      """SELECT 'lineitems_without_order' AS "check", count(*) AS n FROM lineitem
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_orderkey = l_orderkey)
-        |UNION ALL
-        |SELECT 'orders_without_customer', count(*) FROM orders
-        |WHERE NOT EXISTS (SELECT 1 FROM customer WHERE c_custkey = o_custkey)
-        |UNION ALL
-        |SELECT 'orders_without_lineitems', count(*) FROM orders
-        |WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
-        |ORDER BY "check"""".stripMargin,
-    "q_trailing" ->
+        |ORDER BY name_a, name_b""".stripMargin),
+    "q_temporal" -> QueryKey(qTemporal,
+      """WITH v AS (
+        |  SELECT c_custkey, c_mktsegment AS segment,
+        |    TIMESTAMP '1990-01-01 00:00:00' AS vf FROM customer
+        |  UNION ALL
+        |  SELECT c_custkey, 'V2:' || c_mktsegment,
+        |    TIMESTAMP '1996-01-01 00:00:00' FROM customer
+        |)
+        |SELECT o.o_orderkey, o.o_custkey AS c_custkey,
+        |  strftime(o.o_orderdate, '%Y-%m-%d') AS order_date, v.segment
+        |FROM orders o ASOF LEFT JOIN v
+        |  ON o.o_custkey = v.c_custkey AND o.o_orderdate >= v.vf
+        |ORDER BY o.o_orderkey""".stripMargin),
+    "q_trailing" -> QueryKey(qTrailing,
       """SELECT event_type, event_id, epoch_us(ts) AS tu,
         |  count(*) OVER w AS trail_n,
         |  CAST(sum(CAST(value AS DECIMAL(18,6))) OVER w AS DOUBLE) AS trail_value
@@ -1026,8 +1130,8 @@ object Analytics {
         |WINDOW w AS (PARTITION BY event_type ORDER BY epoch_us(ts)
         |  RANGE BETWEEN 3600000000 PRECEDING AND CURRENT ROW)
         |QUALIFY user_id < 5
-        |ORDER BY event_type, tu, event_id""".stripMargin,
-    "q_anomaly" ->
+        |ORDER BY event_type, tu, event_id""".stripMargin),
+    "q_anomaly" -> QueryKey(qAnomaly,
       """WITH base AS (
         |  SELECT event_type, date_trunc('hour', ts) AS hour,
         |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS v
@@ -1052,157 +1156,18 @@ object Analytics {
         |  round(dev, 6) AS deviation
         |FROM scored
         |WHERE dev > 3.0 * sqrt(greatest(variance, 0.0))
-        |ORDER BY event_type, hour""".stripMargin,
-    "q_temporal" ->
-      """WITH v AS (
-        |  SELECT c_custkey, c_mktsegment AS segment,
-        |    TIMESTAMP '1990-01-01 00:00:00' AS vf FROM customer
-        |  UNION ALL
-        |  SELECT c_custkey, 'V2:' || c_mktsegment,
-        |    TIMESTAMP '1996-01-01 00:00:00' FROM customer
-        |)
-        |SELECT o.o_orderkey, o.o_custkey AS c_custkey,
-        |  strftime(o.o_orderdate, '%Y-%m-%d') AS order_date, v.segment
-        |FROM orders o ASOF LEFT JOIN v
-        |  ON o.o_custkey = v.c_custkey AND o.o_orderdate >= v.vf
-        |ORDER BY o.o_orderkey""".stripMargin,
-    "q_profile" ->
-      """SELECT count(*) AS n_rows,
-        |  CAST(sum(CASE WHEN l_quantity IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS qty_nulls,
-        |  count(DISTINCT l_quantity) AS qty_distinct,
-        |  round(min(l_quantity), 6) AS qty_min,
-        |  round(max(l_quantity), 6) AS qty_max,
-        |  count(DISTINCT l_returnflag) AS flag_distinct,
-        |  min(l_returnflag) AS flag_min,
-        |  max(l_returnflag) AS flag_max,
-        |  count(DISTINCT l_orderkey) AS orderkey_distinct,
-        |  min(l_orderkey) AS orderkey_min,
-        |  max(l_orderkey) AS orderkey_max
-        |FROM lineitem""".stripMargin,
-    "q_setop" ->
-      """SELECT 'with_orders' AS op, count(*) AS n FROM (
-        |  SELECT c_custkey FROM customer INTERSECT SELECT o_custkey FROM orders)
+        |ORDER BY event_type, hour""".stripMargin),
+    "q_integrity" -> QueryKey(qIntegrity,
+      """SELECT 'lineitems_without_order' AS "check", count(*) AS n FROM lineitem
+        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_orderkey = l_orderkey)
         |UNION ALL
-        |SELECT 'no_orders' AS op, count(*) AS n FROM (
-        |  SELECT c_custkey FROM customer EXCEPT SELECT o_custkey FROM orders)
-        |ORDER BY op""".stripMargin,
-    "q_subquery" ->
-      """SELECT c_custkey, c_mktsegment,
-        |  (SELECT max(o_totalprice) FROM orders WHERE o_custkey = c_custkey)
-        |    AS max_order
-        |FROM customer
-        |WHERE c_custkey < 200
-        |ORDER BY c_custkey""".stripMargin,
-    "q_scd2" ->
-      """WITH cur AS (
-        |  SELECT c_custkey, c_mktsegment AS segment, '1990-01-01' AS valid_from,
-        |    CAST(NULL AS VARCHAR) AS valid_to, true AS is_current
-        |  FROM customer
-        |), snap AS (
-        |  SELECT c_custkey,
-        |    CASE WHEN c_custkey % 10 = 3 THEN 'MOVED' ELSE c_mktsegment END AS segment
-        |  FROM customer WHERE c_custkey % 97 <> 5
-        |  UNION ALL
-        |  SELECT c_custkey + 1000000, 'NEWKEY' FROM customer WHERE c_custkey % 50 = 0
-        |), j AS (
-        |  SELECT cur.c_custkey, cur.segment, cur.valid_from, cur.valid_to,
-        |    cur.is_current, snap.c_custkey AS s_key, snap.segment AS s_segment
-        |  FROM cur FULL OUTER JOIN snap ON cur.c_custkey = snap.c_custkey
-        |)
-        |SELECT c_custkey, segment, valid_from, valid_to, is_current FROM j
-        |WHERE c_custkey IS NOT NULL AND s_key IS NOT NULL AND segment = s_segment
+        |SELECT 'orders_without_customer', count(*) FROM orders
+        |WHERE NOT EXISTS (SELECT 1 FROM customer WHERE c_custkey = o_custkey)
         |UNION ALL
-        |SELECT c_custkey, segment, valid_from, '2024-06-01', false FROM j
-        |WHERE c_custkey IS NOT NULL AND (s_key IS NULL OR segment <> s_segment)
-        |UNION ALL
-        |SELECT s_key, s_segment, '2024-06-01', CAST(NULL AS VARCHAR), true FROM j
-        |WHERE s_key IS NOT NULL AND (c_custkey IS NULL OR segment <> s_segment)
-        |ORDER BY 1, 3, 5""".stripMargin,
-    // q_approx: the sketch values can't replay across engines — the
-    // oracle recomputes the EXACT columns and asserts the error-bound
-    // booleans as literal TRUE; a sketch out of tolerance flips the
-    // Spark-side boolean and fails the hash compare (see qApproxChecked)
-    "q_approx" ->
-      """SELECT event_type,
-        |  count(DISTINCT user_id) AS exact_users,
-        |  TRUE AS users_within_3rsd,
-        |  TRUE AS p50_within_rank_eps,
-        |  TRUE AS p95_within_rank_eps
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_percentile" ->
-      """SELECT event_type, count(*) AS n,
-        |  round(quantile_cont(value, 0.25), 6) AS p25,
-        |  round(quantile_cont(value, 0.5), 6) AS p50,
-        |  round(quantile_cont(value, 0.75), 6) AS p75
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_json" ->
-      """WITH t AS (
-        |  SELECT event_type, CAST(props->>'$.k' AS BIGINT) AS k FROM events
-        |)
-        |SELECT event_type, count(*) AS n,
-        |  CAST(sum(k) AS BIGINT) AS sum_k,
-        |  min(k) AS min_k, max(k) AS max_k,
-        |  CAST(sum(CASE WHEN k >= 50 THEN 1 ELSE 0 END) AS BIGINT) AS n_hot
-        |FROM t GROUP BY event_type ORDER BY event_type""".stripMargin,
-    "q_zorder" ->
-      s"""WITH staged AS (
-         |  SELECT o_custkey & 65535 AS ck0, o_custkey AS ck,
-         |    (epoch_us(o_orderdate) // 86400000000) & 65535 AS dy0,
-         |    epoch_us(o_orderdate) // 86400000000 AS dy
-         |  FROM orders
-         |), z AS (
-         |  SELECT ck, dy, ${zorderSql("ck0", "dy0")} AS z FROM staged
-         |)
-         |SELECT z >> 12 AS zbucket, count(*) AS n,
-         |  min(ck) AS min_ck, max(ck) AS max_ck,
-         |  min(dy) AS min_dy, max(dy) AS max_dy
-         |FROM z GROUP BY zbucket ORDER BY zbucket""".stripMargin,
-    "q_gapfill" ->
-      """WITH base AS (
-        |  SELECT event_type, date_trunc('hour', ts) AS hour, count(*) AS n_events,
-        |    CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS hour_value
-        |  FROM events GROUP BY 1, 2
-        |), bounds AS (
-        |  SELECT event_type, min(hour) AS h0, max(hour) AS h1 FROM base GROUP BY 1
-        |), spine AS (
-        |  SELECT event_type, unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour
-        |  FROM bounds
-        |), joined AS (
-        |  SELECT s.event_type, s.hour, b.n_events, b.hour_value
-        |  FROM spine s LEFT JOIN base b
-        |    ON s.event_type = b.event_type AND s.hour = b.hour
-        |)
-        |SELECT event_type, strftime(hour, '%Y-%m-%d %H:%M:%S') AS hour,
-        |  coalesce(n_events, 0) AS n_events,
-        |  CAST(CASE WHEN n_events IS NULL THEN 1 ELSE 0 END AS INT) AS is_gap,
-        |  last_value(hour_value IGNORE NULLS) OVER (PARTITION BY event_type
-        |    ORDER BY hour ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS filled_value
-        |FROM joined ORDER BY event_type, hour""".stripMargin,
-    "q_funnel" ->
-      """WITH c AS (
-        |  SELECT user_id, min(ts) AS t1 FROM events
-        |  WHERE event_type = 'click' GROUP BY user_id
-        |), v AS (
-        |  SELECT c.user_id, min(e.ts) AS t2 FROM c JOIN events e
-        |    ON e.user_id = c.user_id AND e.event_type = 'view' AND e.ts > c.t1
-        |  GROUP BY c.user_id
-        |), p AS (
-        |  SELECT v.user_id, min(e.ts) AS t3 FROM v JOIN events e
-        |    ON e.user_id = v.user_id AND e.event_type = 'purchase' AND e.ts > v.t2
-        |  GROUP BY v.user_id
-        |)
-        |SELECT (SELECT count(*) FROM c) AS n_clicked,
-        |       (SELECT count(*) FROM v) AS n_viewed_after,
-        |       (SELECT count(*) FROM p) AS n_purchased_after""".stripMargin,
-    "q_pivot" ->
-      """SELECT user_id % 10 AS cohort,
-        |  count(*) FILTER (event_type = 'click') AS click,
-        |  count(*) FILTER (event_type = 'view') AS "view",
-        |  count(*) FILTER (event_type = 'purchase') AS purchase,
-        |  count(*) FILTER (event_type = 'signup') AS signup,
-        |  count(*) FILTER (event_type = 'error') AS error
-        |FROM events GROUP BY cohort ORDER BY cohort""".stripMargin,
-    "q_asof" ->
+        |SELECT 'orders_without_lineitems', count(*) FROM orders
+        |WHERE NOT EXISTS (SELECT 1 FROM lineitem WHERE l_orderkey = o_orderkey)
+        |ORDER BY "check"""".stripMargin),
+    "q_asof" -> QueryKey(qAsof,
       """WITH clicks AS (
         |  SELECT user_id, ts, strftime(ts, '%Y-%m-%d %H:%M:%S') AS click_time,
         |    max(value) AS click_value
@@ -1216,8 +1181,8 @@ object Analytics {
         |  c.click_time, c.click_value
         |FROM purch p ASOF LEFT JOIN clicks c
         |  ON p.user_id = c.user_id AND p.ts >= c.ts
-        |ORDER BY p.user_id, p.event_id""".stripMargin,
-    "q_range" ->
+        |ORDER BY p.user_id, p.event_id""".stripMargin),
+    "q_range" -> QueryKey(qRange,
       """WITH windows AS (
         |  SELECT event_id AS err_id, epoch_us(ts) AS lo, epoch_us(ts) + 600000000 AS hi
         |  FROM events WHERE event_type = 'error'
@@ -1228,8 +1193,8 @@ object Analytics {
         |WHERE p.event_type = 'purchase'
         |  AND epoch_us(p.ts) >= w.lo AND epoch_us(p.ts) <= w.hi
         |GROUP BY w.err_id
-        |ORDER BY w.err_id""".stripMargin,
-    "q1_agg" ->
+        |ORDER BY w.err_id""".stripMargin),
+    "q1_agg" -> QueryKey(q1Agg,
       """SELECT l_returnflag, l_linestatus,
         |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
         |  CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -1238,8 +1203,8 @@ object Analytics {
         |FROM lineitem
         |WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
         |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-    "q3_join" ->
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
+    "q3_join" -> QueryKey(q3Join,
       """SELECT o_orderkey, strftime(o_orderdate, '%Y-%m-%d') AS o_date,
         |  CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
         |FROM customer, orders, lineitem
@@ -1249,8 +1214,8 @@ object Analytics {
         |  AND l_shipdate  > TIMESTAMP '1995-09-15 00:00:00'
         |GROUP BY o_orderkey, o_date
         |ORDER BY revenue DESC, o_orderkey
-        |LIMIT 10""".stripMargin,
-    "q5_multijoin" ->
+        |LIMIT 10""".stripMargin),
+    "q5_multijoin" -> QueryKey(q5MultiJoin,
       """SELECT r_name, n_name,
         |  CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue,
         |  count(*) AS n_lines
@@ -1259,23 +1224,39 @@ object Analytics {
         |  AND n_regionkey = r_regionkey AND c_nationkey = n_nationkey
         |  AND o_custkey = c_custkey AND l_orderkey = o_orderkey
         |GROUP BY r_name, n_name
-        |ORDER BY r_name, n_name""".stripMargin,
-    "q_window" ->
+        |ORDER BY r_name, n_name""".stripMargin),
+    "q_window" -> QueryKey(qWindow,
       """SELECT * FROM (
         |  SELECT l_suppkey, l_orderkey, l_linenumber, l_quantity,
         |    row_number() OVER w AS rn,
         |    sum(l_quantity) OVER (w ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running_qty
         |  FROM lineitem
         |  WINDOW w AS (PARTITION BY l_suppkey ORDER BY l_shipdate, l_orderkey, l_linenumber)
-        |) WHERE rn <= 5 ORDER BY l_suppkey, rn""".stripMargin,
-    "q_semi_anti" ->
+        |) WHERE rn <= 5 ORDER BY l_suppkey, rn""".stripMargin),
+    "q_semi_anti" -> QueryKey(qSemiAnti,
       """SELECT 'with_orders' AS grp, count(*) AS n_customers FROM customer
         |WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
         |UNION ALL
         |SELECT 'without_orders' AS grp, count(*) AS n_customers FROM customer
         |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY grp""".stripMargin,
-    "q_unpivot" ->
+        |ORDER BY grp""".stripMargin),
+    "q_rollup" -> QueryKey(qRollup,
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |  count(*) AS n,
+        |  CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
+        |FROM lineitem
+        |GROUP BY ROLLUP (l_returnflag, l_linestatus)
+        |ORDER BY gid, l_returnflag, l_linestatus""".stripMargin),
+    "q_cube" -> QueryKey(qCube,
+      """SELECT l_returnflag, l_linestatus,
+        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |  count(*) AS n,
+        |  CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
+        |FROM lineitem
+        |GROUP BY CUBE (l_returnflag, l_linestatus)
+        |ORDER BY gid, l_returnflag, l_linestatus""".stripMargin),
+    "q_unpivot" -> QueryKey(qUnpivot,
       """SELECT l_orderkey, l_linenumber, measure, value FROM (
         |  SELECT l_orderkey, l_linenumber, 'quantity' AS measure,
         |    CAST(l_quantity AS DOUBLE) AS value FROM lineitem WHERE l_orderkey <= 100
@@ -1285,31 +1266,15 @@ object Analytics {
         |  UNION ALL
         |  SELECT l_orderkey, l_linenumber, 'discount',
         |    CAST(l_discount AS DOUBLE) FROM lineitem WHERE l_orderkey <= 100
-        |) ORDER BY l_orderkey, l_linenumber, measure""".stripMargin,
-    "q_cube" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  count(*) AS n,
-        |  CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
-        |FROM lineitem
-        |GROUP BY CUBE (l_returnflag, l_linestatus)
-        |ORDER BY gid, l_returnflag, l_linestatus""".stripMargin,
-    "q_rollup" ->
-      """SELECT l_returnflag, l_linestatus,
-        |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |  count(*) AS n,
-        |  CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid
-        |FROM lineitem
-        |GROUP BY ROLLUP (l_returnflag, l_linestatus)
-        |ORDER BY gid, l_returnflag, l_linestatus""".stripMargin,
-    "q_topk_group" ->
+        |) ORDER BY l_orderkey, l_linenumber, measure""".stripMargin),
+    "q_topk_group" -> QueryKey(qTopkGroup,
       """SELECT * FROM (
         |  SELECT o_orderpriority, o_orderkey, o_totalprice,
         |    row_number() OVER (PARTITION BY o_orderpriority
         |      ORDER BY o_totalprice DESC, o_orderkey) AS rk
         |  FROM orders
-        |) WHERE rk <= 3 ORDER BY o_orderpriority, rk""".stripMargin,
-    "q_sessionize" ->
+        |) WHERE rk <= 3 ORDER BY o_orderpriority, rk""".stripMargin),
+    "q_sessionize" -> QueryKey(qSessionize,
       """WITH gapped AS (
         |  SELECT user_id, event_id, ts,
         |    CASE WHEN lag(ts) OVER w IS NULL
@@ -1326,5 +1291,5 @@ object Analytics {
         |  strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
         |  strftime(max(ts), '%Y-%m-%d %H:%M:%S') AS session_end
         |FROM sess GROUP BY user_id, session_num
-        |ORDER BY user_id, session_num""".stripMargin)
+        |ORDER BY user_id, session_num""".stripMargin))
 }

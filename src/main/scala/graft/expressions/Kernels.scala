@@ -53,12 +53,6 @@ object Kernels {
   def hashString(s: UTF8String): Long =
     XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, SEED)
 
-  /** == xxhash64(intLit, stringCol): chained int-then-bytes hash. */
-  def hashIntString(i: Int, s: UTF8String): Long = {
-    val h1 = XXH64.hashInt(i, SEED)
-    XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, h1)
-  }
-
   // ------------------------------------------------------------ simhash
   /** One-pass 64-bit SimHash over word unigrams; identical output to
     * the HOF formulation ReferenceForms.simhash64Hof (test sources). */
@@ -173,7 +167,7 @@ object Kernels {
 
   /** 64-bit SimHash over word unigrams (with multiplicity) using
     * [[sha64]] token hashes. DuckDB-reproducible; see the dedup_simhash
-    * oracle in PipelineQueries. */
+    * oracle in DedupQueries. */
   def simhash64Sha(text: UTF8String): Long = {
     val votes = new Array[Int](64)
     val toks = tokens(text)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.GraftColumnBridge
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.types._
@@ -276,18 +277,17 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         k.call(args.take(cols), (cols until args.length).map(constInt(args, _, k.name)))
       }))
     }
-    ext.injectFunction((FunctionIdentifier("graft_heavy_hitters"), info("graft_heavy_hitters"),
-      (args: Seq[Expression]) => SpaceSavingAgg(args(0),
-        constInt(args, 1, "graft_heavy_hitters")).toAggregateExpression()))
-    ext.injectFunction((FunctionIdentifier("graft_topk"), info("graft_topk"),
-      (args: Seq[Expression]) => TopKAgg(args(0), args(1),
-        constInt(args, 2, "graft_topk")).toAggregateExpression()))
-    ext.injectFunction((FunctionIdentifier("graft_bloom_agg"), info("graft_bloom_agg"),
-      (args: Seq[Expression]) => BloomAgg(args(0),
-        constInt(args, 1, "graft_bloom_agg")).toAggregateExpression()))
-    ext.injectFunction((FunctionIdentifier("graft_cms_agg"), info("graft_cms_agg"),
-      (args: Seq[Expression]) => CmsAgg(args(0),
-        constInt(args, 1, "graft_cms_agg")).toAggregateExpression()))
+    // the sketch aggregates check their arity like the kernels above
+    def agg(name: String, arity: Int)(build: Seq[Expression] => AggregateFunction): Unit =
+      ext.injectFunction((FunctionIdentifier(name), info(name), (args: Seq[Expression]) => {
+        if (args.length != arity) fail(name, s"expects $arity arguments, got ${args.length}")
+        build(args).toAggregateExpression()
+      }))
+    agg("graft_heavy_hitters", 2)(a =>
+      SpaceSavingAgg(a(0), constInt(a, 1, "graft_heavy_hitters")))
+    agg("graft_topk", 3)(a => TopKAgg(a(0), a(1), constInt(a, 2, "graft_topk")))
+    agg("graft_bloom_agg", 2)(a => BloomAgg(a(0), constInt(a, 1, "graft_bloom_agg")))
+    agg("graft_cms_agg", 2)(a => CmsAgg(a(0), constInt(a, 1, "graft_cms_agg")))
     ext.injectOptimizerRule(_ => IntersectCountRewrite)
   }
 

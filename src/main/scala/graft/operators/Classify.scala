@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DecimalType
 import graft.functions.Text
 
 /** Trained linear quality classifier — the model-based successor to
@@ -173,5 +174,47 @@ object Classify {
     val w = trainWeights(feats, steps, lr)
     feats.select(col("doc_id"), r6(linkP(w)).as("score"),
       (r6(linkP(w)) >= lit(0.5)).as("pred"), col("label"))
+  }
+
+  /** Bigram-LM fluency scores (#62): train add-one-smoothed bigram
+    * stats on the corpus itself, score each doc by mean log P(w2|w1).
+    * Counts are vocabulary-sized aggregates; the per-doc mean goes
+    * through exact decimal summation (order-independent), so the
+    * oracle replays it despite double logs. Shared by text_lmscore
+    * (the scores themselves) and text_ccnet (the bucketing on top). */
+  private[graft] def lmScores(doc: DataFrame): DataFrame = {
+    // token array staged as an attribute ref BEFORE bigramsOf: a
+    // lambda body re-evaluates non-lambda subexpressions per element,
+    // so composing bigramsOf(tokens(text)) directly re-tokenizes the
+    // whole document once per bigram (measured 23s -> ~2s at sf0.1)
+    val tokd = doc.select(col("doc_id"), Text.tokens(col("text")).as("tk"))
+    // bigram instances feed BOTH the c2 aggregate and the scoring
+    // join — materialize once (exchange reuse doesn't fire across
+    // the branches; instance-level, so corpus-sized: set
+    // spark.graft.materialize=reliable at 100 TB)
+    val bgInst = graft.Materialize.once(tokd.select(col("doc_id"),
+        explode(Text.bigramsOf(col("tk"))).as("bg"))
+      .withColumn("w1", split(col("bg"), " ").getItem(0)))
+    val uni = tokd.select(explode(col("tk")).as("token"))
+      .where(col("token") =!= "")
+    // c1 has exactly one row per distinct token, so the vocabulary
+    // size is count(c1) — deriving it there saves the second full
+    // tokenize+explode pass the countDistinct scan used to make
+    val c1 = graft.Materialize.once(
+      uni.groupBy(col("token")).agg(count(lit(1)).as("c1")))
+    val vocab = broadcast(c1.agg(count(lit(1)).as("v")))
+    val c2 = bgInst.groupBy(col("bg")).agg(count(lit(1)).as("c2"))
+    val terms = bgInst
+      .join(c2, "bg")
+      .join(c1.withColumnRenamed("token", "w1"), "w1")
+      .crossJoin(vocab)
+      .select(col("doc_id"),
+        log((col("c2") + lit(1L)).cast("double") /
+            (col("c1") + col("v")).cast("double"))
+          .cast(DecimalType(28, 12)).as("lp"))
+    terms.groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_bigrams"),
+        round(sum(col("lp")).cast("double") / count(lit(1)).cast("double"), 6)
+          .as("avg_logprob"))
   }
 }

@@ -1367,4 +1367,69 @@ object Dedup {
       .repartition(parts, col("doc_a"), col("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
   }
+
+  /** Keep-one exact-substring removal (#94b): each cross-document-
+    * duplicated 8-token window's content survives in exactly ONE
+    * deterministically elected occurrence — the global min
+    * (doc_id, p), an argmin the window-df aggregate already pays
+    * for — and is cut everywhere else. Election beats cut on
+    * overlap: a token covered by a canonical occurrence is KEPT even
+    * when another duplicated window also covers it, so the elected
+    * copy survives intact instead of being shredded by overlapping
+    * non-canonical windows (CurationSpec pins both properties).
+    * Scale shape = #94's: instance ngrams, one vocabulary-sized df +
+    * election aggregate, per-doc marks as two position lists, the
+    * edit a narrow HOF map with zero extra shuffle. */
+  private[graft] def dupcutKeepOneOf(doc: DataFrame): DataFrame = {
+    val tokd = doc
+      .select(col("doc_id"), Text.tokensOrEmpty(col("text")).as("tk"))
+    val inst = tokd.select(col("doc_id"),
+      posexplode(Text.ngramsOf(col("tk"), 8)))
+      .select(col("doc_id"), (col("pos") + 1).as("p"), col("col").as("w"))
+    val stats = inst.groupBy(col("w")).agg(
+      countDistinct(col("doc_id")).as("nd"),
+      min(struct(col("doc_id"), col("p"))).as("canon"))
+    val dupInst = inst.join(stats.where(col("nd") >= 2), "w")
+    val isCanon = col("canon.doc_id") === col("doc_id") &&
+      col("canon.p") === col("p")
+    val marks = dupInst.groupBy(col("doc_id")).agg(
+      sort_array(collect_set(when(isCanon, col("p")))).as("kps"),
+      sort_array(collect_set(when(!isCanon, col("p")))).as("cps"))
+    val joined = tokd.join(marks, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("tk"),
+        coalesce(col("kps"), array().cast("array<int>")).as("kps"),
+        coalesce(col("cps"), array().cast("array<int>")).as("cps"))
+    val staged = joined.select(col("doc_id"), col("tk"),
+      filter(col("tk"), (_, i0) =>
+        exists(col("kps"), q => q <= i0 + 1 && i0 + 1 <= q + 7) ||
+          !exists(col("cps"), q => q <= i0 + 1 && i0 + 1 <= q + 7)).as("kept"))
+    staged.select(col("doc_id"),
+      size(col("tk")).cast("long").as("n_tokens"),
+      (size(col("tk")) - size(col("kept"))).cast("long").as("n_cut"),
+      sha2(array_join(col("kept"), " "), 256).as("kept_sha"))
+  }
+
+  /** Winnowing fingerprint selection (#96): (doc_id, pos, fp) of the
+    * selected 4-gram hashes under a w=4 window — see the `text_winnow`
+    * entry's commentary for the packing/tiebreak argument. Shared by
+    * text_winnow (the selection itself) and winnow_pairs (the
+    * detection join over the selected index). */
+  private[graft] def winnowFingerprints(doc: DataFrame): DataFrame = {
+    val P = 1048576L
+    val grams = doc
+      .select(col("doc_id"),
+        posexplode(Text.ngramsOf(Text.tokens(col("text")), 4)))
+      .select(col("doc_id"), col("pos").cast("long").as("pos"),
+        conv(substring(sha2(col("col"), 256), 1, 10), 16, 10)
+          .cast("long").as("h"))
+    val wf = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("doc_id")).orderBy(col("pos")).rowsBetween(0, 3)
+    grams
+      .select(col("doc_id"),
+        min(col("h") * P + (lit(P - 1) - col("pos"))).over(wf).as("key"))
+      .distinct()
+      .select(col("doc_id"),
+        (lit(P - 1) - col("key") % P).as("pos"),
+        expr(s"key div $P").as("fp"))
+  }
 }

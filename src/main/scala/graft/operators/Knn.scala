@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.sources.Tables
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
@@ -956,5 +957,55 @@ object Knn {
       .select(col("vec_id"), col("label"),
         (-col("best.neg")).as("pred_label"), col("best.cos").as("cos"),
         (col("label") === -col("best.neg")).as("agree"))
+  }
+
+  /** #100's ranked same-cell top-3 neighbor set (vec_id, rk, nb_id,
+    * cos), no output ordering — shared by graph_knn and the
+    * graph_clusters mutual-edge symmetrization.
+    *
+    * nCells is THE scale dial (same-cell pair work = n²/nCells, so at
+    * a fixed cell count the join is quadratic in corpus size — SURVEY
+    * §5's nCells ≈ √n rule): the shipped queries derive it from the
+    * corpus size via [[Knn.autoCells]] (max(16, ⌈√n⌉)) and the DuckDB
+    * oracle replays the same formula from count(*), so the cell
+    * assignment stays exact at every SF. ScaleCheck measured the fix:
+    * graph_clusters 4.3× wall at 10× data with fixed 16 cells vs
+    * ~2.8× at √n (SCALECHECK.md). `nCells <= 0` → auto. */
+  private[graft] def knnTop3(s: SparkSession, d: String,
+      nCells: Int = 0): DataFrame = {
+    val nc = if (nCells > 0) nCells else Knn.autoCells(Tables.rowCount(s, d, "embeddings"))
+    val assigned = graft.Materialize.once(
+      Knn.ivfAssign(Tables.embeddings(s, d), Knn.ivfCentroids(Tables.embeddings(s, d), nc)))
+    val nb = assigned.select(col("cell_id"), col("vec_id").as("nb_id"),
+      col("embedding").as("nb_emb"))
+    val wr = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("vec_id")).orderBy(col("cos").desc, col("nb_id"))
+    assigned.join(nb, "cell_id")
+      .where(col("vec_id") =!= col("nb_id"))
+      .select(col("vec_id"), col("nb_id"),
+        round(Knn.cosine(col("embedding"), col("nb_emb")), 6).as("cos"))
+      .withColumn("rk", row_number().over(wr)).where(col("rk") <= 3)
+      .select(col("vec_id"), col("rk"), col("nb_id"), col("cos"))
+  }
+
+  /** #102's full pipeline (mutual-kNN edges → min-label components)
+    * with the cell-count dial exposed for scale rehearsal. */
+  private[graft] def semanticClusters(s: SparkSession, d: String,
+      nCells: Int = 0): DataFrame = {
+    // materialized ONCE: the kNN edge list feeds BOTH intersect
+    // branches (itself and its mirror) — un-truncated, the whole IVF
+    // build + probe re-ran per branch (r18-opt)
+    val rr = graft.Materialize.once(knnTop3(s, d, nCells)
+      .select(col("vec_id").as("doc_a"), col("nb_id").as("doc_b")))
+    val mutual = rr.intersect(
+        rr.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
+      .where(col("doc_a") < col("doc_b"))
+    val labels = Dedup.clusters(mutual)
+    Tables.embeddings(s, d).select(col("vec_id"))
+      .join(labels.select(col("doc_id").as("vec_id"), col("cluster_id")),
+        Seq("vec_id"), "left")
+      .select(col("vec_id"),
+        coalesce(col("cluster_id"), col("vec_id")).as("cluster_id"))
+      .orderBy(col("vec_id"))
   }
 }

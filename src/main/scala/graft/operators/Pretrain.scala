@@ -198,8 +198,7 @@ object Pretrain {
     * number the trainer's context window actually consumes.
     *
     * Scale shape on top of [[examples]]: one vocabulary-sized trainer
-    * (corpus touched once for frequencies — [[PipelineQueries
-    * .bpeSegmentsOf]]), a chunk-token explode (~n_tokens·4/3 rows for
+    * (corpus touched once for frequencies — [[bpeSegmentsOf]]), a chunk-token explode (~n_tokens·4/3 rows for
     * the 64/16 overlap), one keyed join onto the vocab segment table
     * (AQE broadcasts it at small vocabs; a 10M-entry vocab falls back
     * to a keyed shuffle — the text_bpe_apply re-encode shape), and one
@@ -210,7 +209,7 @@ object Pretrain {
     // single consumer (the chunk-token join below) — no checkpoint
     // needed; the trainer's own final round is already materialized
     // and this projection over it is lazy (r19-opt)
-    val seg = PipelineQueries.bpeSegmentsOf(
+    val seg = bpeSegmentsOf(
       tokCorpus.select(col("doc_id"), col("text")), bpeRounds)
       .select(col("token"), size(col("sy")).cast("long").as("n_sub"))
     examplesBpeWith(src, benchmark, seg, budget, nShards, keepNum, keepDen)
@@ -272,7 +271,7 @@ object Pretrain {
       bpeRounds: Int = 8): Int = graft.Materialize.scoped {
     val sp = tokCorpus.sparkSession
     import sp.implicits._
-    val (merges, segments) = PipelineQueries.bpeArtifacts(
+    val (merges, segments) = bpeArtifacts(
       tokCorpus.select(col("doc_id"), col("text")), bpeRounds)
     graft.sources.StormSinks.writeVersionedGroup(sp, dir, Seq(
       "merges" -> merges,
@@ -592,5 +591,116 @@ object Pretrain {
         col("chosen_id"), col("rejected_id"),
         col("chosen_q"), col("rejected_q"),
         round(col("chosen_q") - col("rejected_q"), 6).as("margin"))
+  }
+
+  /** Iterative BPE merge trainer (#89b): `rounds` deterministic merge
+    * rounds over the frequency-weighted vocabulary — the actual
+    * tokenizer-training loop text_bpe's one-shot pair count points at.
+    * Each round counts adjacent symbol pairs across the vocabulary
+    * (weighted by corpus token frequency, overlapping positions
+    * included — the standard zip(word, word[1:]) count), merges the
+    * best pair (max weight, ties to the lexicographically LOWEST
+    * (l, r) — pinned so an independent engine lands on the same merge
+    * chain), and rewrites every vocabulary word.
+    *
+    * Engine-replayable representation: each word's symbol sequence is
+    * ONE string with every symbol INDIVIDUALLY wrapped in single
+    * spaces (" a  b " = "␣a␣"+"␣b␣"), legal because whitespace
+    * tokenization guarantees space-free symbols. The merge is then
+    * literal `replace(w, ' l  r ', ' lr ')`: leftmost-non-overlapping
+    * replacement IS greedy left-to-right BPE merging — the per-symbol
+    * wrap anchors boundaries ("␣a␣" can never match inside "␣ab␣")
+    * AND survives the match, so a·a·a·a merges positions 1 and 3 into
+    * [aa][aa] exactly like the sequential scan (a shared two-space
+    * separator would be CONSUMED by the first match and silently
+    * break the chained merge — CurationSpec's overlap fixture pins
+    * this), and both engines' replace share that semantic.
+    *
+    * Scale shape: the corpus is touched ONCE (the token frequency
+    * aggregate); every round after that is vocabulary-sized — a pair
+    * explode (|vocab|·avg_len rows), one partial-agg shuffle, a
+    * 1-row top-k, and a broadcast-rewrite. Both the per-round best
+    * row and the rewritten vocabulary are materialized (the iterative
+    * trainer rule — plans stay constant-depth in rounds; the previous
+    * round's blocks are freed). Output: (step, l, r, wt) — the merge
+    * table, the artifact a tokenizer trainer ships. */
+  private[graft] def bpeTrainOf(doc: DataFrame, rounds: Int): DataFrame = {
+    val (merges, vocab) = bpeTrainCore(doc, rounds)
+    graft.Materialize.free(vocab)
+    merges
+  }
+
+  /** Final per-token segmentation under the trained merge chain —
+    * the APPLY half of the trainer (`text_bpe_apply` builds on it):
+    * (token, sy = the token's symbols after all `rounds` merges).
+    * Vocabulary-sized: the corpus is never touched beyond the
+    * trainer's one frequency aggregate. */
+  private[graft] def bpeSegmentsOf(doc: DataFrame, rounds: Int): DataFrame = {
+    val (_, vocab) = bpeTrainCore(doc, rounds, needMerges = false)
+    vocab.select(col("token"),
+      expr("filter(split(trim(w), '  '), x -> x <> '')").as("sy"))
+  }
+
+  /** BOTH trainer artifacts from one training run — the merge table
+    * ([[bpeTrainOf]]'s shape) and the per-token segmentation
+    * ([[bpeSegmentsOf]]'s shape) — for the publish-once tokenizer
+    * lake ([[Pretrain.publishTokenizerLake]]): a tokenizer ships as
+    * merges (the replayable training log) plus the materialized
+    * vocabulary segmentation (the serving table), and publishing them
+    * from ONE run keeps them mutually consistent by construction. */
+  private[graft] def bpeArtifacts(doc: DataFrame,
+      rounds: Int): (DataFrame, DataFrame) = {
+    val (merges, vocab) = bpeTrainCore(doc, rounds)
+    (merges, vocab.select(col("token"),
+      expr("filter(split(trim(w), '  '), x -> x <> '')").as("sy")))
+  }
+
+  private def bpeTrainCore(doc: DataFrame, rounds: Int,
+      needMerges: Boolean = true): (DataFrame, DataFrame) = {
+    require(rounds >= 1, s"need rounds >= 1, got $rounds")
+    val toks = doc.select(explode(Text.tokens(col("text"))).as("token"))
+      .where(col("token") =!= "")
+    val freq = toks.groupBy(col("token")).agg(count(lit(1)).as("f"))
+    var vocab = graft.Materialize.once(freq.select(col("token"), col("f"),
+      array_join(expr(
+        "transform(sequence(1, length(token)), " +
+          "i -> concat(' ', substring(token, i, 1), ' '))"), "").as("w")))
+    val merges = scala.collection.mutable.ArrayBuffer[DataFrame]()
+    var r = 1
+    while (r <= rounds) {
+      val sy = vocab.select(col("f"),
+        expr("filter(split(trim(w), '  '), x -> x <> '')").as("sy"))
+        .where(size(col("sy")) >= 2)
+      val pw = sy.select(col("f"), explode(expr(
+          "transform(sequence(1, size(sy) - 1), " +
+            "i -> struct(element_at(sy, i) AS l, element_at(sy, i + 1) AS r))")).as("p"))
+        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+        .agg(sum(col("f")).as("wt"))
+      val bestPlan = pw.orderBy(col("wt").desc, col("l"), col("r")).limit(1)
+        .select(lit(r).as("step"), col("l"), col("r"), col("wt"))
+      // `best` is materialized ONLY when the caller consumes the merge
+      // log: the merge-table consumer reads it after this loop frees
+      // the vocab checkpoints it derives from (a LogicalRDD has no
+      // lineage fallback). Segments-only callers (bpeSegmentsOf — the
+      // pretrain composites) reference it exactly once, inside the
+      // next-vocab checkpoint's broadcast build, so the TakeOrdered
+      // pick folds into that job and 2 jobs/round become 1 (r19-opt).
+      val best = if (needMerges) graft.Materialize.once(bestPlan) else bestPlan
+      if (needMerges) merges += best
+      // LEFT join (not crossJoin): when the corpus runs out of pairs
+      // the best row is EMPTY, and the vocabulary must pass through
+      // unchanged — a cross join would silently empty it, which the
+      // segments consumer (bpeSegmentsOf) cannot tolerate
+      val next = graft.Materialize.once(
+        vocab.join(broadcast(best.select(col("l"), col("r"))), lit(true), "left")
+          .select(col("token"), col("f"),
+            when(col("l").isNull, col("w")).otherwise(expr(
+              "replace(w, concat(' ', l, '  ', r, ' '), " +
+                "concat(' ', l, r, ' '))")).as("w")))
+      graft.Materialize.free(vocab)
+      vocab = next
+      r += 1
+    }
+    (if (needMerges) merges.reduce(_ unionByName _) else null, vocab)
   }
 }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Text
 
 /** The append-capable published layout of the BM25 sparse index —
   * the last published index family to gain a continuous-ingest face
@@ -41,7 +42,7 @@ object Retrieval {
     graft.Materialize.scoped {
       val sp = doc.sparkSession
       import sp.implicits._
-      val (tf, dl0) = PipelineQueries.bm25TfDl(doc)
+      val (tf, dl0) = bm25TfDl(doc)
       val dl = graft.Materialize.once(dl0)
       val dfreq = graft.Materialize.once(
         tf.groupBy(col("token")).agg(count(lit(1)).as("df")))
@@ -52,7 +53,7 @@ object Retrieval {
             (col("sum_dl").cast("double") / col("n_docs").cast("double"))
               .as("avgdl")))
       graft.sources.StormSinks.writeVersionedGroup(sp, dir, Seq(
-        "weights" -> PipelineQueries.bm25WeightsFrom(tf, dl, dfreq, stats),
+        "weights" -> bm25WeightsFrom(tf, dl, dfreq, stats),
         "dl" -> dl, "df" -> dfreq, "stats" -> stats,
         "meta" -> Seq(-1L).toDF("last_batch")))
     }
@@ -88,10 +89,10 @@ object Retrieval {
       val ver = StormSinks.currentVersionName(spark, dir)
       val dfreq = StormSinks.readGroupTableAt(spark, dir, ver, "df")
       val stats = StormSinks.readGroupTableAt(spark, dir, ver, "stats")
-      val (tf, dl0) = PipelineQueries.bm25TfDl(newDocs)
+      val (tf, dl0) = bm25TfDl(newDocs)
       val dl = graft.Materialize.once(dl0)
       val v = StormSinks.appendDeltaGroup(spark, dir, appends = Seq(
-        "weights" -> PipelineQueries.bm25WeightsFrom(tf, dl, dfreq, stats),
+        "weights" -> bm25WeightsFrom(tf, dl, dfreq, stats),
         "dl" -> dl), replaces = replaces)
       if (maxSegments > 0)
         StormSinks.maintainGroupSegments(spark, dir, maxSegments)
@@ -146,9 +147,75 @@ object Retrieval {
   }
 
   /** The serving table at the current version (all segments, one
-    * pointer resolution) — feed it to [[PipelineQueries.sparseTopK]]
+    * pointer resolution) — feed it to [[sparseTopK]]
     * or any sparse scorer. */
   def readBm25Weights(spark: SparkSession, dir: String): DataFrame =
     graft.sources.StormSinks.readGroupTableAt(spark, dir,
       graft.sources.StormSinks.currentVersionName(spark, dir), "weights")
+
+  /** Full BM25 inverted index on the exact 1e-6 integer grid:
+    * (doc_id, token, w_i). The corpus-sized tf aggregate feeds
+    * dl/df/score; one Materialize inside keeps it single-execution.
+    * This is the table [[graft.sources.StormSinks.writeVersionedTable]]
+    * persists for the serving tier (retrieval_indexed). */
+  private[graft] def bm25WeightsOf(doc: DataFrame): DataFrame = {
+    val (tf, dl) = bm25TfDl(doc)
+    val dfreq = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
+    val stats = doc.agg(count(lit(1)).as("n_docs"))
+      .crossJoin(dl.agg(sum(col("dl")).as("sum_dl")))
+      .select(col("n_docs"),
+        (col("sum_dl").cast("double") / col("n_docs").cast("double")).as("avgdl"))
+    bm25WeightsFrom(tf, dl, dfreq, stats)
+  }
+
+  /** (tf, dl) of a corpus: the per-document term statistics — the
+    * only parts of the BM25 index that are PER-DOC (and therefore
+    * appendable); df/n_docs/avgdl are corpus-global. */
+  private[graft] def bm25TfDl(doc: DataFrame): (DataFrame, DataFrame) = {
+    val toks = doc.select(col("doc_id"), explode(Text.tokens(col("text"))).as("token"))
+      .where(col("token") =!= "")
+    val tf = graft.Materialize.once(
+      toks.groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf")))
+    (tf, tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl")))
+  }
+
+  /** The BM25 scoring formula over EXPLICIT statistics frames — ONE
+    * definition shared by the train-in-session [[bm25WeightsOf]] and
+    * the frozen-stats append ([[Retrieval.appendToBm25Lake]]), so
+    * "score new docs under the published statistics" is provably the
+    * same arithmetic as publish-time scoring. The df join is INNER:
+    * tokens absent from `dfreq` (out-of-vocabulary under a frozen
+    * index) contribute no weight — the frozen-vocabulary contract. */
+  private[graft] def bm25WeightsFrom(tf: DataFrame, dl: DataFrame,
+      dfreq: DataFrame, stats: DataFrame): DataFrame = {
+    val tfD = col("tf").cast("double")
+    val dfD = col("df").cast("double")
+    val idf = log((col("n_docs").cast("double") - dfD + 0.5) / (dfD + 0.5) + 1.0)
+    val denom = tfD + lit(1.2) * (lit(1.0) - 0.75 + lit(0.75) * col("dl").cast("double") / col("avgdl"))
+    tf.join(dl, "doc_id").join(dfreq, "token")
+      .crossJoin(broadcast(stats))
+      .select(col("doc_id"), col("token"),
+        round(round(idf * (tfD * 2.2) / denom, 6) * 1e6).cast("long").as("w_i"))
+  }
+
+  /** The sparse-retrieval serving probe over a BM25 weight index
+    * ([[bm25WeightsOf]] or its lake re-read): 10 deterministic query
+    * vectors (docs ≤ 10's top-3 terms, from the index itself) retrieve
+    * top-3 docs by order-free BIGINT dot product; the index never
+    * reshuffles (query side broadcast). */
+  private[graft] def sparseTopK(weights: DataFrame, k: Int = 3): DataFrame = {
+    val wq = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("doc_id")).orderBy(col("w_i").desc, col("token"))
+    val qterms = weights.where(col("doc_id") <= 10)
+      .withColumn("qrk", row_number().over(wq)).where(col("qrk") <= 3)
+      .select(col("doc_id").as("query_id"), col("token"), col("w_i").as("qw_i"))
+    val hits = weights.join(broadcast(qterms), "token")
+      .groupBy(col("query_id"), col("doc_id"))
+      .agg(sum(col("qw_i") * col("w_i")).as("score_i"))
+    val wr = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("query_id")).orderBy(col("score_i").desc, col("doc_id"))
+    hits.withColumn("rk", row_number().over(wr)).where(col("rk") <= k)
+      .select(col("query_id"), col("rk"), col("doc_id"), col("score_i"))
+      .orderBy(col("query_id"), col("rk"))
+  }
 }

@@ -50,11 +50,6 @@ object LakeCatalog {
   val Kinds: Set[String] = Set("minhash", "retrieval", "ivfpq", "clusters",
     "clusters_indexed", "bm25", "jaccard", "bloom", "registry", "model")
 
-  /** Kinds whose groups cite documents and therefore MUST lose the
-    * deleted ids in a sweep (the [[auditCitations]] zero set). */
-  val CitationKinds: Set[String] =
-    Set("minhash", "retrieval", "ivfpq", "clusters", "clusters_indexed")
-
   /** Kinds whose delete path is a republish over the remaining corpus
     * — [[sweepDelete]] requires `remainingDocs` when any is present. */
   val RepublishKinds: Set[String] = Set("bm25", "jaccard", "bloom")

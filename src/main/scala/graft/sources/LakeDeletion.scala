@@ -106,7 +106,7 @@ object LakeDeletion {
       val del = graft.Materialize.once(ids(deleteIds))
       val ver = StormSinks.currentVersionName(spark, dir)
       StormSinks.writeVersionedGroup(spark, dir, Seq(
-        "bm25" -> graft.operators.PipelineQueries.bm25WeightsOf(
+        "bm25" -> graft.operators.Retrieval.bm25WeightsOf(
           remainingDocs.select(col("doc_id"), col("text"))),
         "dense" -> StormSinks.readGroupTableAt(spark, dir, ver, "dense")
           .join(broadcast(del.select(col("doc_id").as("vec_id"))),

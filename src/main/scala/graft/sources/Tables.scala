@@ -47,7 +47,11 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
-  /** Register every table as a temp view (for spark.sql-driven use). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
+  /** Row count of table `name` under `d`, memoized per (dir, table):
+    * one scan per JVM instead of one per caller. The production
+    * analogue is reading table statistics, not scanning: immutable
+    * testdata makes the memo exact here. */
+  private val rowCounts = scala.collection.concurrent.TrieMap.empty[(String, String), Long]
+  def rowCount(s: SparkSession, d: String, name: String): Long =
+    rowCounts.getOrElseUpdate((d, name), load(s, d, name).count())
 }

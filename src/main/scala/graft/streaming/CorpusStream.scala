@@ -639,7 +639,7 @@ object CorpusStream {
   def publishRetrievalLake(corpus: DataFrame, embeddings: DataFrame,
       dir: String): Unit = {
     graft.sources.StormSinks.writeVersionedGroup(corpus.sparkSession, dir, Seq(
-      "bm25" -> graft.operators.PipelineQueries.bm25WeightsOf(
+      "bm25" -> graft.operators.Retrieval.bm25WeightsOf(
         corpus.select(col("doc_id"), col("text"))),
       "dense" -> embeddings.select(col("vec_id"), col("embedding"))))
     ()
@@ -1349,22 +1349,16 @@ object CorpusStream {
     * (fps + meta): fold the stream's delta segments into one
     * whole-table version, then reclaim superseded versions and
     * unreferenced segment dirs. Readers (and the stream itself) are
-    * unaffected at any point — every step is pointer-atomic. */
-  private def compactRegistry(spark: SparkSession, dir: String,
-      keepVersions: Int): Unit = {
+    * unaffected at any point — every step is pointer-atomic. One
+    * function for every registry group: [[startLineClean]]'s,
+    * [[startParagraphDedup]]'s and [[startPretrainPrep]]'s. */
+  def compactRegistry(spark: SparkSession, dir: String,
+      keepVersions: Int = 1): Unit = {
     graft.sources.StormSinks.compactGroupSegments(spark, dir)
     graft.sources.StormSinks.vacuumVersions(spark, dir, keepVersions)
     graft.sources.StormSinks.vacuumSegments(spark, dir)
     ()
   }
-
-  /** [[compactRegistry]] for the [[startLineClean]] registry. */
-  def compactLineIndex(spark: SparkSession, dir: String,
-      keepVersions: Int = 1): Unit = compactRegistry(spark, dir, keepVersions)
-
-  /** [[compactRegistry]] for the [[startParagraphDedup]] registry. */
-  def compactParagraphIndex(spark: SparkSession, dir: String,
-      keepVersions: Int = 1): Unit = compactRegistry(spark, dir, keepVersions)
 
   /** Streaming C4 line cleaning with cross-stream duplicate-line
     * removal: per micro-batch, rule-filter the batch's lines, drop
@@ -1391,7 +1385,7 @@ object CorpusStream {
     * are anti-joined against the registry, so segments stay disjoint
     * and the union-read needs no dedup) and replaces only the one-row
     * last_batch meta; the registry itself is never rewritten. The
-    * maintenance cadence folds segments ([[compactLineIndex]]) and
+    * maintenance cadence folds segments ([[compactRegistry]]) and
     * vacuums. The anti-join is a plain shuffle join (the registry
     * grows unboundedly with the stream, so no broadcast hint — the
     * freshBroadcastMax lesson applied from the start). */
@@ -1484,7 +1478,7 @@ object CorpusStream {
     * the one-row meta ([[graft.sources.StormSinks.appendDeltaGroup]]
     * — O(batch) state I/O per trigger; segments stay disjoint via the
     * anti-join), compacted on the maintenance cadence
-    * ([[compactParagraphIndex]]); everything else is batch-sized. */
+    * ([[compactRegistry]]); everything else is batch-sized. */
   def startParagraphDedup(spark: SparkSession, inDir: String,
       stateDir: String, outDir: String, checkpointDir: String,
       maxFilesPerTrigger: Int = 16,
@@ -1668,10 +1662,6 @@ object CorpusStream {
       }
     }
   }
-
-  /** [[compactRegistry]] for the [[startPretrainPrep]] group. */
-  def compactPretrainIndex(spark: SparkSession, dir: String,
-      keepVersions: Int = 1): Unit = compactRegistry(spark, dir, keepVersions)
 
   /** The pretrain-prep stream's output, one row per doc, newest batch
     * wins (the latestCleanLines collapse). Empty on cold start. */

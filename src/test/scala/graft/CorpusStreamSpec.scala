@@ -485,7 +485,7 @@ class CorpusStreamSpec extends SparkSpec {
       "drift gate leaked materialized frames")
     val got = CorpusStream.latestDriftTerms(spark, s"$base/out")
       .orderBy(col("feature"), col("bucket")).collect().map(_.toSeq).toSeq
-    val want = graft.operators.PipelineQueries.queries("corpus_drift")(spark, sfDir)
+    val want = SparkEntry.queries("corpus_drift")(spark, sfDir)
       .collect().map(_.toSeq).toSeq
     assert(got == want, "streaming gate diverged from batch corpus_drift")
     // intermediate batches were also stamped (3 files -> 3 term dumps)
@@ -1071,7 +1071,7 @@ class CorpusStreamSpec extends SparkSpec {
       .readVersionedGroupTable(spark, s"$base/state", "fps").count() == regSize + 2)
     // maintenance compaction: fold to a whole-table version, vacuum,
     // content identical
-    CorpusStream.compactLineIndex(spark, s"$base/state", keepVersions = 0)
+    CorpusStream.compactRegistry(spark, s"$base/state", keepVersions = 0)
     assert(new java.io.File(
       s"${graft.sources.StormSinks.currentVersionDir(spark, s"$base/state")}/fps").exists,
       "compaction must restore the whole-table layout")

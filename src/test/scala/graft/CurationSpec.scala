@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{Knn, Dedup, PipelineQueries, Sampling}
+import graft.operators.{Classify, Knn, Dedup, Pretrain, Sampling}
 import graft.sources.Tables
 
 /** Specs for the round-8 curation operators: hard-negative mining
@@ -83,7 +83,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("text_ccnet: score-rule replay, head/middle/tail ~thirds, keep = not tail") {
-    val sc = PipelineQueries.lmScores(Tables.documents(spark, sfDir))
+    val sc = Classify.lmScores(Tables.documents(spark, sfDir))
       .select($"doc_id", $"avg_logprob").as[(Long, Double)].collect()
     val n = sc.length
     val si = sc.map { case (id, s) => (id, math.round(s * 1e6)) }
@@ -92,7 +92,7 @@ class CurationSpec extends SparkSpec {
       val cum = gt.collect { case (s2, c) if s2 > s => c }.sum
       ((cum * 3L) / n).toInt
     }
-    val got = PipelineQueries.queries("text_ccnet")(spark, sfDir).collect()
+    val got = SparkEntry.queries("text_ccnet")(spark, sfDir).collect()
     assert(got.length == n)
     val names = Seq("head", "middle", "tail")
     got.foreach { r =>
@@ -118,7 +118,7 @@ class CurationSpec extends SparkSpec {
       val c = size(clusterOf(id))
       md5Bucket("soft", id) < 1000000L / c
     }.toSet
-    val got = PipelineQueries.queries("sample_softdedup")(spark, sfDir)
+    val got = SparkEntry.queries("sample_softdedup")(spark, sfDir)
       .select($"doc_id").as[Long].collect().toSet
     assert(got == want)
     // every singleton rides through whole (threshold = full lattice)
@@ -134,7 +134,7 @@ class CurationSpec extends SparkSpec {
     val docs = Tables.documents(spark, sfDir)
       .select($"doc_id", $"text").as[(Long, String)].collect()
     val en = graft.functions.Text.stopwords.head._2.toSet
-    val got = PipelineQueries.queries("corpus_gopher")(spark, sfDir).collect()
+    val got = SparkEntry.queries("corpus_gopher")(spark, sfDir).collect()
       .map(r => r.getAs[Long]("doc_id") -> r).toMap
     assert(got.size == docs.length)
     var passes = 0
@@ -177,7 +177,7 @@ class CurationSpec extends SparkSpec {
     val doc = graft.sources.Tables.documents(spark, sfDir)
     val n = doc.count()
     val cut = math.floor(n * 0.7).toLong
-    val out = graft.operators.PipelineQueries.queries("corpus_drift")(spark, sfDir)
+    val out = SparkEntry.queries("corpus_drift")(spark, sfDir)
       .collect().map(r => (r.getString(0), r.getString(1),
         r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(out.nonEmpty)
@@ -201,7 +201,7 @@ class CurationSpec extends SparkSpec {
     // aaa -> [aa][a], NOT [a][aa]), and rounds 2-4 are all weight-1
     // ties resolved by the lexicographically lowest (l, r)
     val doc = Seq((0L, "aaaa aaa ab")).toDF("doc_id", "text")
-    val got = PipelineQueries.bpeTrainOf(doc, rounds = 4)
+    val got = Pretrain.bpeTrainOf(doc, rounds = 4)
       .orderBy($"step").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
     assert(got.toSeq == Seq(
@@ -211,7 +211,7 @@ class CurationSpec extends SparkSpec {
       (4, "aa", "aa", 1L)  // aaaa became [aa][aa]
     ), s"merge chain mismatch: ${got.toSeq}")
     // determinism: an independent run reproduces the chain exactly
-    val again = PipelineQueries.bpeTrainOf(doc.repartition(3), rounds = 4)
+    val again = Pretrain.bpeTrainOf(doc.repartition(3), rounds = 4)
       .orderBy($"step").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
     assert(again.toSeq == got.toSeq)
@@ -222,13 +222,13 @@ class CurationSpec extends SparkSpec {
     // collapses to one symbol: aaaa via (a,a) then (aa,aa); aaa via
     // (a,a) then (aa,a); ab via (a,b)
     val doc = Seq((0L, "aaaa aaa ab")).toDF("doc_id", "text")
-    val segs = PipelineQueries.bpeSegmentsOf(doc, rounds = 4)
+    val segs = Pretrain.bpeSegmentsOf(doc, rounds = 4)
       .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
     assert(segs == Map(
       "aaaa" -> List("aaaa"), "aaa" -> List("aaa"), "ab" -> List("ab")),
       s"got $segs")
     // fewer rounds leave partial merges: after round 1 only (a,a)
-    val seg1 = PipelineQueries.bpeSegmentsOf(doc, rounds = 1)
+    val seg1 = Pretrain.bpeSegmentsOf(doc, rounds = 1)
       .collect().map(r => r.getString(0) -> r.getSeq[String](1).toList).toMap
     assert(seg1 == Map(
       "aaaa" -> List("aa", "aa"), "aaa" -> List("aa", "a"), "ab" -> List("a", "b")),
@@ -242,7 +242,7 @@ class CurationSpec extends SparkSpec {
       (1L, "q0 " + shared),       // loses its copy
       (2L, shared + " x0 y0 z0")  // full copy of doc 0: every window non-canonical
     ).toDF("doc_id", "text")
-    val got = PipelineQueries.dupcutKeepOneOf(doc).orderBy($"doc_id").collect()
+    val got = Dedup.dupcutKeepOneOf(doc).orderBy($"doc_id").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3))).toSeq
     def sha(s: String) =
       java.security.MessageDigest.getInstance("SHA-256").digest(s.getBytes("UTF-8"))

@@ -13,7 +13,7 @@ class DeconIvfSpec extends SparkSpec {
   test("full probing == broadcast decon_embed exactly; nProbe=4 is one-sided with high recall") {
     val bench = embs.where(col("vec_id") % 20 === 7)
     val corpus = embs.where(col("vec_id") % 20 =!= 7)
-    val bcast = operators.PipelineQueries.queries("decon_embed")(spark, sfDir)
+    val bcast = SparkEntry.queries("decon_embed")(spark, sfDir)
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getBoolean(2))).toMap
     // probing EVERY cell removes the approximation: centroid pick,
     // map-side probe selection, cell join and max aggregation must
@@ -32,7 +32,7 @@ class DeconIvfSpec extends SparkSpec {
     // never exceeds the true max (no false contamination flags), and
     // recall of the true flags stays high on this corpus — the
     // documented IVF trade, quantified instead of hand-waved
-    val ivf = operators.PipelineQueries.queries("decon_embed_ivf")(spark, sfDir)
+    val ivf = SparkEntry.queries("decon_embed_ivf")(spark, sfDir)
       .collect()
     assert(ivf.length == bcast.size,
       "IVF probe must score every corpus vector (left-join contract)")

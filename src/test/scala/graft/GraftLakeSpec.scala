@@ -125,16 +125,16 @@ class GraftLakeSpec extends SparkSpec {
   }
 
   test("persisted BM25 index: publish -> fresh read -> sparse top-k == in-session") {
-    import graft.operators.PipelineQueries
+    import graft.operators.Retrieval
     val docs = graft.sources.Tables.documents(spark, sfDir)
     val lake = Files.createTempDirectory("graft-idx-lake").toString + "/bm25"
     assert(StormSinks.writeVersionedTable(
-      PipelineQueries.bm25WeightsOf(docs), lake) == 0)
-    val viaLake = PipelineQueries
+      Retrieval.bm25WeightsOf(docs), lake) == 0)
+    val viaLake = Retrieval
       .sparseTopK(spark.read.format("graftlake").load(lake))
       .collect().map(_.toSeq).toSeq
-    val inSession = PipelineQueries
-      .sparseTopK(graft.Materialize.once(PipelineQueries.bm25WeightsOf(docs)))
+    val inSession = Retrieval
+      .sparseTopK(graft.Materialize.once(Retrieval.bm25WeightsOf(docs)))
       .collect().map(_.toSeq).toSeq
     assert(viaLake == inSession)
     assert(viaLake.nonEmpty)

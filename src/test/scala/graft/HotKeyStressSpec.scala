@@ -532,7 +532,7 @@ class HotKeyStressSpec extends SparkSpec {
       .withColumn("n_chars", length(col("text")))
       .write.parquet(s"$dir/documents.parquet")
     val (rows, _, recs, _) = metered {
-      graft.operators.PipelineQueries.queries("corpus_novelty")(spark, dir)
+      SparkEntry.queries("corpus_novelty")(spark, dir)
         .collect()
     }
     assert(rows.length == n)

@@ -210,7 +210,7 @@ class KnnSpec extends SparkSpec {
         .sortBy { case (nb, c) => (-c, nb) }.take(3).zipWithIndex
         .map { case ((nb, c), i) => (id, i + 1, nb, c) }
     }.sortBy(t => (t._1, t._2))
-    val got = graft.operators.PipelineQueries.queries("graph_knn")(spark, sfDir)
+    val got = SparkEntry.queries("graph_knn")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
     assert(got.toSeq == expected.toSeq)
 
@@ -232,7 +232,7 @@ class KnnSpec extends SparkSpec {
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
     }
     val expectedClu = vecs.map(_._1).map(id => (id, find(id))).sortBy(_._1)
-    val gotClu = graft.operators.PipelineQueries.queries("graph_clusters")(spark, sfDir)
+    val gotClu = SparkEntry.queries("graph_clusters")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(gotClu.toSeq == expectedClu.toSeq)
     assert(mutual.nonEmpty, "testdata produced no mutual edges — weak test")

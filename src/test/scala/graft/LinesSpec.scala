@@ -113,7 +113,7 @@ class LinesSpec extends SparkSpec {
   }
 
   test("corpus_clean_ml: rank gate keeps floor(0.3 n) canonical-filtered docs") {
-    val out = graft.operators.PipelineQueries.queries("corpus_clean_ml")(spark, sfDir)
+    val out = SparkEntry.queries("corpus_clean_ml")(spark, sfDir)
       .collect()
     val n = graft.sources.Tables.documents(spark, sfDir).count()
     // the rank gate selects exactly floor(0.3 n) BEFORE the canonical

@@ -550,4 +550,15 @@ class NativeExprSpec extends SparkSpec {
     }
     assert(err.getMessage.contains("graft_cms_agg"))
   }
+
+  test("graft_bloom_agg and graft_cms_agg check their argument count") {
+    for ((q, fn) <- Seq(
+        "SELECT graft_bloom_agg(CAST(1 AS BIGINT))" -> "graft_bloom_agg",
+        s"SELECT graft_bloom_agg(CAST(1 AS BIGINT), ${Dedup.bloomBits}, 1)" -> "graft_bloom_agg",
+        "SELECT graft_cms_agg(CAST(1 AS BIGINT))" -> "graft_cms_agg",
+        "SELECT graft_cms_agg(CAST(1 AS BIGINT), 16, 1)" -> "graft_cms_agg")) {
+      val err = intercept[org.apache.spark.sql.AnalysisException](spark.sql(q).collect())
+      assert(err.getMessage.contains(s"$fn: expects 2 arguments"), q)
+    }
+  }
 }

@@ -22,7 +22,7 @@ class NoveltySpec extends SparkSpec {
       .withColumn("n_chars", length(col("text")))
     val dir = java.nio.file.Files.createTempDirectory("graft-novelty").toString
     docs.coalesce(1).write.parquet(s"$dir/documents.parquet")
-    val out = graft.operators.PipelineQueries.queries("corpus_novelty")(spark, dir)
+    val out = SparkEntry.queries("corpus_novelty")(spark, dir)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
     assert(out(1L) == ((13L, 13L, 1.0)))
@@ -36,7 +36,7 @@ class NoveltySpec extends SparkSpec {
   }
 
   test("text_fertility: per-lang conservation against the raw corpus") {
-    val out = graft.operators.PipelineQueries.queries("text_fertility")(spark, sfDir)
+    val out = SparkEntry.queries("text_fertility")(spark, sfDir)
       .collect()
     assert(out.nonEmpty)
     val doc = graft.sources.Tables.documents(spark, sfDir)
@@ -63,7 +63,7 @@ class NoveltySpec extends SparkSpec {
       .withColumn("n_chars", length(col("text")))
     val dir = java.nio.file.Files.createTempDirectory("graft-entropy").toString
     docs.coalesce(1).write.parquet(s"$dir/documents.parquet")
-    val out = graft.operators.PipelineQueries.queries("text_entropy")(spark, dir)
+    val out = SparkEntry.queries("text_entropy")(spark, dir)
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
     assert(math.abs(out(1L)._3 - math.log(4.0)) < 2e-6, s"uniform: ${out(1L)}")
@@ -72,7 +72,7 @@ class NoveltySpec extends SparkSpec {
     assert(math.abs(out(3L)._3 - h3) < 2e-6, s"mixed: ${out(3L)}")
     assert(out(4L) == ((0L, 0L, 0.0)))
     // corpus-wide bound: H <= ln(n_distinct) (+ grid slack)
-    graft.operators.PipelineQueries.queries("text_entropy")(spark, sfDir)
+    SparkEntry.queries("text_entropy")(spark, sfDir)
       .collect().foreach { r =>
         val (nd, h) = (r.getLong(2), r.getDouble(3))
         assert(h >= 0.0 &&

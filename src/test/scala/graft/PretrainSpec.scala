@@ -132,7 +132,7 @@ class PretrainSpec extends SparkSpec {
         "is not being measured in subword tokens")
     // unit pin on the counting itself: trained segments for in-vocab
     // words, character count for OOV (what a real tokenizer does)
-    val seg = graft.operators.PipelineQueries
+    val seg = graft.operators.Pretrain
       .bpeSegmentsOf(doc.select(col("doc_id"), col("text")), rounds = 8)
     val segMap = seg.collect()
       .map(r => r.getString(0) -> r.getSeq[String](1).size).toMap

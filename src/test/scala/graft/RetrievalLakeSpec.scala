@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.{PipelineQueries, Retrieval}
+import graft.operators.Retrieval
 import graft.sources.Tables
 
 /** The BM25 lake's frozen-stats append (#95g): probe-after-append must
@@ -25,18 +25,18 @@ class RetrievalLakeSpec extends SparkSpec {
     val got = w(Retrieval.readBm25Weights(spark, lake))
     // truth: the SAME scoring core over the grown corpus's tf/dl and
     // the BASE-only df/stats — the frozen-snapshot semantics
-    val (tfAll, dlAll) = PipelineQueries.bm25TfDl(doc)
-    val (tfBase, dlBase) = PipelineQueries.bm25TfDl(base)
+    val (tfAll, dlAll) = Retrieval.bm25TfDl(doc)
+    val (tfBase, dlBase) = Retrieval.bm25TfDl(base)
     val dfBase = tfBase.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val statsBase = base.agg(count(lit(1)).as("n_docs"))
       .crossJoin(dlBase.agg(sum(col("dl")).as("sum_dl")))
       .select(col("n_docs"),
         (col("sum_dl").cast("double") / col("n_docs").cast("double")).as("avgdl"))
-    val want = w(PipelineQueries.bm25WeightsFrom(tfAll, dlAll, dfBase, statsBase))
+    val want = w(Retrieval.bm25WeightsFrom(tfAll, dlAll, dfBase, statsBase))
     assert(got == want, "appended weights diverged from frozen-stats rebuild")
     // base docs' weights are byte-identical to publish-time (df/stats
     // frozen means the append can never perturb the published index)
-    val pubOnly = w(PipelineQueries.bm25WeightsFrom(tfBase, dlBase, dfBase, statsBase))
+    val pubOnly = w(Retrieval.bm25WeightsFrom(tfBase, dlBase, dfBase, statsBase))
     pubOnly.foreach { case (k, v) => assert(got(k) == v, s"base weight moved: $k") }
     // compaction folds the segments without changing the serving table
     assert(graft.sources.StormSinks.maintainGroupSegments(spark, lake, 1))
@@ -78,14 +78,14 @@ class RetrievalLakeSpec extends SparkSpec {
     // frozen stats make the append ORDER-INDEPENDENT: the streamed
     // index must equal one rebuild of the grown corpus under the
     // published statistics
-    val (tfAll, dlAll) = PipelineQueries.bm25TfDl(doc)
-    val (tfB, dlB) = PipelineQueries.bm25TfDl(pub)
+    val (tfAll, dlAll) = Retrieval.bm25TfDl(doc)
+    val (tfB, dlB) = Retrieval.bm25TfDl(pub)
     val dfB = tfB.groupBy(col("token")).agg(count(lit(1)).as("df"))
     val stB = pub.agg(count(lit(1)).as("n_docs"))
       .crossJoin(dlB.agg(sum(col("dl")).as("sum_dl")))
       .select(col("n_docs"),
         (col("sum_dl").cast("double") / col("n_docs").cast("double")).as("avgdl"))
-    val want = w(PipelineQueries.bm25WeightsFrom(tfAll, dlAll, dfB, stB))
+    val want = w(Retrieval.bm25WeightsFrom(tfAll, dlAll, dfB, stB))
     assert(got == want, "streamed index diverged from frozen-stats rebuild")
     // replay: same checkpoint, no new input -> index unchanged
     Retrieval.startBm25Ingest(spark, s"$base/in", s"$base/index",

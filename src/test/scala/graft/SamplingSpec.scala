@@ -226,7 +226,7 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("corpus_split: near-dup pairs never straddle splits; proportions sane") {
-    val out = graft.operators.PipelineQueries.queries("corpus_split")(spark, sfDir)
+    val out = SparkEntry.queries("corpus_split")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2)))
     val splitOf = out.map(t => t._1 -> t._3).toMap
     assert(out.length == graft.sources.Tables.documents(spark, sfDir).count())

@@ -100,4 +100,13 @@ class SpaceSavingSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("graft_heavy_hitters"))
   }
+
+  test("argument count is an analysis-time error naming the function") {
+    Seq("a", "b").toDF("token").createOrReplaceTempView("hh_arity")
+    for (q <- Seq("SELECT graft_heavy_hitters(token) FROM hh_arity",
+        "SELECT graft_heavy_hitters(token, 4, 4) FROM hh_arity")) {
+      val ex = intercept[org.apache.spark.sql.AnalysisException](spark.sql(q).collect())
+      assert(ex.getMessage.contains("graft_heavy_hitters: expects 2 arguments"), q)
+    }
+  }
 }

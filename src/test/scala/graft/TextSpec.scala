@@ -203,7 +203,7 @@ class TextSpec extends SparkSpec {
   }
 
   test("text_normalize query: corpus rows identity, planted rows repaired, flags consistent") {
-    val out = graft.operators.PipelineQueries.queries("text_normalize")(spark, sfDir)
+    val out = SparkEntry.queries("text_normalize")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getBoolean(2), r.getBoolean(3)))
     // 500 corpus + 6 planted
     assert(out.length == 506)
@@ -234,7 +234,7 @@ class TextSpec extends SparkSpec {
   }
 
   test("retrieval_pack: greedy prefix is budget-maximal and rank-contiguous") {
-    val out = graft.operators.PipelineQueries.queries("retrieval_pack")(spark, sfDir)
+    val out = SparkEntry.queries("retrieval_pack")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
         r.getLong(3), r.getLong(4)))
     assert(out.nonEmpty)

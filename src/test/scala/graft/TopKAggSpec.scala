@@ -73,4 +73,13 @@ class TopKAggSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("graft_topk"))
   }
+
+  test("argument count is an analysis-time error naming the function") {
+    spark.range(10).createOrReplaceTempView("tk_arity")
+    for (q <- Seq("SELECT graft_topk(id, id) FROM tk_arity",
+        "SELECT graft_topk(id, id, 2, 99) FROM tk_arity")) {
+      val ex = intercept[org.apache.spark.sql.AnalysisException](spark.sql(q).collect())
+      assert(ex.getMessage.contains("graft_topk: expects 3 arguments"), q)
+    }
+  }
 }

@@ -6,8 +6,6 @@ import java.security.MessageDigest
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
-import graft.operators.PipelineQueries
-import graft.analytics.Analytics
 
 /** Independent-path checks for the round-8 reporting/selection
   * operators: text_winnow (MOSS winnowing), sample_importance (DSIR
@@ -61,7 +59,7 @@ class WinnowStatsSpec extends SparkSpec {
     val docsRows = graft.sources.Tables.documents(spark, sfDir)
       .select("doc_id", "text").collect()
     val expected = winnowExpected(docsRows)
-    val got = PipelineQueries.queries("text_winnow")(spark, sfDir)
+    val got = SparkEntry.queries("text_winnow")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(got.length == expected.length)
     assert(got.sameElements(expected))
@@ -92,7 +90,7 @@ class WinnowStatsSpec extends SparkSpec {
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       (a, b, sh.toLong, nFp(a).toLong, nFp(b).toLong, score)
     }.sortBy(t => (t._1, t._2))
-    val got = PipelineQueries.queries("winnow_pairs")(spark, sfDir)
+    val got = SparkEntry.queries("winnow_pairs")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getLong(3), r.getLong(4), r.getDouble(5)))
     assert(got.toSeq == expected)
@@ -112,7 +110,7 @@ class WinnowStatsSpec extends SparkSpec {
       (4L, (0 until 40).map(i => s"more${i}q").mkString(" "), "en", "s", 1L))
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$tmp/documents.parquet")
-    val got = PipelineQueries.queries("winnow_pairs")(spark, tmp)
+    val got = SparkEntry.queries("winnow_pairs")(spark, tmp)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSeq == Seq((1L, 2L)),
       s"expected exactly the planted pair, got ${got.toSeq}")
@@ -141,7 +139,7 @@ class WinnowStatsSpec extends SparkSpec {
       (id, lang, ts.length.toLong, ts.map(t => wi(bucketOf(t._3))).sum)
     }.toSeq
     val expected = scored.sortBy(t => (-t._4, t._1)).take(50)
-    val got = PipelineQueries.queries("sample_importance")(spark, sfDir)
+    val got = SparkEntry.queries("sample_importance")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
     assert(got.toSeq == expected)
   }
@@ -161,7 +159,7 @@ class WinnowStatsSpec extends SparkSpec {
     }
     docs.toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$tmp/documents.parquet")
-    val top = PipelineQueries.queries("sample_importance")(spark, tmp)
+    val top = SparkEntry.queries("sample_importance")(spark, tmp)
       .collect().take(10)
     // all 10 de docs carry positively-weighted distinctive tokens and
     // must outrank every en doc
@@ -183,7 +181,7 @@ class WinnowStatsSpec extends SparkSpec {
       (5L, "another singleton", "de", "srcB", 17L))
       .toDF("doc_id", "text", "lang", "source", "n_chars")
       .write.parquet(s"$tmp/documents.parquet")
-    val got = PipelineQueries.queries("corpus_stats")(spark, tmp).collect()
+    val got = SparkEntry.queries("corpus_stats")(spark, tmp).collect()
     assert(got.length == 2)
     val a = got(0); val b = got(1)
     assert(a.getString(0) == "srcA" && b.getString(0) == "srcB")
@@ -211,7 +209,7 @@ class WinnowStatsSpec extends SparkSpec {
         Row(bk, minI + bk * width, minI + (bk + 1) * width - 1,
           vs.length.toLong, vs.sum)
       }.sortBy(_.getLong(0))
-    val got = Analytics.queries("q_histogram")(spark, sfDir).collect()
+    val got = SparkEntry.queries("q_histogram")(spark, sfDir).collect()
     assert(got.toSeq == expected)
     // invariants: Σn = row count, every bucket in [0, 20), every row's
     // value inside its bucket bounds by construction of the division

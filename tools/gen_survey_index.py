@@ -5,59 +5,47 @@ Usage: python3 tools/gen_survey_index.py <verify-out-dir>
 where <verify-out-dir> is a `graft.Verify` dump (needs oracle_sql.json).
 
 The index is one row per SparkEntry.queries key with the file:line of
-its queries-map entry — the mechanical audit surface for the
-correctness gate. SurveyIndexSpec asserts the table's key set equals
+its entry — the one `"<key>" -> QueryKey(...)` line that holds both the
+key's Spark body and its oracle SQL, in whichever query-family file owns
+it. The families are found by scanning src/main, so a new family file
+needs no edit here. SurveyIndexSpec asserts the table's key set equals
 SparkEntry.queries.keySet, so the section cannot silently drift.
 """
+import glob
 import json
 import re
-import subprocess
 import sys
 
 MARKER = "### §2b Generated key index"
-SOURCES = [
-    "src/main/scala/graft/operators/PipelineQueries.scala",
-    "src/main/scala/graft/analytics/Analytics.scala",
-    "src/main/scala/graft/storm/StormQueries.scala",
-]
+ENTRY = re.compile(r'^\s*"([a-z0-9_]+)"\s*->\s*QueryKey\(')
 
 
 def main(out_dir: str) -> None:
     keys = sorted(json.load(open(f"{out_dir}/oracle_sql.json")))
-    # first '"<key>" ->' occurrence per key = its queries-map entry
-    # (the oracleSql map sits after the queries map in every source)
     loc = {}
-    for src in SOURCES:
-        # anchor the scan to the queries-map region: start at the
-        # `val queries` declaration and stop at `val oracleSql`, so a
-        # key name mentioned in an earlier comment/string can't
-        # mis-attribute the entry line (ADVICE r17)
-        in_queries = False
+    for src in sorted(glob.glob("src/main/scala/**/*.scala", recursive=True)):
         for i, line in enumerate(open(src), start=1):
-            if re.search(r"\bval queries\b", line):
-                in_queries = True
-            elif re.search(r"\bval oracleSql\b", line):
-                in_queries = False
-            if not in_queries:
+            m = ENTRY.match(line)
+            if not m:
                 continue
-            # \s+ not a single space: Analytics.scala pads the arrows
-            # into a column, and the padded entries previously fell
-            # through to the oracleSql map's single-space arrows —
-            # the exact mis-attribution ADVICE r17 flagged
-            m = re.search(r'"([a-z0-9_]+)"\s+->', line)
-            if m and m.group(1) in keys and m.group(1) not in loc:
-                loc[m.group(1)] = f"{src}:{i}"
+            if m.group(1) in loc:
+                sys.exit(f"key {m.group(1)} has two entries: {loc[m.group(1)]}, {src}:{i}")
+            loc[m.group(1)] = f"{src}:{i}"
     missing = [k for k in keys if k not in loc]
     if missing:
-        sys.exit(f"keys without a queries-map entry: {missing}")
+        sys.exit(f"keys without a QueryKey entry: {missing}")
+    stale = sorted(set(loc) - set(keys))
+    if stale:
+        sys.exit(f"QueryKey entries missing from the oracle dump: {stale}")
     rows = "\n".join(f"| `{k}` | {loc[k]} |" for k in keys)
     section = (
         f"{MARKER} (tools/gen_survey_index.py)\n\n"
         f"One row per `SparkEntry.queries` key — the mechanical audit\n"
-        f"surface for the {len(keys)}-key correctness gate. Every key has a\n"
-        f"DuckDB `oracleSql` entry; `SurveyIndexSpec` asserts this table's\n"
-        f"key set equals `SparkEntry.queries.keySet`, so it cannot drift.\n\n"
-        f"| key | queries-map entry |\n|---|---|\n{rows}\n"
+        f"surface for the {len(keys)}-key correctness gate. Each key is one\n"
+        f"`QueryKey` entry holding its Spark body and its DuckDB oracle, in\n"
+        f"the query-family file that owns it; `SurveyIndexSpec` asserts this\n"
+        f"table's key set equals `SparkEntry.queries.keySet`, so it cannot drift.\n\n"
+        f"| key | entry |\n|---|---|\n{rows}\n"
     )
     survey = open("SURVEY.md").read()
     if MARKER in survey:
